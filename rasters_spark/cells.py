@@ -167,9 +167,16 @@ def ring_cells_bbox(bbox: Column, level: int, ring: int) -> Column:
     ~4× duplicate rows a multi-cell footprint produces (adjacent cells'
     rings overlap). Distinctness is by construction: each iy appears
     once, and the ix sequence is capped at nx values before the pmod
-    wrap."""
+    wrap.
+
+    A wrapped bbox (``xmin > xmax``, the ``cells_for_bbox_am`` seam
+    convention) unwraps its x range by one world width, so the result
+    is the ring union over ``cells_for_bbox_am``'s two-sided
+    registration — Spark's ``sequence`` would otherwise descend and
+    yield the cells BETWEEN the seam sides."""
     nx, ny = 2 * (1 << level), 1 << level
-    ix0, ix1 = cell_ix(bbox["xmin"], level), cell_ix(bbox["xmax"], level)
+    ix0 = cell_ix(bbox["xmin"], level)
+    ix1 = cell_ix(bbox["xmax"], level) + F.when(bbox["xmin"] > bbox["xmax"], nx).otherwise(0)
     iy0, iy1 = cell_iy(bbox["ymax"], level), cell_iy(bbox["ymin"], level)
     lo_y = F.greatest(F.lit(0), iy0 - ring)
     hi_y = F.least(F.lit(ny - 1), iy1 + ring)

@@ -1,4 +1,4 @@
-"""Pixel codecs + Arrow-batch decode helpers.
+"""Pixel codecs + the batched pixel decoder.
 
 The tile table stores pixels as an opaque ``bytes: binary`` column with
 ``(w, h, fmt)`` metadata (BASELINE.json ``input_hint``). The sandbox has
@@ -17,8 +17,15 @@ no rasterio/PIL, so formats are self-decodable pure-numpy codecs:
   all; decodes to uint16 0/1 (the reference resamples bool via a
   uint16 shim, kdtree.py:293-310) — the float view is exact.
 
-Numpy here runs ONLY inside Arrow-batched kernels (pandas_udf /
-mapInPandas) — one Python iteration per *tile*, zero per-pixel Python.
+Pixel decode has two layers. Point reads decode inside the JVM
+(``operators.sample.pixel_value_sql``, hex/conv bit math, bit-exact
+against :func:`pixel_at`). Whole tiles decode through ONE shape-batched
+numpy decoder, :func:`decode_grouped`, which groups an Arrow batch by
+``(w, h, fmt)`` and decodes each group with one ``frombuffer``; the
+pre-sliced pixels of the Arrow slice kernel are 1×1 tiles of the same
+formats. :func:`decode_tile`, :func:`decode_tile_typed` and
+:func:`pixel_at` are the per-tile references the tests compare against
+(:func:`decode_batch` iterates them for the per-tile stencil kernels).
 phash is the reference-style integrity fingerprint (FIXTURES.md §1):
 sign bits of an 8×8 block-mean downsample vs. its mean.
 """
@@ -183,3 +190,75 @@ def decode_batch(bytes_s, w_s, h_s, fmt_s):
     """Iterate decoded arrays for a pandas batch of tiles (kernel helper)."""
     for data, w, h, fmt in zip(bytes_s, w_s, h_s, fmt_s):
         yield decode_tile(data, int(w), int(h), fmt)
+
+
+#: the known pixel formats, in ``decode_grouped``'s per-shape group order
+FMTS = ("raw", "i32", "b1", "q8")
+
+
+def _decode_group(sub: np.ndarray, w: int, h: int, fmt: str, where) -> np.ndarray:
+    """``m`` same-shape, same-fmt blobs → ``(m, h, w)`` in
+    :func:`decode_tile`'s dtype. Count-bounded: trailing bytes are
+    ignored, a short blob raises naming ``where(i)``."""
+    m, n = len(sub), h * w
+    size = HEADER_Q8 + n if fmt == "q8" else n * (1 if fmt == "b1" else 4)
+    lens = np.fromiter(map(len, sub), np.int64, m)
+    short = np.flatnonzero(lens < size)
+    if len(short):
+        i = short[0]
+        raise ValueError(f"{where(i)}: a {w}x{h} {fmt} tile needs {size} bytes, "
+                         f"got {lens[i]}")
+    cat = b"".join(sub if (lens == size).all() else [b[:size] for b in sub])
+    if fmt == "raw":
+        return np.frombuffer(cat, "<f4").reshape(m, h, w)
+    if fmt == "i32":
+        iv = np.frombuffer(cat, "<i4").reshape(m, h, w)
+        out = iv.astype(np.float64)
+        out[iv == I32_NODATA] = np.nan
+        return out
+    if fmt == "b1":
+        return np.frombuffer(cat, np.uint8).reshape(m, h, w).astype(np.float64)
+    rec = np.frombuffer(cat, np.dtype([("vmin", "<f4"), ("vmax", "<f4"),
+                                       ("q", np.uint8, (h, w))]))
+    vmin, q = rec["vmin"][:, None, None], rec["q"]
+    d = rec["vmax"] - rec["vmin"]
+    span = np.where(d == 0, np.float32(1.0), d)[:, None, None]
+    # decode_tile's float32 expression, broadcast over the group
+    out = vmin + q.astype(np.float32) / np.float32(254.0) * span
+    out[q == 255] = np.nan
+    return out
+
+
+def decode_grouped(blobs, ws, hs, fmts, ids=None):
+    """Shape-batched decode of a batch of tiles: yields
+    ``(positions, w, h, fmt, pixels)`` per distinct ``(w, h, fmt)``,
+    where ``positions`` are ascending batch row indices and ``pixels``
+    is ``(len(positions), h, w)`` in :func:`decode_tile`'s dtype for
+    that fmt (raw/q8 float32, i32/b1 float64; NaN = nodata; raw may be
+    a read-only view). Each group is one ``frombuffer`` — no Python
+    loop per row. Errors name ``ids[i]`` (the ``image_id``) or, when
+    ``ids`` is None, the batch row."""
+    blobs = np.asarray(blobs, dtype=object)
+    ws = np.asarray(ws, dtype=np.int64)
+    hs = np.asarray(hs, dtype=np.int64)
+    fmts = np.asarray(fmts, dtype=object)
+    if len(blobs) == 0:
+        return
+    fi = np.full(len(fmts), -1, dtype=np.int64)
+    for k, f in enumerate(FMTS):
+        fi[fmts == f] = k
+
+    def where(i):
+        return f"image_id {ids[i]!r}" if ids is not None else f"row {i}"
+
+    if (fi < 0).any():
+        i = int(np.flatnonzero(fi < 0)[0])
+        raise ValueError(f"{where(i)}: unknown fmt {fmts[i]!r}")
+    order = np.lexsort((fi, hs, ws))
+    keys = np.stack([ws[order], hs[order], fi[order]])
+    starts = np.flatnonzero(np.r_[True, (keys[:, 1:] != keys[:, :-1]).any(axis=0)])
+    for s, e in zip(starts, np.r_[starts[1:], len(order)]):
+        pos = order[s:e]
+        w, h, fmt = int(ws[pos[0]]), int(hs[pos[0]]), FMTS[fi[pos[0]]]
+        yield pos, w, h, fmt, _decode_group(
+            blobs[pos], w, h, fmt, lambda i: where(pos[i]))

@@ -23,42 +23,6 @@ from pyspark.sql.types import DoubleType
 from rasters_spark import codec
 
 
-@pandas_udf(DoubleType())
-def _nearest_slice_kernel(sl: pd.Series, fmt: pd.Series) -> pd.Series:
-    """Decode pre-sliced pixel payloads: 4 bytes (raw/i32), 1 byte (b1)
-    or 9 bytes (q8 header+byte) per row — fully vectorized numpy, no
-    per-pixel math left in Python beyond frombuffer. i32's INT32_MIN
-    sentinel → NaN → SQL NULL (the integer-family nodata rule)."""
-    out = np.empty(len(sl), dtype=np.float64)
-    fv = fmt.to_numpy()
-    is_raw = fv == "raw"
-    is_i32 = fv == "i32"
-    is_b1 = fv == "b1"
-    if is_raw.any():
-        raw = b"".join(sl[is_raw])
-        out[is_raw] = np.frombuffer(raw, dtype="<f4")
-    if is_i32.any():
-        iv = np.frombuffer(b"".join(sl[is_i32]), dtype="<i4")
-        fvv = iv.astype(np.float64)
-        fvv[iv == codec.I32_NODATA] = np.nan
-        out[is_i32] = fvv
-    if is_b1.any():
-        out[is_b1] = np.frombuffer(b"".join(sl[is_b1]), dtype=np.uint8).astype(np.float64)
-    rest = ~(is_raw | is_i32 | is_b1)
-    if rest.any():
-        qi = np.flatnonzero(rest)
-        for i in qi:
-            b = sl.iloc[i]
-            vmin, vmax = np.frombuffer(b, dtype="<f4", count=2)
-            q = b[8]
-            if q == 255:
-                out[i] = np.nan
-            else:
-                span = float(vmax - vmin) or 1.0
-                out[i] = float(np.float32(vmin) + np.float32(q) / np.float32(254.0) * np.float32(span))
-    return pd.Series(out)
-
-
 def _idw_tile(arr: np.ndarray, t, qx: np.ndarray, qy: np.ndarray,
               power: float) -> np.ndarray:
     """IDW of one decoded tile at query points (raster.py:1494-1545:
@@ -144,7 +108,7 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
     """Attach the decoded pixel at (``row_col``, ``col_col``) as a double
     column — ENTIRELY inside the JVM (hex/conv bit math), no
     ArrowEvalPython node, semantically identical to
-    ``slice_pixel`` + ``_nearest_slice_kernel`` (NaN→NULL, i32 sentinel
+    ``slice_pixel`` + ``decode_slice`` (NaN→NULL, i32 sentinel
     → NULL, q8 float32 chain bit-exact; verified exhaustively against
     ``codec.pixel_at`` and re-certified against the DuckDB oracles of
     every slice-decode query). Round-6 optimization: the Python
@@ -189,12 +153,8 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
     val_expr = _case(val_of)
     need_hdr = "q8" in fmts
     if need_hdr:
-        if "_q8hdr_vmin" in df.columns:
-            df = (df.withColumn(vminf, F.col("_q8hdr_vmin"))
-                    .withColumn(vmaxf, F.col("_q8hdr_vmax")))
-        else:
-            df = (df.withColumn(vminf, F.expr(_q8_header_float_sql(1)))
-                    .withColumn(vmaxf, F.expr(_q8_header_float_sql(5))))
+        df = (df.withColumn(vminf, F.expr(_q8_header_float_sql(1)))
+                .withColumn(vmaxf, F.expr(_q8_header_float_sql(5))))
     return (df.withColumn(b, F.expr(bits_expr))
               .withColumn(value_name, F.expr(val_expr))
               .drop(*([b, vminf, vmaxf] if need_hdr else [b])))
@@ -206,7 +166,7 @@ def slice_pixel(row_col: str, col_col: str):
     """JVM-side single-pixel byte slice for a (bytes, w, fmt) row given
     pixel coordinates in columns ``row_col``/``col_col``: 4 bytes
     (raw/i32), 1 byte (b1) or 9 bytes (q8 header+byte). Decode the
-    result with ``_nearest_slice_kernel`` — Arrow then ships ~8 B/row
+    result with ``decode_slice`` — Arrow then ships ~8 B/row
     to Python instead of the whole tile blob (CLAUDE.md: never carry
     bytes through join fanout)."""
     off = f"({row_col}*w+{col_col})"
@@ -222,9 +182,17 @@ def slice_pixel(row_col: str, col_col: str):
     )
 
 
-def decode_slice(sl, fmt):
-    """Decode a ``slice_pixel`` payload column to a double (NaN→NULL)."""
-    return _nearest_slice_kernel(sl, fmt)
+@pandas_udf(DoubleType())
+def decode_slice(sl: pd.Series, fmt: pd.Series) -> pd.Series:
+    """Decode a ``slice_pixel`` payload column to a double (NaN→NULL,
+    i32's INT32_MIN sentinel → NULL). Each slice is a 1×1 tile of its
+    fmt, so the whole Arrow batch decodes through
+    ``codec.decode_grouped`` — one ``frombuffer`` per fmt."""
+    out = np.empty(len(sl), dtype=np.float64)
+    ones = np.ones(len(sl), dtype=np.int64)
+    for pos, _, _, _, px in codec.decode_grouped(sl.to_numpy(), ones, ones, fmt.to_numpy()):
+        out[pos] = px.reshape(len(pos))
+    return pd.Series(out)
 
 
 def sample_nearest(joined: DataFrame, value_name: str = "value",
@@ -247,7 +215,7 @@ _TILE_PAYLOAD = ("bytes", "w", "h", "fmt", "x_origin", "y_origin",
 #: shard rows (capped at MAX_SHARDS), so no single collect_list row —
 #: and no single kernel task — grows without bound with a hot tile's
 #: match count (VERDICT r04 weak #1). Measured honestly
-#: (tools/bench_skew_grouped.py, INTERLEAVED A/B): this is worst-case
+#: (INTERLEAVED A/B, BENCH.md round-5): this is worst-case
 #: PROTECTION, not a steady-state speedup — a 1.5M-match unsalted row
 #: still completes on a 4 GB heap while a ~2.5M-match one OOMs the
 #: JVM; sharding costs ~15-25% on uniform workloads (the counts
@@ -282,7 +250,7 @@ def _sharded_tile_agg(skinny: DataFrame, keep: list[str], payload: DataFrame,
     payload fanout, no extra kernel rows. The shard key hashes the
     point identity columns (deterministic murmur), never a random.
 
-    Cost (measured, tools/bench_skew_grouped.py, interleaved A/B):
+    Cost (measured, interleaved A/B, BENCH.md round-5):
     worst-case PROTECTION, not a steady-state speedup — 0.94× on a
     30%-hot-tile workload, 0.77× uniform, and at a 3.6M-match tile the
     unsalted single-group buffer OOMs the 4 GiB JVM while the sharded
@@ -477,51 +445,32 @@ def sample_idw(joined: DataFrame, tiles: DataFrame | None = None,
 
 
 def sample_nearest_grouped(joined: DataFrame, tiles: DataFrame,
-                           value_name: str = "value",
-                           shard_target: int = SHARD_TARGET,
-                           max_shards: int = MAX_SHARDS,
-                           tile_counts: DataFrame | None = None) -> DataFrame:
-    """Nearest sampling for a HUGE point side — the same cogroup shape
-    as sample_idw, specialized to O(1) pixel reads.
+                           value_name: str = "value") -> DataFrame:
+    """Nearest sampling for a HUGE point side: the skinny matched pairs
+    shuffle-join the tile payload on image_id, and the JVM pixel decode
+    fuses into the join's stage.
 
     The default flagship path broadcasts the slim matched-pair set so
     the payload scan streams shuffle-free; measured at 1M points /
     400k tiles that driver-serial broadcast build becomes the Amdahl
     term and 2→8-core efficiency falls 0.95 → 0.47. Here instead:
 
-    1. the matched index rows (NO payload) aggregate into one
-       points-array row per matched tile (map-side combine; the only
-       exchange carries (point_id, prow, pcol) structs);
-    2. the tile payload equi-joins that aggregate on image_id — the
-       pair list broadcasts while it fits, and at rest a
-       bucketed-by-image_id tile table (tableio.write_bucketed) keeps
-       even the non-broadcast form shuffle-free on the payload side;
-    3. a mapInPandas kernel reads each matched pixel with
-       ``codec.pixel_at`` — O(1) byte slices, no tile decode.
+    1. ``joined`` loses every payload column (``bytes``, grid, bbox,
+       caption, …), leaving the skinny (point, image_id, prow, pcol)
+       pairs;
+    2. the pairs equi-join the one-row-per-tile payload on image_id,
+       pinned to SHUFFLE_HASH with the payload as build side — planner
+       estimates must never broadcast-collect blobs (or the matched
+       pairs) through the driver;
+    3. ``pixel_value_sql`` reads each matched pixel (4-9 bytes of the
+       buffered payload row's blob) inside the join's codegen stage —
+       no Python boundary, no tile decode.
 
-    Pixel bytes never fan out through an exchange (blobs cross exactly
-    one exchange, once per tile) and nothing is driver-serial in the
-    matched-pair count. Result ≡ sample_nearest (same oracle).
-
-    Round-6 replan (guide §8 — decide with small rows, move big rows
-    once): the r4/r5 shape aggregated the matched index into per-tile
-    collect_list rows, joined the payload to the aggregate and read
-    pixels in a Python kernel. With the pixel decode now pure JVM
-    (``pixel_value_sql``), the whole cogroup/kernel machinery is
-    unnecessary: the skinny matched pairs shuffle-join the payload on
-    image_id and the per-pair decode fuses into the join's codegen
-    stage — the buffered payload row's blob is READ (4-9 bytes per
-    pair), never copied or shipped. No per-group buffer exists at all,
-    so the hot-tile OOM surface the r5 sharding protected against is
-    gone by construction, and AQE skew-join splitting spreads a hot
-    tile's pairs natively. ``shard_target``/``max_shards``/
-    ``tile_counts`` are retained for API compatibility but no longer
-    used — there is no aggregate to shard. The join is pinned to
-    SHUFFLE_HASH with the one-row-per-tile payload as build side:
-    planner estimates must never choose to broadcast-collect blobs (or
-    the matched pairs) through the driver — that serial build was the
-    measured 2→8-core efficiency cliff (0.95 → 0.47) at 1M points."""
-    del shard_target, max_shards, tile_counts  # kept for API compatibility
+    Blobs cross exactly one exchange, once per tile, and nothing is
+    driver-serial in the matched-pair count. No per-tile buffer
+    exists, so a hot tile cannot grow one without bound; AQE skew-join
+    splitting spreads its pairs. Result ≡ sample_nearest (same
+    oracle)."""
     payload = tiles.select(
         F.col("image_id").alias("_img"), "bytes", "w", "h", "fmt",
         *[F.col(c).alias(c) for c in ("caption",) if c in tiles.columns])

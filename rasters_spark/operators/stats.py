@@ -27,68 +27,37 @@ TILE_STATS_SCHEMA = (
 def _stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         n = len(pdf)
+        ids = pdf["image_id"].to_numpy()
         out = {
-            "image_id": pdf["image_id"].to_numpy(),
+            "image_id": ids,
             "n_pixels": np.empty(n, np.int64),
             "n_valid": np.empty(n, np.int64),
             "vsum": np.empty(n, np.float64),
             "vmin": np.empty(n, np.float64),
             "vmax": np.empty(n, np.float64),
         }
-        ws = pdf["w"].to_numpy().astype(np.int64)
-        hs = pdf["h"].to_numpy().astype(np.int64)
-        fmts = pdf["fmt"].to_numpy()
-        blobs = pdf["bytes"].to_numpy()
-        # round-6: batch the LOSSLESS formats per (w,h) shape — one
-        # frombuffer + row-axis reductions instead of a Python loop per
-        # tile. Exactness: raw pixels are quarter-integers and i32/b1
-        # integers, so the masked row sum (zeros at nodata) is exact in
-        # any order; q8 values are arbitrary float32, so q8 keeps the
-        # per-tile compact-then-sum path to preserve the accumulation
-        # order the oracle hashed.
-        lossless = np.isin(fmts, ("raw", "i32", "b1"))
-        shape_key = np.where(lossless, ws * 1_000_000 + hs, -1)
-        for sk in np.unique(shape_key):
-            if sk < 0:
-                continue
-            pos = np.flatnonzero(shape_key == sk)
-            w, h = int(ws[pos[0]]), int(hs[pos[0]])
-            fsub = fmts[pos]
-            V = np.empty((len(pos), h * w), dtype=np.float64)
-            for fmt in ("raw", "i32", "b1"):
-                sel = np.flatnonzero(fsub == fmt)
-                if len(sel) == 0:
-                    continue
-                cat = b"".join(blobs[pos[sel]])
-                if fmt == "raw":
-                    V[sel] = np.frombuffer(cat, dtype="<f4").reshape(len(sel), h * w)
-                elif fmt == "i32":
-                    iv = np.frombuffer(cat, dtype="<i4").reshape(len(sel), h * w)
-                    fv = iv.astype(np.float64)
-                    fv[iv == codec.I32_NODATA] = np.nan
-                    V[sel] = fv
-                else:
-                    V[sel] = np.frombuffer(cat, dtype=np.uint8).reshape(len(sel), h * w)
+        for pos, w, h, fmt, px in codec.decode_grouped(
+                pdf["bytes"].to_numpy(), pdf["w"].to_numpy(), pdf["h"].to_numpy(),
+                pdf["fmt"].to_numpy(), ids):
+            # float32→float64 BEFORE reducing: exact for quarter-integer fixtures
+            V = px.reshape(len(pos), h * w).astype(np.float64, copy=False)
             valid = np.isfinite(V)
             nv = valid.sum(axis=1)
             out["n_pixels"][pos] = h * w
             out["n_valid"][pos] = nv
-            out["vsum"][pos] = np.where(valid, V, 0.0).sum(axis=1)
+            if fmt == "q8":
+                # q8 values are arbitrary float32: sum each tile's
+                # compacted valid pixels, the accumulation order the
+                # oracle hashed
+                out["vsum"][pos] = [V[k][valid[k]].sum() for k in range(len(pos))]
+            else:
+                # raw pixels are quarter-integers and i32/b1 integers,
+                # so the masked row sum (zeros at nodata) is exact
+                out["vsum"][pos] = np.where(valid, V, 0.0).sum(axis=1)
             mn = np.where(valid, V, np.inf).min(axis=1)
             mx = np.where(valid, V, -np.inf).max(axis=1)
             out["vmin"][pos] = np.where(nv > 0, mn, np.nan)
             out["vmax"][pos] = np.where(nv > 0, mx, np.nan)
-        for i in np.flatnonzero(~lossless):
-            arr = codec.decode_tile(blobs[i], int(ws[i]), int(hs[i]), fmts[i])
-            valid = np.isfinite(arr)
-            nvi = int(valid.sum())
-            out["n_pixels"][i] = arr.size
-            out["n_valid"][i] = nvi
-            # float32→float64 BEFORE summing: exact for quarter-integer fixtures
-            v = arr[valid].astype(np.float64)
-            out["vsum"][i] = v.sum() if nvi else 0.0
-            out["vmin"][i] = v.min() if nvi else np.nan
-            out["vmax"][i] = v.max() if nvi else np.nan
         yield pd.DataFrame(out)
 
 

@@ -54,6 +54,44 @@ def test_ring_and_parent(spark):
     assert len(pr) == 6  # 3x3 minus 3 clamped duplicates
 
 
+def test_ring_cells_bbox_equals_union_of_rings(spark):
+    """Property: ``ring_cells_bbox`` is exactly the distinct union of
+    ``ring_cells`` over the bbox's registered cells — ``cells_for_bbox``
+    for ordinary bboxes, ``cells_for_bbox_am`` for wrapped ones
+    (``xmin > xmax``) — and has no duplicates. A coarse level (16×8
+    cells) makes seam wraps, full-width rings and pole clamps common;
+    the fixed rows pin full-wrap-width, pole-adjacent and wrapped
+    bboxes."""
+    from rasters_spark.grid import bbox_struct
+
+    level = 3
+    rng = np.random.default_rng(23)
+    rows = [(-180.0, -10.0, 180.0, 10.0), (-180.0, -90.0, 180.0, 90.0),
+            (10.0, 85.0, 30.0, 90.0), (10.0, -90.0, 30.0, -85.0),
+            (170.0, 0.0, -170.0, 10.0), (10.1, 0.0, 10.05, 5.0),
+            (180.0, 80.0, -180.0, 90.0), (-179.0, -89.0, 179.0, -80.0)]
+    for _ in range(300):
+        x0, x1 = rng.uniform(-180.0, 180.0, 2)
+        y0, y1 = np.sort(rng.uniform(-90.0, 90.0, 2))
+        rows.append((float(x0), float(y0), float(x1), float(y1)))
+    df = spark.createDataFrame(rows, "xmin double, ymin double, xmax double, ymax double")
+    bb = bbox_struct(F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"))
+
+    def ring_union(cover, ring):
+        return F.array_sort(F.array_distinct(F.flatten(
+            F.transform(cover, lambda c: cells.ring_cells(c, level, ring)))))
+
+    bad = F.lit(False)
+    for ring in (0, 1, 2, 3):
+        got = cells.ring_cells_bbox(bb, level, ring)
+        bad = (bad
+               | (F.size(got) != F.size(F.array_distinct(got)))
+               | (F.array_sort(got) != ring_union(cells.cells_for_bbox_am(bb, level), ring))
+               | ((F.col("xmin") <= F.col("xmax"))
+                  & (F.array_sort(got) != ring_union(cells.cells_for_bbox(bb, level), ring))))
+    assert df.filter(bad).collect() == []
+
+
 def test_z_cell_id_interleave_and_locality(spark):
     """Morton id: bit-exact vs an independent per-bit python interleave,
     and the locality property that justifies it — any aligned 2^k×2^k

@@ -196,11 +196,10 @@ def test_sample_nearest_grouped_equals_broadcast_path(spark):
 
 
 def test_grouped_hot_tile_shards_spread_and_match(spark):
-    """VERDICT r04 weak #1 fix: with adaptive salting, a hot tile's
-    matched points spread over ceil(n/shard_target) shard rows (bounded
-    collect_list row / kernel task), and the sharded result is
-    bit-identical to the unsalted plan (sampling is per-point
-    independent)."""
+    """On a hot-tile join the grouped strategy is value-identical to the
+    flagship path, and the per-tile cogroup helper IDW uses
+    (``_sharded_tile_agg``) spreads the hot tile's matched points over
+    ceil(n/shard_target) bounded shard rows (VERDICT r04 weak #1)."""
     tiles = load_tiles(spark, SF)
     # synthesize a hot cluster: 400 extra points inside ONE tile's
     # footprint (the skew bench scenario — one footprint concentrates a
@@ -219,14 +218,14 @@ def test_grouped_hot_tile_shards_spread_and_match(spark):
     pts = load_points(spark, SF).select("point_id", "x", "y").unionByName(hot_pts)
     idx = point_join.point_in_tile_join(pts, tiles, payload_cols=())
     cols = ["point_id", "image_id", "prow", "pcol", "value", "caption"]
-    base = (sample.sample_nearest_grouped(idx, tiles, max_shards=1)
-            .select(*cols).toPandas()
-            .sort_values(["point_id", "image_id"]).reset_index(drop=True))
-    sharded = (sample.sample_nearest_grouped(idx, tiles, shard_target=50, max_shards=8)
+    flagship = (sample.sample_nearest(point_join.point_in_tile_join(pts, tiles))
+                .select(*cols).toPandas()
+                .sort_values(["point_id", "image_id"]).reset_index(drop=True))
+    grouped = (sample.sample_nearest_grouped(idx, tiles)
                .select(*cols).toPandas()
                .sort_values(["point_id", "image_id"]).reset_index(drop=True))
-    assert len(base) > 0
-    pd.testing.assert_frame_equal(base, sharded, check_exact=True)
+    assert len(flagship) > 0
+    pd.testing.assert_frame_equal(flagship, grouped, check_exact=True)
     # white-box: the internal aggregate spreads hot tiles over shards
     per_tile = idx.groupBy("image_id").count().toPandas()
     hot = per_tile[per_tile["count"] > 50]
@@ -241,28 +240,3 @@ def test_grouped_hot_tile_shards_spread_and_match(spark):
     assert len(sizes) > len(per_tile)
     # no aggregate row reaches the hottest tile's full match count
     assert sizes["n"].max() < per_tile["count"].max()
-
-
-def test_grouped_tile_counts_override_identical(spark):
-    """The tile_counts hint skips the internal counts pass; supplied
-    counts — even deliberately WRONG (2× over-estimated) ones — never
-    change results, only shard balance (the shard key is value-derived,
-    counts only size _ns)."""
-    tiles = load_tiles(spark, SF)
-    pts = load_points(spark, SF)
-    idx = point_join.point_in_tile_join(pts, tiles, payload_cols=())
-    counts = idx.groupBy("image_id").agg(F.count(F.lit(1)).alias("n"))
-    cols = ["point_id", "image_id", "prow", "pcol", "value"]
-
-    def run(**kw):
-        return (sample.sample_nearest_grouped(idx, tiles, shard_target=50,
-                                              max_shards=8, **kw)
-                .select(*cols).toPandas()
-                .sort_values(["point_id", "image_id"]).reset_index(drop=True))
-
-    a = run()
-    b = run(tile_counts=counts)
-    c = run(tile_counts=counts.withColumn("n", F.col("n") * 2))
-    assert len(a) > 0
-    pd.testing.assert_frame_equal(a, b, check_exact=True)
-    pd.testing.assert_frame_equal(a, c, check_exact=True)
