@@ -1753,7 +1753,8 @@ def q_to_grid_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_to_grid_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """to_grid(resampling='cubic') — Keys bicubic (a=-0.5), 16 taps
-    sliced JVM-side; the SQL blend text is SHARED with the oracle."""
+    read from each tile's one numpy decode; the blend text is SHARED
+    with the oracle (evaluated over numpy arrays on the Spark side)."""
     t = load_tiles(spark, sf_dir).filter("fmt = 'raw'")
     return resample.to_grid_conv(t, RASTERIZE_TARGET, "cubic")
 
@@ -1865,8 +1866,8 @@ def q_cell_size_meters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster.resize order-1 (raster.py:1262-1281) in relational long
-    form: 8×8 thumbnail of each raw tile, 4 taps JVM-sliced, shared
-    blend text with the oracle. Deterministic 200-tile id-range slice."""
+    form: 8×8 thumbnail of each raw tile, 4 taps decoded in the JVM
+    (sample.pixel_value_sql), shared blend text with the oracle. Deterministic 200-tile id-range slice."""
     t = load_tiles(spark, sf_dir).filter("fmt = 'raw' and image_id < 'img000000000200'")
     return multimodal.resize_bilinear_long(t, 8, 8)
 

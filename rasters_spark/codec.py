@@ -21,9 +21,8 @@ Pixel decode has two layers. Point reads decode inside the JVM
 (``operators.sample.pixel_value_sql``, hex/conv bit math, bit-exact
 against :func:`pixel_at`). Whole tiles decode through ONE shape-batched
 numpy decoder, :func:`decode_grouped`, which groups an Arrow batch by
-``(w, h, fmt)`` and decodes each group with one ``frombuffer``; the
-pre-sliced pixels of the Arrow slice kernel are 1×1 tiles of the same
-formats. :func:`decode_tile`, :func:`decode_tile_typed` and
+``(w, h, fmt)`` and decodes each group with one ``frombuffer``.
+:func:`decode_tile`, :func:`decode_tile_typed` and
 :func:`pixel_at` are the per-tile references the tests compare against
 (:func:`decode_batch` iterates them for the per-tile stencil kernels).
 phash is the reference-style integrity fingerprint (FIXTURES.md §1):

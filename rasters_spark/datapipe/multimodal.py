@@ -264,16 +264,19 @@ def raster_rescale(tiles: DataFrame, target_cell_size: float, order: int = 1) ->
 def resize_bilinear_long(tiles: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Order-1 resize in RELATIONAL long form (image_id, orow, ocol,
     value) — the oracle-checkable face of resize_spline(order=1): the
-    output pixel grid is exploded in SQL, the 4 taps are JVM-substring
-    sliced (no blob fanout), and the blend is the SAME shared SQL text
-    as to_grid_conv's bilinear. NaN taps → NULL."""
+    output pixel grid is exploded in SQL, the 4 taps are read by the
+    JVM pixel decode (``sample.pixel_value_sql``, bit-exact against
+    ``codec.pixel_at``; the q8 header decodes once per tile, before the
+    explodes, which keeps the stage under janino's method limit), and
+    the blend is the SAME shared SQL text as to_grid_conv's bilinear.
+    NaN taps → NULL."""
     from pyspark.sql import functions as F
 
     from rasters_spark.operators.resample import bilinear_weights_sql, conv_blend_sql
-    from rasters_spark.operators.sample import decode_slice, slice_pixel
+    from rasters_spark.operators.sample import pixel_value_sql, with_q8_header
 
     d = (
-        tiles.select("image_id", "bytes", "w", "h", "fmt")
+        with_q8_header(tiles.select("image_id", "bytes", "w", "h", "fmt"))
         .withColumn("orow", F.explode(F.sequence(F.lit(0), F.lit(out_h - 1))))
         .withColumn("ocol", F.explode(F.sequence(F.lit(0), F.lit(out_w - 1))))
         .withColumn("fr", F.expr(f"(orow + 0.5) * h / {out_h}.0 - 0.5"))
@@ -286,7 +289,7 @@ def resize_bilinear_long(tiles: DataFrame, out_w: int, out_h: int) -> DataFrame:
         d = d.withColumn(f"cc_{i}", F.expr(f"least(greatest(cast(floor(fc) as bigint) + ({i}), 0), w - 1)"))
     for i in (0, 1):
         for j in (0, 1):
-            d = d.withColumn(f"v_{i}_{j}", decode_slice(slice_pixel(f"rr_{i}", f"cc_{j}"), F.col("fmt")))
+            d = pixel_value_sql(d, f"rr_{i}", f"cc_{j}", f"v_{i}_{j}")
     d = d.withColumn("value", F.expr(conv_blend_sql(bilinear_weights_sql, (0, 1))))
     return d.select("image_id", "orow", "ocol", "value")
 

@@ -5,20 +5,19 @@ dtype — integer rasters → nearest, float rasters → IDW over all pixel
 centroids with power 2 (raster.py:1494-1545). Out-of-bounds → NaN
 (here: dropped by the join / NULL). NaN pixels surface as SQL NULL.
 
-Nearest sampling slices the single relevant pixel JVM-side (bytes never
-fan out with the join); IDW — which needs the whole tile — cogroups
-points with the tile payload on image_id so each blob crosses the
-exchange exactly once and decodes once per tile.
+Nearest sampling reads and decodes the single relevant pixel inside
+the JVM (``pixel_value_sql``; bytes never fan out with the join); IDW —
+which needs the whole tile — cogroups points with the tile payload on
+image_id so each blob crosses the exchange exactly once and decodes
+once per tile.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from rasters_spark import codec
 
@@ -51,8 +50,6 @@ def _idw_tile(arr: np.ndarray, t, qx: np.ndarray, qy: np.ndarray,
         if hit.any():
             out[s:e][hit] = V[np.argmin(d[hit], axis=1)]
     return out
-
-
 
 
 def _le32_bits(sl: str) -> str:
@@ -102,16 +99,26 @@ def _q8_header_float_sql(pos: int) -> str:
             f"cast(0.0 as float))")
 
 
+def with_q8_header(df: DataFrame) -> DataFrame:
+    """Attach the q8 header floats ``_q8_vmin``/``_q8_vmax`` (0.0f for
+    other fmts) that ``pixel_value_sql`` reads. ``pixel_value_sql`` adds
+    and drops them itself; a caller that reads several pixels per tile
+    row attaches them once up front, before any explode, so the header
+    decodes once per tile instead of once per tap — and its code stays
+    out of the exploded rows' codegen method."""
+    return (df.withColumn("_q8_vmin", F.expr(_q8_header_float_sql(1)))
+              .withColumn("_q8_vmax", F.expr(_q8_header_float_sql(5))))
+
+
 def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
                     value_name: str = "value",
                     fmts: tuple[str, ...] | None = None) -> DataFrame:
     """Attach the decoded pixel at (``row_col``, ``col_col``) as a double
     column — ENTIRELY inside the JVM (hex/conv bit math), no
-    ArrowEvalPython node, semantically identical to
-    ``slice_pixel`` + ``decode_slice`` (NaN→NULL, i32 sentinel
-    → NULL, q8 float32 chain bit-exact; verified exhaustively against
-    ``codec.pixel_at`` and re-certified against the DuckDB oracles of
-    every slice-decode query). Round-6 optimization: the Python
+    ArrowEvalPython node, bit-exact against ``codec.pixel_at`` (NaN→NULL,
+    i32 sentinel → NULL, q8 float32 chain; verified exhaustively, and
+    certified against the DuckDB oracles of every point-read query).
+    Round-6 optimization: the Python
     boundary round trip was ~60% of merge_mean's wall even at 8 B/row
     (guide §4.1 — built-ins beat any UDF). The per-row bit pattern and
     the q8 header floats are hoisted into their own projection columns
@@ -120,7 +127,6 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
     measured 1.8× slower."""
     off = f"({row_col}*w+{col_col})"
     b = f"_pxb_{value_name}"
-    vminf, vmaxf = f"_vmin_{value_name}", f"_vmax_{value_name}"
     # ``fmts``: branch pruning for callers whose input is statically
     # filtered to known formats (e.g. merge_mean over fmt='raw') — the
     # dead q8/i32 branches cost a measured ~20% of the stage even when
@@ -140,7 +146,7 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
         "raw": f"({_f32_from_bits(b)})",
         "i32": f"IF({i32} = -2147483648, cast(null as double), cast({i32} as double))",
         "b1": f"cast({b} as double)",
-        "q8": f"({_q8_chain_sql(vminf, vmaxf, b)})",
+        "q8": f"({_q8_chain_sql('_q8_vmin', '_q8_vmax', b)})",
     }
 
     def _case(exprs: dict) -> str:
@@ -151,48 +157,12 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
 
     bits_expr = _case(bits_of)
     val_expr = _case(val_of)
-    need_hdr = "q8" in fmts
-    if need_hdr:
-        df = (df.withColumn(vminf, F.expr(_q8_header_float_sql(1)))
-                .withColumn(vmaxf, F.expr(_q8_header_float_sql(5))))
+    add_hdr = "q8" in fmts and "_q8_vmin" not in df.columns
+    if add_hdr:
+        df = with_q8_header(df)
     return (df.withColumn(b, F.expr(bits_expr))
               .withColumn(value_name, F.expr(val_expr))
-              .drop(*([b, vminf, vmaxf] if need_hdr else [b])))
-
-
-
-
-def slice_pixel(row_col: str, col_col: str):
-    """JVM-side single-pixel byte slice for a (bytes, w, fmt) row given
-    pixel coordinates in columns ``row_col``/``col_col``: 4 bytes
-    (raw/i32), 1 byte (b1) or 9 bytes (q8 header+byte). Decode the
-    result with ``decode_slice`` — Arrow then ships ~8 B/row
-    to Python instead of the whole tile blob (CLAUDE.md: never carry
-    bytes through join fanout)."""
-    off = f"({row_col}*w+{col_col})"
-    return F.when(
-        F.col("fmt").isin("raw", "i32"),
-        F.expr(f"substring(bytes, cast(4*{off} as int) + 1, 4)"),
-    ).when(
-        F.col("fmt") == "b1",
-        F.expr(f"substring(bytes, cast({off} as int) + 1, 1)"),
-    ).otherwise(
-        F.concat(F.expr("substring(bytes, 1, 8)"),
-                 F.expr(f"substring(bytes, cast({off} as int) + 9, 1)"))
-    )
-
-
-@pandas_udf(DoubleType())
-def decode_slice(sl: pd.Series, fmt: pd.Series) -> pd.Series:
-    """Decode a ``slice_pixel`` payload column to a double (NaN→NULL,
-    i32's INT32_MIN sentinel → NULL). Each slice is a 1×1 tile of its
-    fmt, so the whole Arrow batch decodes through
-    ``codec.decode_grouped`` — one ``frombuffer`` per fmt."""
-    out = np.empty(len(sl), dtype=np.float64)
-    ones = np.ones(len(sl), dtype=np.int64)
-    for pos, _, _, _, px in codec.decode_grouped(sl.to_numpy(), ones, ones, fmt.to_numpy()):
-        out[pos] = px.reshape(len(pos))
-    return pd.Series(out)
+              .drop(*([b, "_q8_vmin", "_q8_vmax"] if add_hdr else [b])))
 
 
 def sample_nearest(joined: DataFrame, value_name: str = "value",
@@ -369,8 +339,6 @@ def sample_idw(joined: DataFrame, tiles: DataFrame | None = None,
     (each shard re-joins the payload and decodes the tile once; IDW is
     per-point independent so results are unchanged). ``max_shards=1``
     restores the unsalted plan."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     g = F.col("grid")
     if tiles is None:
         payload = joined.select(

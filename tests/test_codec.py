@@ -103,7 +103,7 @@ def test_narrow_dtype_write_rules():
 
 
 def _mixed_batch(rng, n=60):
-    """Tiles of several shapes (1×1 = a slice_pixel payload) in all four
+    """Tiles of several shapes (1×1 included) in all four
     fmts: i32 INT32_MIN sentinels, q8 NaN bytes (255), all-NaN and
     constant q8 tiles, and random trailing padding."""
     shapes = [(1, 1), (3, 5), (16, 8), (53, 37)]

@@ -216,3 +216,27 @@ def test_composite_max_plan_is_one_aggregate_no_join(spark):
                   for n in b.split("\n") if n.startswith("(")]
     assert not any("Join" in n for n in head_nodes), head_nodes
     assert sum("Exchange" in n for n in head_nodes) == 1, head_nodes
+
+
+def _plan_nodes(df):
+    """(name, detail-block) per node of the formatted physical plan."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    return [(b.splitlines()[0], b) for b in plan.split("\n\n") if b.startswith("(")]
+
+
+@pytest.mark.parametrize("op", ["to_grid_conv", "composite_max", "mosaic_first"])
+def test_whole_tile_kernels_plan_has_no_python_udf_and_no_blob_exchange(spark, op):
+    """The conv taps and the composites read pixels in ONE mapInArrow
+    over whole tiles: no ArrowEvalPython node, and no Exchange ever
+    carries the ``bytes`` blob (only skinny candidate rows shuffle)."""
+    tiles = load_tiles(spark, SF)
+    df = {"to_grid_conv": lambda: resample.to_grid_conv(tiles, TARGET, "cubic"),
+          "composite_max": lambda: resample.composite_max(tiles, TARGET),
+          "mosaic_first": lambda: resample.mosaic_first(tiles, TARGET)}[op]()
+    nodes = _plan_nodes(df)
+    assert any("MapInArrow" in name for name, _ in nodes), nodes
+    assert not any("ArrowEvalPython" in name for name, _ in nodes), nodes
+    for name, block in nodes:
+        if "Exchange" in name:
+            assert "bytes#" not in block, block

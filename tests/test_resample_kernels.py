@@ -1,19 +1,24 @@
 """to_grid kernel family vs the independent npref scalar goldens.
 
 The reference's 13 resampling methods (constants.py:13-28) split into:
-- convolution kernels (linear/cubic/cubic_spline: JVM-sliced SQL blend;
-  lanczos/gauss: vectorized mapInPandas) — pinned here against
-  npref.conv_sample_naive, a deliberately scalar transcription;
+- convolution kernels (linear/cubic/cubic_spline: the shared blend text
+  evaluated over numpy taps; lanczos/gauss: numpy weights) — all on the
+  one whole-tile candidate kernel ``resample._tile_candidates``, pinned
+  here against npref.conv_sample_naive, a deliberately scalar
+  transcription, in every pixel format and at the grid's edges;
 - aggregation kernels (max/min/med/mode/q1/q3) — pinned against
   npref.segment_stat_naive plus the DuckDB oracle in the contract.
 """
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pytest
 
 from rasters_spark import codec, fixtures, npref
+from rasters_spark.operators import rastermath as rm
 from rasters_spark.operators import resample
-from rasters_spark.tiles import load_tiles
+from rasters_spark.tiles import load_tiles, with_grid
 
 SF = "/root/testdata/sf0.001"
 TARGET = dict(x_origin=-180.0, y_origin=90.0, cell_width=0.25, cell_height=-0.25,
@@ -25,7 +30,7 @@ def _fixtures():
     fixtures.ensure_fixtures(SF)
 
 
-def _naive_conv(tiles_pd, kind: str, normalize: bool):
+def _naive_conv(tiles_pd, kind: str, normalize: bool, target: dict = TARGET):
     """Scalar recomputation of every candidate value (NaN → None)."""
     exp = {}
     for r in tiles_pd.itertuples(index=False):
@@ -33,14 +38,14 @@ def _naive_conv(tiles_pd, kind: str, normalize: bool):
         rs, cs, re_, ce, oob = npref.window_for_bbox(
             r.x_origin, r.y_origin + r.cell_height * r.h,
             r.x_origin + r.cell_width * r.w, r.y_origin,
-            TARGET["x_origin"], TARGET["y_origin"],
-            TARGET["cell_width"], TARGET["cell_height"], TARGET["rows"], TARGET["cols"])
+            target["x_origin"], target["y_origin"],
+            target["cell_width"], target["cell_height"], target["rows"], target["cols"])
         if oob or re_ <= rs or ce <= cs:
             continue
         for trow in range(rs, re_):
             for tcol in range(cs, ce):
-                tx, ty = npref.cell_center(trow, tcol, TARGET["x_origin"], TARGET["y_origin"],
-                                           TARGET["cell_width"], TARGET["cell_height"])
+                tx, ty = npref.cell_center(trow, tcol, target["x_origin"], target["y_origin"],
+                                           target["cell_width"], target["cell_height"])
                 fr = (ty - r.y_origin) / r.cell_height - 0.5
                 fc = (tx - r.x_origin) / r.cell_width - 0.5
                 prow, pcol = int(np.round(fr)), int(np.round(fc))
@@ -82,20 +87,100 @@ def test_to_grid_conv_py_matches_naive(spark, kind):
             assert got[k] == pytest.approx(e, rel=1e-9, abs=1e-9)
 
 
-def test_q8_slice_path_in_conv(spark):
-    # the slice decode must also handle q8 tiles (header + 1 byte per tap)
-    tiles = load_tiles(spark, SF).filter("fmt = 'q8' and image_id < 'img000000000100'")
+def _fmt_tiles(spark, fmt: str):
+    """Fixture tiles in ``fmt``: q8 as stored; i32/b1 re-encoded from raw
+    tiles (i32 keeps NaN as its INT32_MIN sentinel → NaN on decode)."""
+    t = load_tiles(spark, SF)
+    if fmt == "q8":
+        return t.filter("fmt = 'q8' and image_id < 'img000000000100'")
+    raw = t.filter("fmt = 'raw' and image_id < 'img000000000020'")
+    return with_grid(rm.astype_tiles(raw, fmt, rm.gt(500.0) if fmt == "b1" else None))
+
+
+@pytest.mark.parametrize("fmt", ["q8", "i32", "b1"])
+@pytest.mark.parametrize("kind", ["linear", "cubic", "cubic_spline"])
+def test_to_grid_conv_fmts_match_naive(spark, kind, fmt):
+    # raw is test_to_grid_conv_sql_matches_naive; the same kernel must
+    # read every other pixel format exactly like codec.decode_tile
+    tiles = _fmt_tiles(spark, fmt)
     assert tiles.count() > 0
     got = {(r.image_id, r.trow, r.tcol): r.value
-           for r in resample.to_grid_conv(tiles, TARGET, "linear").collect()}
-    exp = _naive_conv(tiles.toPandas(), "linear", normalize=False)
+           for r in resample.to_grid_conv(tiles, TARGET, kind).collect()}
+    exp = _naive_conv(tiles.toPandas(), kind, normalize=False)
     assert got.keys() == exp.keys()
     for k, e in exp.items():
         if e is None:
             assert got[k] is None
         else:
-            # q8 decode is float32 arithmetic — compare loosely
-            assert got[k] == pytest.approx(e, rel=1e-5, abs=1e-4)
+            assert got[k] == pytest.approx(e, rel=1e-9, abs=1e-9)
+    if fmt != "b1":  # b1 has no nodata
+        assert any(e is None for e in exp.values())
+
+
+# --- geometry edges of the whole-tile candidate kernel --------------------------
+
+EDGE_TARGET = dict(x_origin=0.0, y_origin=10.0, cell_width=0.5, cell_height=-0.5,
+                   rows=12, cols=12, crs="EPSG:4326")
+
+
+def _edge_tiles_pd():
+    """Six 8×8 raw tiles of 0.1° cells — ONE decode group — placed so
+    their candidate windows differ: interior (2×2 and 3×3 windows),
+    straddling the right edge and the top-left corner (clamped), fully
+    out of bounds, and one with a NaN pixel (NULL taps)."""
+    rng = np.random.default_rng(3)
+    origins = [(1.25, 8.75), (1.1, 8.9), (5.6, 7.0), (-0.4, 10.4), (20.0, 8.0), (3.05, 5.05)]
+    rows = []
+    for i, (x0, y0) in enumerate(origins):
+        arr = (rng.integers(0, 400, size=(8, 8)) * 0.25).astype(np.float32)
+        if i == 5:
+            arr[:, 2] = np.nan
+        rows.append(("img%012d" % i, codec.encode_tile(arr, "raw"), 8, 8, "raw",
+                     x0, y0, 0.1, -0.1, "EPSG:4326"))
+    return pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "x_origin",
+                                       "y_origin", "cell_width", "cell_height", "crs"])
+
+
+def test_tile_candidates_geometry_edges():
+    pdf = _edge_tiles_pd()
+    groups = list(resample._tile_candidates(pa.RecordBatch.from_pandas(pdf), EDGE_TARGET))
+    assert len(groups) == 1  # one (w, h, fmt) group → the padding mask is exercised
+    pos, k, trow, tcol, prow, pcol, fr, fc, pix = groups[0]
+    got = {(pdf.image_id[pos[kk]], tr, tc, pr, pc) for kk, tr, tc, pr, pc
+           in zip(k, trow, tcol, prow, pcol)}
+    exp = set()
+    for key, _ in _naive_conv(pdf, "linear", False, EDGE_TARGET).items():
+        r = pdf[pdf.image_id == key[0]].iloc[0]
+        tx, ty = npref.cell_center(key[1], key[2], EDGE_TARGET["x_origin"], EDGE_TARGET["y_origin"],
+                                   EDGE_TARGET["cell_width"], EDGE_TARGET["cell_height"])
+        exp.add(key + tuple(int(v) for v in npref.index_point(
+            tx, ty, r.x_origin, r.y_origin, r.cell_width, r.cell_height)))
+    assert got == exp
+    per_tile = pd.Series([pdf.image_id[pos[kk]] for kk in k]).value_counts()
+    assert "img000000000004" not in per_tile  # fully out of bounds
+    assert len(set(per_tile)) > 1  # windows of different sizes in one group
+    assert np.array_equal(pix[k, prow, pcol], [codec.decode_tile(
+        pdf.bytes[pos[kk]], 8, 8, "raw")[pr, pc] for kk, pr, pc in zip(k, prow, pcol)],
+        equal_nan=True)
+
+
+@pytest.mark.parametrize("kind", ["linear", "cubic"])
+def test_to_grid_conv_geometry_edges_and_nan_taps(spark, kind):
+    pdf = _edge_tiles_pd()
+    tiles = with_grid(spark.createDataFrame(
+        pdf, "image_id string, bytes binary, w int, h int, fmt string, x_origin double, "
+             "y_origin double, cell_width double, cell_height double, crs string"))
+    got = {(r.image_id, r.trow, r.tcol): r.value
+           for r in resample.to_grid_conv(tiles, EDGE_TARGET, kind).collect()}
+    exp = _naive_conv(pdf, kind, normalize=False, target=EDGE_TARGET)
+    assert got.keys() == exp.keys()
+    nulls = {k for k, e in exp.items() if e is None}
+    # exactly the candidates with the NaN pixel among their taps are NULL
+    assert nulls and {k[0] for k in nulls} == {"img000000000005"}
+    assert {k for k, v in got.items() if v is None} == nulls
+    for k, e in exp.items():
+        if e is not None:
+            assert got[k] == pytest.approx(e, rel=1e-9, abs=1e-9)
 
 
 @pytest.mark.parametrize("stat", ["max", "min", "med", "q1", "q3", "mode", "sum"])
