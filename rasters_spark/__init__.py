@@ -10,8 +10,11 @@ plans over DataFrames of image tiles:
   Spark SQL column arithmetic — zero UDFs (see ``grid.py``);
 - spatial predicates reduce to equi-joins on hierarchical cell ids
   (``cells.py``) with residual refinement, broadcast for small sides;
-- pixel kernels run as Arrow-vectorized ``mapInPandas``/``pandas_udf``
-  stages — no per-row Python anywhere (``codec.py``, ``operators/``).
+- point reads decode in the JVM; whole-tile pixel kernels run as
+  ``mapInArrow`` stages over ``codec.decode_grouped`` (resample, stats
+  and every halo operator through ``operators.focal.map_halo``), the
+  remaining per-tile kernels as ``mapInPandas``/``pandas_udf`` stages —
+  no per-row Python anywhere (``codec.py``, ``operators/``).
 """
 
 __version__ = "0.1.0"

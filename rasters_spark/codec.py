@@ -23,8 +23,11 @@ against :func:`pixel_at`). Whole tiles decode through ONE shape-batched
 numpy decoder, :func:`decode_grouped`, which groups an Arrow batch by
 ``(w, h, fmt)`` and decodes each group with one ``frombuffer``.
 :func:`decode_tile`, :func:`decode_tile_typed` and
-:func:`pixel_at` are the per-tile references the tests compare against
-(:func:`decode_batch` iterates them for the per-tile stencil kernels).
+:func:`pixel_at` are the per-tile references the tests compare against.
+The focal/terrain/contour/chips stencils decode through
+:func:`decode_grouped` (``operators.focal.map_halo``);
+:func:`decode_batch` iterates :func:`decode_tile` only for the
+remaining pandas kernels (rastermath, polygonize, render, …).
 phash is the reference-style integrity fingerprint (FIXTURES.md §1):
 sign bits of an 8×8 block-mean downsample vs. its mean.
 """
@@ -186,7 +189,8 @@ def pixel_at(data: bytes, w: int, h: int, fmt: str, row: int, col: int) -> float
 
 
 def decode_batch(bytes_s, w_s, h_s, fmt_s):
-    """Iterate decoded arrays for a pandas batch of tiles (kernel helper)."""
+    """Iterate decoded arrays for a pandas batch of tiles (the remaining
+    pandas kernels; batched kernels use :func:`decode_grouped`)."""
     for data, w, h, fmt in zip(bytes_s, w_s, h_s, fmt_s):
         yield decode_tile(data, int(w), int(h), fmt)
 

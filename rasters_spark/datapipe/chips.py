@@ -91,53 +91,25 @@ def lattice_chips(tiles: DataFrame, radius: int = 2, stride: int = 7) -> DataFra
     center is valid — global pixel keys so the oracle can join
     neighbors without tile bookkeeping. Exact stats (quarter-integer
     pixels)."""
-    from rasters_spark.operators.focal import _place_halos, _with_halo_payload
+    from rasters_spark.operators.focal import _focal_grids, map_halo
 
     r = int(radius)
-    t = _with_halo_payload(tiles, r)
-    src = t.select("image_id", "x_origin", "y_origin", "cell_width",
-                   "cell_height", "w", "h", "fmt", "bytes", "halos")
-    schema = ("image_id string, gx long, gy long, n_valid long, "
-              "vsum double, vmin double, vmax double")
 
-    def run(batches):
-        for pdf in batches:
-            frames = []
-            from rasters_spark import codec as _codec
-            arrs = _codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                cw = float(pdf["cell_width"].iloc[i])
-                ch = float(pdf["cell_height"].iloc[i])
-                tx = int(round(float(pdf["x_origin"].iloc[i]) / (ww * cw)))
-                ty = int(round(float(pdf["y_origin"].iloc[i]) / (hh * ch)))
-                pad = _place_halos(arr, pdf["halos"].iloc[i], r)
-                rows = []
-                for pr in range(hh):
-                    gy = ty * hh + pr
-                    if gy % stride:
-                        continue
-                    for pc in range(ww):
-                        gx = tx * ww + pc
-                        if gx % stride or not np.isfinite(arr[pr, pc]):
-                            continue
-                        win = pad[pr:pr + 2 * r + 1, pc:pc + 2 * r + 1]
-                        m = np.isfinite(win)
-                        v = win[m]
-                        rows.append((pdf["image_id"].iloc[i], gx, gy,
-                                     int(m.sum()), float(v.sum()),
-                                     float(v.min()), float(v.max())))
-                if rows:
-                    frames.append(pd.DataFrame(
-                        rows, columns=["image_id", "gx", "gy", "n_valid",
-                                       "vsum", "vmin", "vmax"]))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "gx": pd.Series([], dtype=np.int64),
-                                 "gy": pd.Series([], dtype=np.int64),
-                                 "n_valid": pd.Series([], dtype=np.int64),
-                                 "vsum": pd.Series([], dtype=float),
-                                 "vmin": pd.Series([], dtype=float),
-                                 "vmax": pd.Series([], dtype=float)}))
+    def kernel(pad, hh, ww, x0, y0, cw, ch):
+        tx = int(round(x0 / (ww * cw)))
+        ty = int(round(y0 / (hh * ch)))
+        gx = tx * ww + np.arange(ww)
+        gy = ty * hh + np.arange(hh)
+        probe = (((gy % stride) == 0)[:, None] & ((gx % stride) == 0)[None, :]
+                 & np.isfinite(pad[r:r + hh, r:r + ww]))
+        rows, cols = np.nonzero(probe)
+        vsum, n = _focal_grids(pad, hh, ww, r, "sum")
+        vmin, _ = _focal_grids(pad, hh, ww, r, "min")
+        vmax, _ = _focal_grids(pad, hh, ww, r, "max")
+        return (gx[cols], gy[rows], n[rows, cols], vsum[rows, cols],
+                vmin[rows, cols], vmax[rows, cols])
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, r, kernel,
+                    "image_id string, gx long, gy long, n_valid long, "
+                    "vsum double, vmin double, vmax double",
+                    meta=("x_origin", "y_origin", "cell_width", "cell_height"))

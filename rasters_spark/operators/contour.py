@@ -34,14 +34,12 @@ construction (single ownership).
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from rasters_spark import codec
-from rasters_spark.operators.focal import _place_halos, _with_halo_payload
+from rasters_spark.operators.focal import map_halo
 
 #: edge order for the deterministic 2-crossing pairing (mirrored by
 #: the oracle's coalesce order): top, bottom, left, right.
@@ -142,39 +140,20 @@ def contour_segments(tiles: DataFrame, levels: Sequence[float]) -> DataFrame:
     origins (``x_origin = gx0·cell_width``), as produced by
     ``focal.lattice_remap`` or any origin-snapped grid."""
     levels = [float(v) for v in levels]
-    t = _with_halo_payload(tiles, 1)
-    src = t.select("image_id", "x_origin", "y_origin", "cell_width",
-                   "cell_height", "w", "h", "fmt", "bytes", "halos")
-    schema = ("image_id string, level double, "
-              "x1 double, y1 double, x2 double, y2 double")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                cw = float(pdf["cell_width"].iloc[i])
-                ch = float(pdf["cell_height"].iloc[i])
-                gx0 = round(float(pdf["x_origin"].iloc[i]) / cw)
-                gy0 = round(float(pdf["y_origin"].iloc[i]) / ch)
-                pad = _place_halos(arr, pdf["halos"].iloc[i], 1)
-                # rows/cols 0..h / 0..w: the tile plus its E/S/SE halo
-                ext = pad[1:hh + 2, 1:ww + 2]
-                for lv in levels:
-                    x1, y1, x2, y2 = _segments_for_tile(
-                        ext, float(gx0), float(gy0), cw, ch, lv)
-                    if x1.size:
-                        frames.append(pd.DataFrame({
-                            "image_id": pdf["image_id"].iloc[i],
-                            "level": lv,
-                            "x1": x1, "y1": y1, "x2": x2, "y2": y2}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "level": pd.Series([], dtype=float),
-                                 "x1": pd.Series([], dtype=float),
-                                 "y1": pd.Series([], dtype=float),
-                                 "x2": pd.Series([], dtype=float),
-                                 "y2": pd.Series([], dtype=float)}))
+    def kernel(pad, hh, ww, x0, y0, cw, ch):
+        gx0, gy0 = float(round(x0 / cw)), float(round(y0 / ch))
+        # rows/cols 0..h / 0..w: the tile plus its E/S/SE halo
+        ext = pad[1:hh + 2, 1:ww + 2]
+        cols = [[np.zeros(0)] for _ in range(5)]
+        for lv in levels:
+            segs = _segments_for_tile(ext, gx0, gy0, cw, ch, lv)
+            cols[0].append(np.full(len(segs[0]), lv))
+            for c, v in zip(cols[1:], segs):
+                c.append(v)
+        return [np.concatenate(c) for c in cols]
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, 1, kernel,
+                    "image_id string, level double, "
+                    "x1 double, y1 double, x2 double, y2 double",
+                    meta=("x_origin", "y_origin", "cell_width", "cell_height"))

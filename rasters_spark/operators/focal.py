@@ -15,8 +15,9 @@ boundaries: a tile's edge cells see the adjacent tile's edge pixels.
 Scale design (the halo-exchange pattern):
 - Each tile emits up to 8 *edge strips* (r-wide slabs facing each of
   the 8 neighbor directions), addressed to the neighbor's origin. A
-  strip is O(perimeter·r) — for r=1 on a 256×256 tile ~0.8% of the
-  payload — so the strip exchange is skinny.
+  strip is O(perimeter·r) — for r=1 on a 256×256 tile ~3% of a raw
+  payload (strips are float64 so every decoded value, i32 included,
+  crosses exactly) — so the strip exchange is skinny.
 - Neighbor resolution is a broadcast-able equi-join of strips against
   the skinny tile INDEX (no payload) on printf-quantized origin keys:
   ``format_string('%.9f', origin)`` absorbs the sub-nanodegree float
@@ -30,23 +31,26 @@ Scale design (the halo-exchange pattern):
   onto the payload. The tile payload crosses exactly ONE exchange for
   that join (the same blessed shape as the IDW cogroup); missing
   neighbors (lattice edge, isolated tile) become NaN halo.
-- The per-tile kernel pads (h+2r, w+2r), places the strips, and takes
-  (2r+1)² shifted adds / fmin / fmax — one Arrow pass per tile, no
-  per-pixel Python. With the fixtures' exactly-representable
-  quarter-integer pixels every summation order is exact, so the focal
-  sums are bit-identical to a relational oracle summing the same
-  window population in any order.
+- Every halo operator (here, ``terrain``, ``contour``, ``chips``) runs
+  through ONE runner, :func:`map_halo`: one mapInArrow whose batches
+  decode through ``codec.decode_grouped``; each tile is padded to
+  (h+2r, w+2r) with its strips placed, and the operator's kernel takes
+  (2r+1)² shifted adds / fmin / fmax over it — no per-pixel Python.
+  With the fixtures' exactly-representable quarter-integer pixels every
+  summation order is exact, so the focal sums are bit-identical to a
+  relational oracle summing the same window population in any order.
+  The strip format stays private to this module.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 from rasters_spark import codec
 
@@ -54,10 +58,22 @@ from rasters_spark import codec
 #: agree on all of these (one lattice per distinct layout).
 LAYOUT_COLS = ("crs", "cell_width", "cell_height", "w", "h")
 
+#: raster→raster halo operators keep these input columns and replace
+#: the pixels with one raw grid (``raw_tile``), giving ``TILE_SCHEMA``.
+TILE_KEEP = ("image_id", "x_origin", "y_origin", "cell_width",
+             "cell_height", "crs", "w", "h")
+TILE_SCHEMA = ("image_id string, x_origin double, y_origin double, "
+               "cell_width double, cell_height double, crs string, "
+               "w int, h int, fmt string, bytes binary")
+
 #: the 8 neighbor directions (dx → +x / east, dy → +row / "down" in
 #: the y_origin + dy·h·cell_height sense; cell_height < 0 means down
 #: is south, which is the normal north-up raster layout).
 _DIRS = [(-1, -1), (0, -1), (1, -1), (-1, 0), (1, 0), (-1, 1), (0, 1), (1, 1)]
+
+_STRIP_SCHEMA = ("crs string, cell_width double, cell_height double, w int, h int, "
+                 "nbr_ox double, nbr_oy double, dx int, dy int, sw int, sh int, "
+                 "strip binary")
 
 _STATS = ("sum", "count", "mean", "min", "max")
 
@@ -71,60 +87,78 @@ def _origin_key(col):
     return F.format_string("%.9f", col.cast("double") + F.lit(0.0))
 
 
-def _strip_frame(pdf: pd.DataFrame, radius: int) -> pd.DataFrame:
-    """Cut the 8 r-wide edge slabs of each tile in the batch; rows are
-    addressed to the neighbor origin they belong to."""
-    out: dict[str, list] = {k: [] for k in (
-        "crs", "cell_width", "cell_height", "w", "h",
-        "nbr_ox", "nbr_oy", "dx", "dy", "sw", "sh", "strip")}
-    arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-    for i, arr in enumerate(arrs):
-        hh, ww = arr.shape
-        if radius > min(ww, hh):
+def _arrow_types(schema: StructType):
+    return [to_arrow_type(f.dataType) for f in schema.fields]
+
+
+def _concat(parts, typ):
+    """Per-tile column parts → one Arrow array. Numeric parts are numpy
+    arrays, the rest Python sequences; NaN becomes NULL (the pandas
+    conversion rule the Arrow kernels always had)."""
+    import pyarrow as pa
+
+    if isinstance(parts[0], np.ndarray):
+        return pa.array(np.concatenate(parts), type=typ, from_pandas=True)
+    return pa.array([v for p in parts for v in p], type=typ, from_pandas=True)
+
+
+def _strip_batch(batch, radius: int) -> dict[str, list]:
+    """Cut the 8 r-wide edge slabs of every tile in an Arrow batch, one
+    ``codec.decode_grouped`` group at a time; rows are addressed to the
+    neighbor origin they belong to. Strips ship as ``<f8`` so every
+    decoded value crosses the seam exactly (an i32 pixel above 2**24
+    does not survive float32)."""
+    col = {c: batch.column(c).to_numpy(zero_copy_only=False)
+           for c in ("image_id", "bytes", "w", "h", "fmt", "crs",
+                     "x_origin", "y_origin", "cell_width", "cell_height")}
+    r = radius
+    out: dict[str, list] = {}
+    for pos, ww, hh, _, pix in codec.decode_grouped(
+            col["bytes"], col["w"], col["h"], col["fmt"], col["image_id"]):
+        if r > min(ww, hh):
             # a window wider than a tile needs strips from tiles ≥2
             # steps away (multi-ring exchange) — out of scope, loudly
             raise ValueError(
-                f"focal radius {radius} exceeds tile extent {ww}x{hh}; "
+                f"focal radius {r} exceeds tile extent {ww}x{hh}; "
                 f"halo exchange covers radius <= min(w, h)")
-        r = radius
-        cw = float(pdf["cell_width"].iloc[i])
-        ch = float(pdf["cell_height"].iloc[i])
-        x0 = float(pdf["x_origin"].iloc[i])
-        y0 = float(pdf["y_origin"].iloc[i])
-        span_x, span_y = ww * cw, hh * ch
+        cw, ch = col["cell_width"][pos], col["cell_height"][pos]
+        x0, y0 = col["x_origin"][pos], col["y_origin"][pos]
+        m = len(pos)
         for dx, dy in _DIRS:
             cols = slice(0, r) if dx < 0 else slice(ww - r, ww) if dx > 0 else slice(0, ww)
             rows = slice(0, r) if dy < 0 else slice(hh - r, hh) if dy > 0 else slice(0, hh)
-            sl = np.ascontiguousarray(arr[rows, cols], dtype=np.float32)
-            out["crs"].append(pdf["crs"].iloc[i])
-            out["cell_width"].append(cw)
-            out["cell_height"].append(ch)
-            out["w"].append(ww)
-            out["h"].append(hh)
-            out["nbr_ox"].append(x0 + dx * span_x)
-            out["nbr_oy"].append(y0 + dy * span_y)
-            out["dx"].append(dx)
-            out["dy"].append(dy)
-            out["sh"].append(sl.shape[0])
-            out["sw"].append(sl.shape[1])
-            out["strip"].append(sl.tobytes())
-    return pd.DataFrame(out)
+            sl = np.ascontiguousarray(pix[:, rows, cols], dtype="<f8")
+            for k, v in (("crs", col["crs"][pos]), ("cell_width", cw),
+                         ("cell_height", ch), ("w", np.full(m, ww)),
+                         ("h", np.full(m, hh)), ("nbr_ox", x0 + dx * (ww * cw)),
+                         ("nbr_oy", y0 + dy * (hh * ch)), ("dx", np.full(m, dx)),
+                         ("dy", np.full(m, dy)), ("sw", np.full(m, sl.shape[2])),
+                         ("sh", np.full(m, sl.shape[1])),
+                         ("strip", [s.tobytes() for s in sl])):
+                out.setdefault(k, []).append(v)
+    return out
 
 
 def _edge_strips(tiles: DataFrame, radius: int) -> DataFrame:
     """Skinny strip table: one row per (tile, direction), addressed by
     the neighbor's printf-quantized origin. O(perimeter·r) bytes per
     tile — the only payload-derived data that crosses the strip join."""
-    src = tiles.select("bytes", "w", "h", "fmt", "crs",
+    src = tiles.select("image_id", "bytes", "w", "h", "fmt", "crs",
                        "x_origin", "y_origin", "cell_width", "cell_height")
-    schema = ("crs string, cell_width double, cell_height double, w int, h int, "
-              "nbr_ox double, nbr_oy double, dx int, dy int, sw int, sh int, strip binary")
+    schema = StructType.fromDDL(_STRIP_SCHEMA)
+    types = _arrow_types(schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _strip_frame(pdf, radius)
+    def run(batches):
+        import pyarrow as pa
 
-    return src.mapInPandas(run, schema=schema)
+        for batch in batches:
+            out = _strip_batch(batch, radius)
+            if out:
+                yield pa.RecordBatch.from_arrays(
+                    [_concat(out[k], t) for k, t in zip(schema.names, types)],
+                    names=schema.names)
+
+    return src.mapInArrow(run, schema=schema)
 
 
 def _halos(tiles: DataFrame, radius: int) -> DataFrame:
@@ -160,13 +194,79 @@ def _place_halos(arr: np.ndarray, halos, radius: int) -> np.ndarray:
     for hrec in halos:
         sdx, sdy = -int(hrec["dx"]), -int(hrec["dy"])  # sender's side of me
         sw, sh = int(hrec["sw"]), int(hrec["sh"])
-        sl = np.frombuffer(hrec["strip"], dtype="<f4").reshape(sh, sw).astype(np.float64)
+        sl = np.frombuffer(hrec["strip"], dtype="<f8").reshape(sh, sw)
         cs = (slice(0, r) if sdx < 0 else
               slice(r + ww, r + ww + r) if sdx > 0 else slice(r, r + ww))
         rs = (slice(0, r) if sdy < 0 else
               slice(r + hh, r + hh + r) if sdy > 0 else slice(r, r + hh))
         pad[rs, cs] = sl
     return pad
+
+
+def _with_halo_payload(tiles: DataFrame, radius: int) -> DataFrame:
+    """Tile payload ⋈ its folded halo row (1:1 left join — the payload
+    crosses exactly one exchange; AQE broadcasts the halo side while
+    it fits, and at cluster scale both sides hash on image_id with no
+    fanout)."""
+    return tiles.join(_halos(tiles, radius), on="image_id", how="left")
+
+
+def map_halo(tiles: DataFrame, radius: int, kernel, schema: str,
+             keep: tuple[str, ...] = ("image_id",),
+             meta: tuple[str, ...] = ()) -> DataFrame:
+    """The one halo runner: ``_with_halo_payload`` then ONE mapInArrow.
+    Each Arrow batch decodes through ``codec.decode_grouped`` (a bad
+    blob fails naming its image_id); every tile is padded by
+    ``_place_halos`` to ``pad`` (h+2r, w+2r) and handed to
+    ``kernel(pad, h, w, *meta values)``, which returns the columns of
+    ``schema`` after ``keep`` as equal-length sequences — one output
+    row per element, zero rows allowed. The ``keep`` columns lead
+    ``schema`` and are copied from the tile's input row. Rows come out
+    in input tile order."""
+    out = StructType.fromDDL(schema)
+    types = _arrow_types(out)
+    ktypes, vtypes = types[:len(keep)], types[len(keep):]
+    cols = dict.fromkeys((*keep, "image_id", "bytes", "w", "h", "fmt", "halos", *meta))
+    src = _with_halo_payload(tiles, radius).select(*cols)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            halos = batch.column("halos").to_pylist()
+            metas = [batch.column(c).to_pylist() for c in meta]
+            got = [None] * batch.num_rows
+            for pos, ww, hh, _, pix in codec.decode_grouped(
+                    *(batch.column(c).to_numpy(zero_copy_only=False)
+                      for c in ("bytes", "w", "h", "fmt", "image_id"))):
+                for k, i in enumerate(pos):
+                    pad = _place_halos(pix[k], halos[i], radius)
+                    got[i] = kernel(pad, hh, ww, *(m[i] for m in metas))
+            rows = [i for i in range(batch.num_rows) if len(got[i][0])]
+            if not rows:
+                continue
+            take = pa.array(np.repeat(rows, [len(got[i][0]) for i in rows]))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c).take(take).cast(t) for c, t in zip(keep, ktypes)]
+                + [_concat([got[i][j] for i in rows], t) for j, t in enumerate(vtypes)],
+                names=out.names)
+
+    return src.mapInArrow(run, schema=out)
+
+
+def raw_tile(grid: np.ndarray):
+    """A raster→raster kernel's one output row (``fmt``, ``bytes``):
+    the grid as a raw float32 blob."""
+    return ["raw"], [grid.astype(np.float32).tobytes()]
+
+
+def cell_rows(mask: np.ndarray, *grids: np.ndarray):
+    """A per-cell kernel's output columns: ``prow``, ``pcol`` (int32)
+    of every ``mask`` cell in row-major order, then each grid's value
+    there."""
+    rows, cols = np.nonzero(mask)
+    return (rows.astype(np.int32), cols.astype(np.int32),
+            *(g[rows, cols] for g in grids))
 
 
 def _focal_grids(pad: np.ndarray, hh: int, ww: int, radius: int, stat: str):
@@ -203,14 +303,6 @@ def _focal_grids(pad: np.ndarray, hh: int, ww: int, radius: int, stat: str):
     return acc, n
 
 
-def _with_halo_payload(tiles: DataFrame, radius: int) -> DataFrame:
-    """Tile payload ⋈ its folded halo row (1:1 left join — the payload
-    crosses exactly one exchange; AQE broadcasts the halo side while
-    it fits, and at cluster scale both sides hash on image_id with no
-    fanout)."""
-    return tiles.join(_halos(tiles, radius), on="image_id", how="left")
-
-
 def focal_tiles(tiles: DataFrame, radius: int = 1, stat: str = "mean") -> DataFrame:
     """Raster→raster focal statistic over a tiled layer with halo
     exchange: returns the input tile set (same georeferencing) with
@@ -218,31 +310,11 @@ def focal_tiles(tiles: DataFrame, radius: int = 1, stat: str = "mean") -> DataFr
     Cells whose whole window is invalid come back NaN."""
     if stat not in _STATS:
         raise ValueError(f"unknown focal stat: {stat!r} (one of {_STATS})")
-    t = _with_halo_payload(tiles, radius)
-    schema = ", ".join(
-        ["image_id string", "x_origin double", "y_origin double",
-         "cell_width double", "cell_height double", "crs string",
-         "w int", "h int", "fmt string", "bytes binary"])
-    src = t.select("image_id", "x_origin", "y_origin", "cell_width",
-                   "cell_height", "crs", "w", "h", "fmt", "bytes", "halos")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("image_id", "x_origin", "y_origin", "cell_width",
-                                    "cell_height", "crs", "w", "h", "fmt", "bytes")}
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], radius)
-                out, _ = _focal_grids(pad, hh, ww, radius, stat)
-                for c in ("image_id", "x_origin", "y_origin", "cell_width",
-                          "cell_height", "crs", "w", "h"):
-                    rows[c].append(pdf[c].iloc[i])
-                rows["fmt"].append("raw")
-                rows["bytes"].append(out.astype(np.float32).tobytes())
-            yield pd.DataFrame(rows)
+    def kernel(pad, hh, ww):
+        return raw_tile(_focal_grids(pad, hh, ww, radius, stat)[0])
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, radius, kernel, TILE_SCHEMA, TILE_KEEP)
 
 
 def focal_stats(tiles: DataFrame, radius: int = 1) -> DataFrame:
@@ -252,25 +324,12 @@ def focal_stats(tiles: DataFrame, radius: int = 1) -> DataFrame:
     exactly-representable pixel values the double sum is order-
     independent, so a relational twin summing the same (center,
     neighbor) pairs matches bit-for-bit."""
-    t = _with_halo_payload(tiles, radius)
-    src = t.select("image_id", "w", "h", "fmt", "bytes", "halos")
-    schema = "image_id string, focal_cells long, focal_sum double"
+    def kernel(pad, hh, ww):
+        s, n = _focal_grids(pad, hh, ww, radius, "sum")
+        return [int((n > 0).sum())], [float(np.where(n > 0, s, 0.0).sum())]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cells, sums = [], [], []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], radius)
-                s, n = _focal_grids(pad, hh, ww, radius, "sum")
-                ids.append(pdf["image_id"].iloc[i])
-                cells.append(int((n > 0).sum()))
-                sums.append(float(np.where(n > 0, s, 0.0).sum()))
-            yield pd.DataFrame({"image_id": ids, "focal_cells": cells,
-                                "focal_sum": sums})
-
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, radius, kernel,
+                    "image_id string, focal_cells long, focal_sum double")
 
 
 def focal_rank_stats(tiles: DataFrame, radius: int = 1) -> DataFrame:
@@ -294,48 +353,24 @@ def focal_rank_stats(tiles: DataFrame, radius: int = 1) -> DataFrame:
     (K,K,h,w) equality tensor is per-tile bounded (K=9 → ~250 KB)."""
     import warnings
 
-    t = _with_halo_payload(tiles, radius)
-    src = t.select("image_id", "w", "h", "fmt", "bytes", "halos")
-    schema = "image_id string, prow int, pcol int, med double, maj double, n long"
     k = 2 * radius + 1
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], radius)
-                stack = np.stack([pad[dy:dy + hh, dx:dx + ww]
-                                  for dy in range(k) for dx in range(k)])
-                n = np.isfinite(stack).sum(axis=0)
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore", RuntimeWarning)
-                    med = np.nanmedian(stack, axis=0)
-                    # counts[j] = #{i : v_i == v_j} (NaN never equal);
-                    # majority = smallest value attaining the max count
-                    counts = (stack[:, None] == stack[None, :]).sum(axis=0)
-                    maxc = counts.max(axis=0)
-                    maj = np.nanmin(np.where(counts == maxc, stack, np.nan), axis=0)
-                rows, cols = np.nonzero(n > 0)
-                if rows.size == 0:
-                    continue
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "med": med[rows, cols],
-                    "maj": maj[rows, cols],
-                    "n": n[rows, cols].astype(np.int64)}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "med": pd.Series([], dtype=float),
-                                 "maj": pd.Series([], dtype=float),
-                                 "n": pd.Series([], dtype=np.int64)}))
+    def kernel(pad, hh, ww):
+        stack = np.stack([pad[dy:dy + hh, dx:dx + ww]
+                          for dy in range(k) for dx in range(k)])
+        n = np.isfinite(stack).sum(axis=0)
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            med = np.nanmedian(stack, axis=0)
+            # counts[j] = #{i : v_i == v_j} (NaN never equal);
+            # majority = smallest value attaining the max count
+            counts = (stack[:, None] == stack[None, :]).sum(axis=0)
+            maxc = counts.max(axis=0)
+            maj = np.nanmin(np.where(counts == maxc, stack, np.nan), axis=0)
+        return cell_rows(n > 0, med, maj, n)
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, radius, kernel,
+                    "image_id string, prow int, pcol int, med double, maj double, n long")
 
 
 def _kernel_array(kernel) -> np.ndarray:
@@ -405,37 +440,15 @@ def convolve_tiles(tiles: DataFrame, kernel=BINOMIAL3,
     weight mass is 0. Scale shape: identical to ``focal_tiles`` — the
     skinny strip exchange + ONE payload join, then a map-only kernel."""
     k = _kernel_array(kernel)
-    radius = k.shape[0] // 2
-    t = _with_halo_payload(tiles, radius)
-    schema = ", ".join(
-        ["image_id string", "x_origin double", "y_origin double",
-         "cell_width double", "cell_height double", "crs string",
-         "w int", "h int", "fmt string", "bytes binary"])
-    src = t.select("image_id", "x_origin", "y_origin", "cell_width",
-                   "cell_height", "crs", "w", "h", "fmt", "bytes", "halos")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {c: [] for c in ("image_id", "x_origin", "y_origin", "cell_width",
-                                    "cell_height", "crs", "w", "h", "fmt", "bytes")}
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], radius)
-                num, den, n = _convolve_grids(pad, hh, ww, k)
-                if normalize:
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        out = np.where(den != 0.0, num / den, np.nan)
-                else:
-                    out = np.where(n > 0, num, np.nan)
-                for c in ("image_id", "x_origin", "y_origin", "cell_width",
-                          "cell_height", "crs", "w", "h"):
-                    rows[c].append(pdf[c].iloc[i])
-                rows["fmt"].append("raw")
-                rows["bytes"].append(out.astype(np.float32).tobytes())
-            yield pd.DataFrame(rows)
+    def conv(pad, hh, ww):
+        num, den, n = _convolve_grids(pad, hh, ww, k)
+        if normalize:
+            with np.errstate(invalid="ignore", divide="ignore"):
+                return raw_tile(np.where(den != 0.0, num / den, np.nan))
+        return raw_tile(np.where(n > 0, num, np.nan))
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, k.shape[0] // 2, conv, TILE_SCHEMA, TILE_KEEP)
 
 
 def convolve_stats(tiles: DataFrame, kernel=BINOMIAL3) -> DataFrame:
@@ -448,26 +461,13 @@ def convolve_stats(tiles: DataFrame, kernel=BINOMIAL3) -> DataFrame:
     relational twin joining the same (center, neighbor, weight) triples
     matches bit-for-bit in any accumulation order."""
     k = _kernel_array(kernel)
-    radius = k.shape[0] // 2
-    t = _with_halo_payload(tiles, radius)
-    src = t.select("image_id", "w", "h", "fmt", "bytes", "halos")
-    schema = "image_id string, conv_cells long, conv_sum double"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cells, sums = [], [], []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], radius)
-                num, _den, n = _convolve_grids(pad, hh, ww, k)
-                ids.append(pdf["image_id"].iloc[i])
-                cells.append(int((n > 0).sum()))
-                sums.append(float(np.where(n > 0, num, 0.0).sum()))
-            yield pd.DataFrame({"image_id": ids, "conv_cells": cells,
-                                "conv_sum": sums})
+    def conv(pad, hh, ww):
+        num, _den, n = _convolve_grids(pad, hh, ww, k)
+        return [int((n > 0).sum())], [float(np.where(n > 0, num, 0.0).sum())]
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, k.shape[0] // 2, conv,
+                    "image_id string, conv_cells long, conv_sum double")
 
 
 def lattice_remap(tiles: DataFrame, per_row: int = 40) -> DataFrame:
@@ -500,44 +500,22 @@ def proximity_stats(tiles: DataFrame, threshold: float, radius: int = 2) -> Data
     sqrt(dx²+dy²) of small ints — correctly-rounded IEEE on both
     engines (shared expression), and the min over a set of distinct
     constants has no tie ambiguity."""
-    t = _with_halo_payload(tiles, radius)
-    src = t.select("image_id", "w", "h", "fmt", "bytes", "halos")
-    schema = "image_id string, prow int, pcol int, prox double, n_t long"
     thr = float(threshold)
     r = radius
     offs = [(dy, dx, math.sqrt(float(dx * dx + dy * dy)))
             for dy in range(-r, r + 1) for dx in range(-r, r + 1)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], r)
-                prox = np.full((hh, ww), np.inf)
-                n_t = np.zeros((hh, ww), dtype=np.int64)
-                for dy, dx, dist in offs:
-                    sl = pad[r + dy:r + dy + hh, r + dx:r + dx + ww]
-                    tgt = sl >= thr  # NaN compares False
-                    n_t += tgt
-                    prox = np.where(tgt & (dist < prox), dist, prox)
-                center = pad[r:r + hh, r:r + ww]
-                rows, cols = np.nonzero(np.isfinite(center))
-                if rows.size == 0:
-                    continue
-                pv = prox[rows, cols]
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "prox": np.where(np.isinf(pv), np.nan, pv),
-                    "n_t": n_t[rows, cols]}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "prox": pd.Series([], dtype=float),
-                                 "n_t": pd.Series([], dtype=np.int64)}))
+    def kernel(pad, hh, ww):
+        prox = np.full((hh, ww), np.inf)
+        n_t = np.zeros((hh, ww), dtype=np.int64)
+        for dy, dx, dist in offs:
+            sl = pad[r + dy:r + dy + hh, r + dx:r + dx + ww]
+            tgt = sl >= thr  # NaN compares False
+            n_t += tgt
+            prox = np.where(tgt & (dist < prox), dist, prox)
+        center = pad[r:r + hh, r:r + ww]
+        return cell_rows(np.isfinite(center),
+                         np.where(np.isinf(prox), np.nan, prox), n_t)
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, r, kernel,
+                    "image_id string, prow int, pcol int, prox double, n_t long")

@@ -30,16 +30,18 @@ broadcast-join it for repeated resampling.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from rasters_spark import codec, grid
 from rasters_spark.operators.sample import sample_nearest
+
+
+#: the tile columns the whole-tile numpy kernels read
+_PAYLOAD = ("image_id", "bytes", "w", "h", "fmt",
+            "x_origin", "y_origin", "cell_width", "cell_height")
 
 
 def target_candidates(tiles: DataFrame, target: dict) -> DataFrame:
@@ -100,9 +102,7 @@ def _tile_candidates(batch, target: dict):
     ``(fr[n], fc[n])``, nearest pixel ``(prow[n], pcol[n])``. A group's
     windows differ in size (±1, or clamped at the grid edge), so they
     are padded to the largest one and masked."""
-    col = {c: batch.column(c).to_numpy(zero_copy_only=False)
-           for c in ("image_id", "bytes", "w", "h", "fmt",
-                     "x_origin", "y_origin", "cell_width", "cell_height")}
+    col = {c: batch.column(c).to_numpy(zero_copy_only=False) for c in _PAYLOAD}
     tx0, ty0 = float(target["x_origin"]), float(target["y_origin"])
     tcw, tch = float(target["cell_width"]), float(target["cell_height"])
     rows, cols = int(target["rows"]), int(target["cols"])
@@ -145,8 +145,6 @@ def _map_candidates(tiles: DataFrame, target: dict, value_fn,
     skinny candidate rows come out, so nothing fans a blob out and the
     map is a codegen boundary for any aggregate above it."""
     keep = tuple(dict.fromkeys(keep))
-    payload = ("image_id", "bytes", "w", "h", "fmt",
-               "x_origin", "y_origin", "cell_width", "cell_height")
     out_schema = StructType(
         [tiles.schema[c] for c in keep]
         + [StructField("trow", LongType()), StructField("tcol", LongType()),
@@ -171,7 +169,7 @@ def _map_candidates(tiles: DataFrame, target: dict, value_fn,
                        pa.array(val, type=pa.float64(), mask=null)],
                     names=out_schema.names)
 
-    return tiles.select(*dict.fromkeys(payload + keep)).mapInArrow(run, schema=out_schema)
+    return tiles.select(*dict.fromkeys(_PAYLOAD + keep)).mapInArrow(run, schema=out_schema)
 
 
 def _nearest_np(pix, k, prow, pcol, fr, fc):
@@ -389,38 +387,33 @@ def _segment_stat(key: np.ndarray, val: np.ndarray, stat: str):
     return keys, out, counts
 
 
-def _batch_cell_values(pdf: pd.DataFrame):
+def _batch_cell_values(batch, target: dict):
     """Vectorized source-pixel → target-cell routing for a WHOLE Arrow
     batch (round-6: the former per-tile Python loop — meshgrid +
     index_point + masks per 16-64px tile — was ~60% of to_grid_med's
     wall at 20k tiles; fixture shapes cycle through 9 (w,h) combos, so
     batching by shape vectorizes ~all of it away).
 
-    Yields per ``codec.decode_grouped`` (w, h, fmt) group:
-    (row_positions, gkey, vals) where
-    ``row_positions`` are pdf row indices, ``gkey`` is the GLOBAL
-    int64 segment key ``pos·(t_rows·t_cols) + trow·t_cols + tcol`` and
+    Yields per ``codec.decode_grouped`` (w, h, fmt) group
+    ``(gkey, vals)``: ``gkey`` is the GLOBAL int64 segment key
+    ``row·(rows·cols) + trow·cols + tcol`` (``row`` the batch row) and
     ``vals`` the finite, in-bounds pixel values (float64) in C scan
     order per tile — the same per-segment element ORDER as the
     per-tile loop, so every downstream reduction stays bit-identical.
     """
-    if len(pdf) == 0:
-        return
-    x0s = pdf["x_origin"].to_numpy().astype(np.float64)
-    y0s = pdf["y_origin"].to_numpy().astype(np.float64)
-    cws = pdf["cell_width"].to_numpy().astype(np.float64)
-    chs = pdf["cell_height"].to_numpy().astype(np.float64)
-    t_x0 = float(pdf["t_x0"].iloc[0]); t_y0 = float(pdf["t_y0"].iloc[0])
-    t_cw = float(pdf["t_cw"].iloc[0]); t_ch = float(pdf["t_ch"].iloc[0])
-    t_rows = int(pdf["t_rows"].iloc[0]); t_cols = int(pdf["t_cols"].iloc[0])
+    col = {c: batch.column(c).to_numpy(zero_copy_only=False) for c in _PAYLOAD}
+    t_x0, t_y0 = float(target["x_origin"]), float(target["y_origin"])
+    t_cw, t_ch = float(target["cell_width"]), float(target["cell_height"])
+    t_rows, t_cols = int(target["rows"]), int(target["cols"])
     span = t_rows * t_cols
     for pos, w, h, _, pix in codec.decode_grouped(
-            pdf["bytes"].to_numpy(), pdf["w"].to_numpy(), pdf["h"].to_numpy(),
-            pdf["fmt"].to_numpy(), pdf["image_id"].to_numpy()):
+            col["bytes"], col["w"], col["h"], col["fmt"], col["image_id"]):
+        x0s, y0s, cws, chs = (col[c][pos, None].astype(np.float64) for c in
+                              ("x_origin", "y_origin", "cell_width", "cell_height"))
         # per-tile pixel-center coords -> target indices (banker's round,
         # the exact npref.index_point expression order)
-        px = x0s[pos, None] + cws[pos, None] * (np.arange(w) + 0.5)          # (m, w)
-        py = y0s[pos, None] + chs[pos, None] * (np.arange(h) + 0.5)          # (m, h)
+        px = x0s + cws * (np.arange(w) + 0.5)                                # (m, w)
+        py = y0s + chs * (np.arange(h) + 0.5)                                # (m, h)
         tcol = np.round((px - t_x0) / t_cw - 0.5).astype(np.int64)
         trow = np.round((py - t_y0) / t_ch - 0.5).astype(np.int64)
         rok = (trow >= 0) & (trow < t_rows)                                   # (m, h)
@@ -432,7 +425,37 @@ def _batch_cell_values(pdf: pd.DataFrame):
         gkey = (pos.astype(np.int64)[:, None, None] * span
                 + trow[:, :, None] * t_cols + tcol[:, None, :])
         flat = mask.ravel()
-        yield pos, gkey.ravel()[flat], Vm.ravel()[flat]
+        yield gkey.ravel()[flat], Vm.ravel()[flat]
+
+
+def _map_cell_values(tiles: DataFrame, target: dict, reduce_fn, schema: str) -> DataFrame:
+    """One mapInArrow pass for the source-pixel binning kernels:
+    every ``_batch_cell_values`` group goes through
+    ``reduce_fn(gkey, vals) -> (keys, *columns)`` (one output row per
+    distinct key) and comes out as ``(image_id, trow, tcol, *columns)``
+    against ``schema``. The whole group lives inside one tile's decode —
+    NO shuffle at all."""
+    span, tcols = int(target["rows"]) * int(target["cols"]), int(target["cols"])
+    names = StructType.fromDDL(schema).names
+    src = tiles.select(*_PAYLOAD)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for gkey, vals in _batch_cell_values(batch, target):
+                # ONE sort/reduction per decode group: global keys embed
+                # the tile row, so per-segment ordering — and therefore
+                # every reduction — is identical to per-tile calls
+                keys, *cols = reduce_fn(gkey, vals)
+                cell = keys % span
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("image_id").take(pa.array(keys // span)),
+                     pa.array(cell // tcols), pa.array(cell % tcols),
+                     *(pa.array(c) for c in cols)],
+                    names=names)
+
+    return src.mapInArrow(run, schema=schema)
 
 
 def to_grid_stat(tiles: DataFrame, target: dict, stat: str) -> DataFrame:
@@ -445,39 +468,9 @@ def to_grid_stat(tiles: DataFrame, target: dict, stat: str) -> DataFrame:
     → (image_id, trow, tcol, value, n)."""
     if stat not in ("max", "min", "med", "mode", "q1", "q3", "sum"):
         raise ValueError(f"unknown to_grid stat: {stat}")
-    t = tiles.select(
-        "image_id", "bytes", "w", "h", "fmt",
-        "x_origin", "y_origin", "cell_width", "cell_height",
-        F.lit(target["x_origin"]).alias("t_x0"), F.lit(target["y_origin"]).alias("t_y0"),
-        F.lit(target["cell_width"]).alias("t_cw"), F.lit(target["cell_height"]).alias("t_ch"),
-        F.lit(target["rows"]).alias("t_rows"), F.lit(target["cols"]).alias("t_cols"),
-    )
-    schema = "image_id string, trow long, tcol long, value double, n long"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rasters_spark.operators.resample import (_batch_cell_values,
-                                                      _segment_stat)
-
-        for pdf in batches:
-            frames = []
-            span = int(pdf["t_rows"].iloc[0]) * int(pdf["t_cols"].iloc[0]) if len(pdf) else 0
-            tc = int(pdf["t_cols"].iloc[0]) if len(pdf) else 1
-            for pos, gkey, vals in _batch_cell_values(pdf):
-                # ONE lexsort + reduction per decode group: global keys
-                # embed the tile index, so per-segment ordering — and
-                # therefore every reduction — is identical to the
-                # former per-tile calls
-                keys, out, counts = _segment_stat(gkey, vals, stat)
-                cell = keys % span
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].to_numpy()[keys // span],
-                    "trow": cell // tc, "tcol": cell % tc,
-                    "value": out, "n": counts,
-                }))
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {"image_id": [], "trow": [], "tcol": [], "value": [], "n": []})
-
-    return t.mapInPandas(run, schema=schema)
+    return _map_cell_values(
+        tiles, target, lambda gkey, vals: _segment_stat(gkey, vals, stat),
+        "image_id string, trow long, tcol long, value double, n long")
 
 
 # --- windowed-sinc / gaussian kernels (to_grid lanczos/gauss) -------------------
@@ -576,41 +569,20 @@ def to_grid_average(tiles: DataFrame, target: dict) -> DataFrame:
     assigned to the target cell containing its center; per (tile,
     target cell) mean. Runs as one Arrow pass per tile (vectorized
     binning, no pixel explosion through the shuffle)."""
-    t = tiles.select(
-        "image_id", "bytes", "w", "h", "fmt",
-        "x_origin", "y_origin", "cell_width", "cell_height",
-        F.lit(target["x_origin"]).alias("t_x0"), F.lit(target["y_origin"]).alias("t_y0"),
-        F.lit(target["cell_width"]).alias("t_cw"), F.lit(target["cell_height"]).alias("t_ch"),
-        F.lit(target["rows"]).alias("t_rows"), F.lit(target["cols"]).alias("t_cols"),
-    )
-    schema = "image_id string, trow long, tcol long, vsum double, n long"
+    def cell_sums(gkey, vals):
+        # np.unique + add.at over GLOBAL (tile, cell) keys: each
+        # segment's elements keep their C scan order, so the
+        # accumulation order — and the float sum — is identical to
+        # per-tile calls
+        uniq, inv = np.unique(gkey, return_inverse=True)
+        sums = np.zeros(len(uniq)); cnts = np.zeros(len(uniq), dtype=np.int64)
+        np.add.at(sums, inv, vals)
+        np.add.at(cnts, inv, 1)
+        return uniq, sums, cnts
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rasters_spark.operators.resample import _batch_cell_values
-
-        for pdf in batches:
-            frames = []
-            span = int(pdf["t_rows"].iloc[0]) * int(pdf["t_cols"].iloc[0]) if len(pdf) else 0
-            tc = int(pdf["t_cols"].iloc[0]) if len(pdf) else 1
-            for pos, gkey, vals in _batch_cell_values(pdf):
-                # np.unique + add.at over GLOBAL (tile, cell) keys: each
-                # segment's elements keep their C scan order, so the
-                # accumulation order — and the float sum — is identical
-                # to the former per-tile calls
-                uniq, inv = np.unique(gkey, return_inverse=True)
-                sums = np.zeros(len(uniq)); cnts = np.zeros(len(uniq), dtype=np.int64)
-                np.add.at(sums, inv, vals)
-                np.add.at(cnts, inv, 1)
-                cell = uniq % span
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].to_numpy()[uniq // span],
-                    "trow": cell // tc, "tcol": cell % tc,
-                    "vsum": sums, "n": cnts,
-                }))
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {"image_id": [], "trow": [], "tcol": [], "vsum": [], "n": []})
-
-    partials = t.mapInPandas(run, schema=schema)
+    partials = _map_cell_values(
+        tiles, target, cell_sums,
+        "image_id string, trow long, tcol long, vsum double, n long")
     return partials.select("image_id", "trow", "tcol", (F.col("vsum") / F.col("n")).alias("value"), "n")
 
 

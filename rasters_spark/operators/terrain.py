@@ -34,14 +34,12 @@ value, so near-zero values stay deterministic).
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from rasters_spark import codec
-from rasters_spark.operators.focal import _place_halos, _with_halo_payload
+from rasters_spark.operators.focal import (TILE_KEEP, TILE_SCHEMA, cell_rows,
+                                           map_halo, raw_tile)
 
 #: default illumination (the GDAL/ESRI hillshade defaults).
 DEFAULT_ALTITUDE = 45.0
@@ -61,6 +59,31 @@ def light_vector(altitude_deg: float = DEFAULT_ALTITUDE,
             math.sin(alt))
 
 
+def _window3(pad: np.ndarray, hh: int, ww: int):
+    """The 3×3 window of every cell: z1..z9 row-major over
+    (prow-1..+1, pcol-1..+1) as shifted views of the radius-1 ``pad``,
+    and the STRICT-window mask (all 9 finite)."""
+    z = [pad[dy:dy + hh, dx:dx + ww] for dy in range(3) for dx in range(3)]
+    return z, np.logical_and.reduce([np.isfinite(v) for v in z])
+
+
+def _horn(z, cw: float, ch: float, zf: float):
+    """Horn weighted differences → (gx, gn): toward +pcol (east) and
+    north. Dyadic-exact for quarter-integer pixels; expression order
+    mirrors the oracle SQL text verbatim (CLAUDE.md shared-text rule)."""
+    z1, z2, z3, z4, _z5, z6, z7, z8, z9 = z
+    gx = zf * (((z3 + 2.0 * z6 + z9) - (z1 + 2.0 * z4 + z7)) / (8.0 * abs(cw)))
+    gy = zf * (((z7 + 2.0 * z8 + z9) - (z1 + 2.0 * z2 + z3)) / (8.0 * abs(ch)))
+    return gx, (-gy if ch < 0 else gy)
+
+
+def _hillshade(gx, gn, light):
+    """Unclamped Lambertian reflectance × 255 (normal·light form)."""
+    lx, ly, lz = light
+    return (255.0 * (lx * (-gx) + ly * (-gn) + lz)
+            / np.sqrt(1.0 + gx * gx + gn * gn))
+
+
 def slope_aspect_hillshade(tiles: DataFrame, z_factor: float = 1.0,
                            altitude_deg: float = DEFAULT_ALTITUDE,
                            azimuth_deg: float = DEFAULT_AZIMUTH) -> DataFrame:
@@ -72,64 +95,23 @@ def slope_aspect_hillshade(tiles: DataFrame, z_factor: float = 1.0,
     strip exchange, ONE payload join, then a map-only Arrow kernel;
     the output is skinny per-cell doubles (no tile blobs cross any
     further exchange)."""
-    lx, ly, lz = light_vector(altitude_deg, azimuth_deg)
+    light = light_vector(altitude_deg, azimuth_deg)
     zf = float(z_factor)
-    t = _with_halo_payload(tiles, 1)
-    src = t.select("image_id", "cell_width", "cell_height",
-                   "w", "h", "fmt", "bytes", "halos")
-    schema = ("image_id string, prow int, pcol int, "
-              "slope_deg double, aspect_deg double, hillshade double")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                cw = float(pdf["cell_width"].iloc[i])
-                ch = float(pdf["cell_height"].iloc[i])
-                pad = _place_halos(arr, pdf["halos"].iloc[i], 1)
-                # z1..z9 row-major over (prow-1..+1, pcol-1..+1)
-                z = [pad[dy:dy + hh, dx:dx + ww]
-                     for dy in range(3) for dx in range(3)]
-                z1, z2, z3, z4, _z5, z6, z7, z8, z9 = z
-                ok = np.isfinite(pad)
-                complete = np.ones((hh, ww), dtype=bool)
-                for dy in range(3):
-                    for dx in range(3):
-                        complete &= ok[dy:dy + hh, dx:dx + ww]
-                # Horn weighted differences — dyadic-exact for
-                # quarter-integer pixels; expression order mirrors the
-                # oracle SQL text verbatim (CLAUDE.md shared-text rule).
-                gx = zf * (((z3 + 2.0 * z6 + z9) - (z1 + 2.0 * z4 + z7)) / (8.0 * abs(cw)))
-                gy = zf * (((z7 + 2.0 * z8 + z9) - (z1 + 2.0 * z2 + z3)) / (8.0 * abs(ch)))
-                gn = -gy if ch < 0 else gy
-                with np.errstate(invalid="ignore"):
-                    slope = np.degrees(np.arctan(np.sqrt(gx * gx + gn * gn)))
-                    aspect = np.fmod(np.degrees(np.arctan2(-gx, gn)) + 360.0, 360.0)
-                    hs = (255.0 * (lx * (-gx) + ly * (-gn) + lz)
-                          / np.sqrt(1.0 + gx * gx + gn * gn))
-                flat = (gx == 0.0) & (gn == 0.0)
-                rows, cols = np.nonzero(complete)
-                if rows.size == 0:
-                    continue
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "slope_deg": slope[rows, cols],
-                    "aspect_deg": np.where(flat, np.nan, aspect)[rows, cols],
-                    "hillshade": hs[rows, cols],
-                }))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "slope_deg": pd.Series([], dtype=float),
-                                 "aspect_deg": pd.Series([], dtype=float),
-                                 "hillshade": pd.Series([], dtype=float)}))
+    def kernel(pad, hh, ww, cw, ch):
+        z, complete = _window3(pad, hh, ww)
+        gx, gn = _horn(z, cw, ch, zf)
+        with np.errstate(invalid="ignore"):
+            slope = np.degrees(np.arctan(np.sqrt(gx * gx + gn * gn)))
+            aspect = np.fmod(np.degrees(np.arctan2(-gx, gn)) + 360.0, 360.0)
+            hs = _hillshade(gx, gn, light)
+        flat = (gx == 0.0) & (gn == 0.0)
+        return cell_rows(complete, slope, np.where(flat, np.nan, aspect), hs)
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, 1, kernel,
+                    "image_id string, prow int, pcol int, "
+                    "slope_deg double, aspect_deg double, hillshade double",
+                    meta=("cell_width", "cell_height"))
 
 
 def hillshade_tiles(tiles: DataFrame, z_factor: float = 1.0,
@@ -140,48 +122,16 @@ def hillshade_tiles(tiles: DataFrame, z_factor: float = 1.0,
     the window is incomplete). The clamp lives HERE (the render
     surface), not in the analytic per-cell values, so the oracle-checked
     path never hashes a max(0,·) boundary."""
-    lx, ly, lz = light_vector(altitude_deg, azimuth_deg)
+    light = light_vector(altitude_deg, azimuth_deg)
     zf = float(z_factor)
-    t = _with_halo_payload(tiles, 1)
-    src = t.select("image_id", "x_origin", "y_origin", "cell_width",
-                   "cell_height", "crs", "w", "h", "fmt", "bytes", "halos")
-    schema = ", ".join(
-        ["image_id string", "x_origin double", "y_origin double",
-         "cell_width double", "cell_height double", "crs string",
-         "w int", "h int", "fmt string", "bytes binary"])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {c: [] for c in ("image_id", "x_origin", "y_origin", "cell_width",
-                                    "cell_height", "crs", "w", "h", "fmt", "bytes")}
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                cw = float(pdf["cell_width"].iloc[i])
-                ch = float(pdf["cell_height"].iloc[i])
-                pad = _place_halos(arr, pdf["halos"].iloc[i], 1)
-                z = [pad[dy:dy + hh, dx:dx + ww]
-                     for dy in range(3) for dx in range(3)]
-                z1, z2, z3, z4, _z5, z6, z7, z8, z9 = z
-                ok = np.isfinite(pad)
-                complete = np.ones((hh, ww), dtype=bool)
-                for dy in range(3):
-                    for dx in range(3):
-                        complete &= ok[dy:dy + hh, dx:dx + ww]
-                gx = zf * (((z3 + 2.0 * z6 + z9) - (z1 + 2.0 * z4 + z7)) / (8.0 * abs(cw)))
-                gy = zf * (((z7 + 2.0 * z8 + z9) - (z1 + 2.0 * z2 + z3)) / (8.0 * abs(ch)))
-                gn = -gy if ch < 0 else gy
-                hs = (255.0 * (lx * (-gx) + ly * (-gn) + lz)
-                      / np.sqrt(1.0 + gx * gx + gn * gn))
-                out = np.where(complete, np.clip(hs, 0.0, 255.0), np.nan)
-                for c in ("image_id", "x_origin", "y_origin", "cell_width",
-                          "cell_height", "crs", "w", "h"):
-                    rows[c].append(pdf[c].iloc[i])
-                rows["fmt"].append("raw")
-                rows["bytes"].append(out.astype(np.float32).tobytes())
-            yield pd.DataFrame(rows)
+    def kernel(pad, hh, ww, cw, ch):
+        z, complete = _window3(pad, hh, ww)
+        hs = _hillshade(*_horn(z, cw, ch, zf), light)
+        return raw_tile(np.where(complete, np.clip(hs, 0.0, 255.0), np.nan))
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, 1, kernel, TILE_SCHEMA, TILE_KEEP,
+                    meta=("cell_width", "cell_height"))
 
 
 # --- D8 flow direction ---------------------------------------------------------
@@ -216,48 +166,25 @@ def flow_d8(tiles: DataFrame) -> DataFrame:
     payload join + a map-only Arrow pass."""
     import warnings
 
-    t = _with_halo_payload(tiles, 1)
-    src = t.select("image_id", "w", "h", "fmt", "bytes", "halos")
-    schema = "image_id string, prow int, pcol int, d8 int, n_down long"
     codes = np.array([c for _, _, c, _ in D8_OFFSETS], dtype=np.int32)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], 1)
-                center = pad[1:1 + hh, 1:1 + ww]
-                drops = np.stack([
-                    (center - pad[1 + dy:1 + dy + hh, 1 + dx:1 + dx + ww]) / dist
-                    for dy, dx, _c, dist in D8_OFFSETS])
-                with warnings.catch_warnings():
-                    warnings.simplefilter("ignore", RuntimeWarning)
-                    best = np.nanmax(drops, axis=0)
-                    n_down = (drops > 0.0).sum(axis=0)
-                # first index attaining the max = smallest ESRI code
-                # (D8_OFFSETS is in ascending code order)
-                idx = (drops == best).argmax(axis=0)
-                d8 = np.where(np.isfinite(best) & (best > 0.0), codes[idx], 0)
-                ok = np.isfinite(center)
-                rows, cols = np.nonzero(ok)
-                if rows.size == 0:
-                    continue
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "d8": d8[rows, cols].astype(np.int32),
-                    "n_down": n_down[rows, cols].astype(np.int64)}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "d8": pd.Series([], dtype=np.int32),
-                                 "n_down": pd.Series([], dtype=np.int64)}))
+    def kernel(pad, hh, ww):
+        center = pad[1:1 + hh, 1:1 + ww]
+        drops = np.stack([
+            (center - pad[1 + dy:1 + dy + hh, 1 + dx:1 + dx + ww]) / dist
+            for dy, dx, _c, dist in D8_OFFSETS])
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            best = np.nanmax(drops, axis=0)
+            n_down = (drops > 0.0).sum(axis=0)
+        # first index attaining the max = smallest ESRI code
+        # (D8_OFFSETS is in ascending code order)
+        idx = (drops == best).argmax(axis=0)
+        d8 = np.where(np.isfinite(best) & (best > 0.0), codes[idx], 0)
+        return cell_rows(np.isfinite(center), d8, n_down)
 
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, 1, kernel,
+                    "image_id string, prow int, pcol int, d8 int, n_down long")
 
 
 def curvature_zt(tiles: DataFrame) -> DataFrame:
@@ -275,62 +202,30 @@ def curvature_zt(tiles: DataFrame) -> DataFrame:
     → (image_id, prow, pcol, curv, plan_curv, prof_curv)."""
     import warnings
 
-    t = _with_halo_payload(tiles, 1)
-    src = t.select("image_id", "cell_width", "cell_height",
-                   "w", "h", "fmt", "bytes", "halos")
-    schema = ("image_id string, prow int, pcol int, "
-              "curv double, plan_curv double, prof_curv double")
+    def kernel(pad, hh, ww, cw, ch):
+        lx, lyy = abs(cw), abs(ch)
+        z, complete = _window3(pad, hh, ww)
+        z1, z2, z3, z4, z5, z6, z7, z8, z9 = z
+        # ZT coefficients — text mirrors the SQL oracle verbatim
+        with warnings.catch_warnings(), np.errstate(invalid="ignore", divide="ignore"):
+            warnings.simplefilter("ignore", RuntimeWarning)
+            d_ = ((z4 + z6) / 2.0 - z5) / (lx * lx)
+            e_ = ((z2 + z8) / 2.0 - z5) / (lyy * lyy)
+            f_ = (-z1 + z3 + z7 - z9) / (4.0 * lx * lyy)
+            g_ = (-z4 + z6) / (2.0 * lx)
+            h_ = (z2 - z8) / (2.0 * lyy)
+            curv = -2.0 * (d_ + e_)
+            den = g_ * g_ + h_ * h_
+            plan = np.where(den == 0.0, np.nan,
+                            2.0 * (d_ * h_ * h_ + e_ * g_ * g_ - f_ * g_ * h_) / den)
+            prof = np.where(den == 0.0, np.nan,
+                            -2.0 * (d_ * g_ * g_ + e_ * h_ * h_ + f_ * g_ * h_) / den)
+        return cell_rows(complete, curv, plan, prof)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                lx = abs(float(pdf["cell_width"].iloc[i]))
-                lyy = abs(float(pdf["cell_height"].iloc[i]))
-                pad = _place_halos(arr, pdf["halos"].iloc[i], 1)
-                z = [pad[dy:dy + hh, dx:dx + ww]
-                     for dy in range(3) for dx in range(3)]
-                z1, z2, z3, z4, z5, z6, z7, z8, z9 = z
-                ok = np.isfinite(pad)
-                complete = np.ones((hh, ww), dtype=bool)
-                for dy in range(3):
-                    for dx in range(3):
-                        complete &= ok[dy:dy + hh, dx:dx + ww]
-                # ZT coefficients — text mirrors the SQL oracle verbatim
-                with warnings.catch_warnings(), np.errstate(invalid="ignore", divide="ignore"):
-                    warnings.simplefilter("ignore", RuntimeWarning)
-                    d_ = ((z4 + z6) / 2.0 - z5) / (lx * lx)
-                    e_ = ((z2 + z8) / 2.0 - z5) / (lyy * lyy)
-                    f_ = (-z1 + z3 + z7 - z9) / (4.0 * lx * lyy)
-                    g_ = (-z4 + z6) / (2.0 * lx)
-                    h_ = (z2 - z8) / (2.0 * lyy)
-                    curv = -2.0 * (d_ + e_)
-                    den = g_ * g_ + h_ * h_
-                    plan = np.where(den == 0.0, np.nan,
-                                    2.0 * (d_ * h_ * h_ + e_ * g_ * g_ - f_ * g_ * h_) / den)
-                    prof = np.where(den == 0.0, np.nan,
-                                    -2.0 * (d_ * g_ * g_ + e_ * h_ * h_ + f_ * g_ * h_) / den)
-                rows, cols = np.nonzero(complete)
-                if rows.size == 0:
-                    continue
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "curv": curv[rows, cols],
-                    "plan_curv": plan[rows, cols],
-                    "prof_curv": prof[rows, cols]}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "curv": pd.Series([], dtype=float),
-                                 "plan_curv": pd.Series([], dtype=float),
-                                 "prof_curv": pd.Series([], dtype=float)}))
-
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, 1, kernel,
+                    "image_id string, prow int, pcol int, "
+                    "curv double, plan_curv double, prof_curv double",
+                    meta=("cell_width", "cell_height"))
 
 
 def terrain_indices(tiles: DataFrame) -> DataFrame:
@@ -348,56 +243,27 @@ def terrain_indices(tiles: DataFrame) -> DataFrame:
     → (image_id, prow, pcol, tri, tpi, n_nbr)."""
     import warnings
 
-    t = _with_halo_payload(tiles, 1)
-    src = t.select("image_id", "w", "h", "fmt", "bytes", "halos")
-    schema = ("image_id string, prow int, pcol int, "
-              "tri double, tpi double, n_nbr long")
+    def kernel(pad, hh, ww):
+        z, _ = _window3(pad, hh, ww)
+        center = z[4]
+        ssum = np.zeros((hh, ww))
+        nsum = np.zeros((hh, ww))
+        nn = np.zeros((hh, ww), dtype=np.int64)
+        for nb in z[:4] + z[5:]:
+            m = np.isfinite(nb)
+            d = np.where(m, center - nb, 0.0)
+            ssum += d * d
+            nsum += np.where(m, nb, 0.0)
+            nn += m
+        with warnings.catch_warnings(), np.errstate(invalid="ignore"):
+            warnings.simplefilter("ignore", RuntimeWarning)
+            tri = np.sqrt(ssum)
+            tpi = center - (nsum / nn)
+        return cell_rows(np.isfinite(center) & (nn > 0), tri, tpi, nn)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                pad = _place_halos(arr, pdf["halos"].iloc[i], 1)
-                center = pad[1:1 + hh, 1:1 + ww]
-                ssum = np.zeros((hh, ww))
-                nsum = np.zeros((hh, ww))
-                nn = np.zeros((hh, ww), dtype=np.int64)
-                for dy in range(3):
-                    for dx in range(3):
-                        if dy == 1 and dx == 1:
-                            continue
-                        nb = pad[dy:dy + hh, dx:dx + ww]
-                        m = np.isfinite(nb)
-                        d = np.where(m, center - nb, 0.0)
-                        ssum += d * d
-                        nsum += np.where(m, nb, 0.0)
-                        nn += m
-                ok = np.isfinite(center) & (nn > 0)
-                with warnings.catch_warnings(), np.errstate(invalid="ignore"):
-                    warnings.simplefilter("ignore", RuntimeWarning)
-                    tri = np.sqrt(ssum)
-                    tpi = center - (nsum / nn)
-                rows, cols = np.nonzero(ok)
-                if rows.size == 0:
-                    continue
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "tri": tri[rows, cols],
-                    "tpi": tpi[rows, cols],
-                    "n_nbr": nn[rows, cols]}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "tri": pd.Series([], dtype=float),
-                                 "tpi": pd.Series([], dtype=float),
-                                 "n_nbr": pd.Series([], dtype=np.int64)}))
-
-    return src.mapInPandas(run, schema=schema)
+    return map_halo(tiles, 1, kernel,
+                    "image_id string, prow int, pcol int, "
+                    "tri double, tpi double, n_nbr long")
 
 
 #: code → (Δprow, Δpcol), the inverse of D8_OFFSETS' encoding

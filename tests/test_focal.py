@@ -30,13 +30,28 @@ def _values(tx, ty):
     return v
 
 
-def _lattice_rows():
+#: the pixel formats the global-brute tests run on
+FMTS = ("raw", "q8", "i32", "b1")
+
+
+def _encoded(tx, ty, fmt="raw"):
+    """The lattice tile in ``fmt``: raw/q8 encode the quarter-integer
+    values (q8 lossily), i32 holds them ×4 with the nodata sentinel in
+    the NaN holes, b1 a 0/1 pattern of them."""
+    v = _values(tx, ty)
+    if fmt == "i32":
+        v = np.where(np.isnan(v), codec.I32_NODATA, v * 4)
+    elif fmt == "b1":
+        v = np.nan_to_num(v * 4) % 3 == 0
+    return codec.encode_tile(v.astype(np.float32) if fmt in ("raw", "q8") else v, fmt)
+
+
+def _lattice_rows(fmt="raw"):
     rows = []
     for ty in range(NY):
         for tx in range(NX):
-            arr = _values(tx, ty)
-            rows.append((f"t{ty}{tx}", codec.encode_tile(arr.astype(np.float32), "raw"),
-                         W, H, "raw", "EPSG:4326",
+            rows.append((f"t{ty}{tx}", _encoded(tx, ty, fmt),
+                         W, H, fmt, "EPSG:4326",
                          tx * W * CW, ty * H * CH, CW, CH))
     return rows
 
@@ -50,13 +65,27 @@ def lattice(spark):
     return spark.createDataFrame(_lattice_rows(), COLS).cache()
 
 
-def _global_array():
+@pytest.fixture(scope="module")
+def lattices(spark):
+    """fmt → the lattice encoded in that fmt."""
+    return {f: spark.createDataFrame(_lattice_rows(f), COLS).cache() for f in FMTS}
+
+
+def _global_array(fmt="raw"):
+    """The lattice assembled from ``codec.decode_tile`` of the same blobs
+    the Spark lattice carries."""
     g = np.full((NY * H, NX * W), np.nan)
     for ty in range(NY):
         for tx in range(NX):
             g[ty * H:(ty + 1) * H, tx * W:(tx + 1) * W] = \
-                codec.decode_tile(codec.encode_tile(_values(tx, ty).astype(np.float32), "raw"), W, H, "raw")
+                codec.decode_tile(_encoded(tx, ty, fmt), W, H, fmt)
     return g
+
+
+def _fmt_params(*values):
+    """``values`` × FMTS, with the raw cases keeping their plain ids."""
+    return [pytest.param(v, f, id=str(v) if f == "raw" else f"{v}-{f}")
+            for f in FMTS for v in values]
 
 
 def _brute(g, radius, stat):
@@ -86,22 +115,60 @@ def _collect_tiles(df):
     return got
 
 
-@pytest.mark.parametrize("stat", ["sum", "mean", "min", "max", "count"])
-def test_focal_tiles_match_global_brute(spark, lattice, stat):
-    g = _global_array()
+@pytest.mark.parametrize("stat,fmt", _fmt_params("sum", "mean", "min", "max", "count"))
+def test_focal_tiles_match_global_brute(spark, lattices, stat, fmt):
+    g = _global_array(fmt)
     want, _ = _brute(g, 1, stat)
-    got = _collect_tiles(focal.focal_tiles(lattice, radius=1, stat=stat))
+    got = _collect_tiles(focal.focal_tiles(lattices[fmt], radius=1, stat=stat))
     for ty in range(NY):
         for tx in range(NX):
             crop = want[ty * H:(ty + 1) * H, tx * W:(tx + 1) * W]
             np.testing.assert_allclose(
                 got[f"t{ty}{tx}"], crop.astype(np.float32),
                 rtol=0, atol=1e-6, equal_nan=True,
-                err_msg=f"tile t{ty}{tx} stat={stat}")
+                err_msg=f"tile t{ty}{tx} stat={stat} fmt={fmt}")
 
 
-def test_focal_radius2_crosses_corners(spark, lattice):
-    g = _global_array()
+def test_focal_tiles_i32_above_2_24_crosses_seams_exactly(spark):
+    """i32 pixels above 2**24 are not float32-representable: the edge
+    strips must carry them exactly. Columns cycle (2**24 + 1, -2**24, 0)
+    so every full 3-column window sums to a small exact integer — one
+    rounded halo pixel would show as an off-by-one there."""
+    cyc = np.array([2.0 ** 24 + 1, -2.0 ** 24, 0.0])
+    r, c = np.mgrid[0:NY * H, 0:NX * W]
+    g = cyc[c % 3] + (r * 5 + c * 3) % 11
+    g[2, 5] = codec.I32_NODATA
+    rows = [(f"t{ty}{tx}", codec.encode_tile(
+                g[ty * H:(ty + 1) * H, tx * W:(tx + 1) * W], "i32"),
+             W, H, "i32", "EPSG:4326", tx * W * CW, ty * H * CH, CW, CH)
+            for ty in range(NY) for tx in range(NX)]
+    g[2, 5] = np.nan
+    want, _ = _brute(g, 1, "sum")
+    got = _collect_tiles(focal.focal_tiles(spark.createDataFrame(rows, COLS), 1, "sum"))
+    for ty in range(NY):
+        for tx in range(NX):
+            crop = want[ty * H:(ty + 1) * H, tx * W:(tx + 1) * W]
+            np.testing.assert_array_equal(got[f"t{ty}{tx}"], crop.astype(np.float32),
+                                          err_msg=f"tile t{ty}{tx}")
+
+
+@pytest.mark.parametrize("op", ["focal_tiles", "slope_aspect_hillshade"])
+def test_truncated_blob_fails_naming_its_image_id(spark, op):
+    """A short blob must fail with its image_id in the error, not a bare
+    numpy buffer error."""
+    from rasters_spark.operators import terrain
+
+    rows = _lattice_rows()
+    rows[4] = (rows[4][0], rows[4][1][:-4], *rows[4][2:])
+    df = spark.createDataFrame(rows, COLS)
+    run = {"focal_tiles": focal.focal_tiles,
+           "slope_aspect_hillshade": terrain.slope_aspect_hillshade}[op]
+    with pytest.raises(Exception, match=f"image_id '{rows[4][0]}'"):
+        run(df).collect()
+
+
+def test_focal_radius2_crosses_corners(spark, lattice, fmt="raw"):
+    g = _global_array(fmt)
     want, _ = _brute(g, 2, "sum")
     got = _collect_tiles(focal.focal_tiles(lattice, radius=2, stat="sum"))
     for ty in range(NY):
@@ -109,6 +176,11 @@ def test_focal_radius2_crosses_corners(spark, lattice):
             crop = want[ty * H:(ty + 1) * H, tx * W:(tx + 1) * W]
             np.testing.assert_allclose(got[f"t{ty}{tx}"], crop.astype(np.float32),
                                        rtol=0, atol=1e-6, equal_nan=True)
+
+
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_focal_radius2_crosses_corners_fmts(spark, lattices, fmt):
+    test_focal_radius2_crosses_corners(spark, lattices[fmt], fmt)
 
 
 def test_halo_actually_crosses_tiles(spark, lattice):
@@ -206,11 +278,11 @@ def test_lattice_remap_abuts_and_is_sql_replicable(spark, lattice):
     assert out.count() == NX * NY
 
 
-def test_focal_rank_stats_match_global_brute(spark, lattice):
+def test_focal_rank_stats_match_global_brute(spark, lattice, fmt="raw"):
     """Median/majority per cell vs a per-cell Python brute force over the
     assembled global array — including tile-edge cells (halo path) and
     the tie-break rule (max count, then SMALLEST value)."""
-    g = _global_array()
+    g = _global_array(fmt)
     out = focal.focal_rank_stats(lattice, 1).collect()
     got = {(r.image_id, r.prow, r.pcol): (r.med, r.maj, r.n) for r in out}
     gh, gw = g.shape
@@ -236,6 +308,11 @@ def test_focal_rank_stats_match_global_brute(spark, lattice):
     assert n_checked == len(got)
 
 
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_focal_rank_stats_match_global_brute_fmts(spark, lattices, fmt):
+    test_focal_rank_stats_match_global_brute(spark, lattices[fmt], fmt)
+
+
 def test_focal_majority_tie_breaks_to_smallest_value(spark):
     # a single 3x3 tile whose center window holds {1.0 x4, 2.0 x4, 3.0}:
     # counts tie at 4 -> majority must be the SMALLER value 1.0
@@ -249,12 +326,12 @@ def test_focal_majority_tie_breaks_to_smallest_value(spark):
     assert out[(1, 1)] == 1.0
 
 
-def test_proximity_matches_global_brute(spark, lattice):
+def test_proximity_matches_global_brute(spark, lattice, fmt="raw"):
     """Radius-2 proximity vs per-cell brute force over the global array
     (threshold chosen mid-range so both targets and far cells exist)."""
     import math
-    g = _global_array()
-    thr = 5.0
+    g = _global_array(fmt)
+    thr = {"i32": 20.0, "b1": 1.0}.get(fmt, 5.0)
     got = {(r.image_id, r.prow, r.pcol): (r.prox, r.n_t)
            for r in focal.proximity_stats(lattice, thr, 2).collect()}
     gh, gw = g.shape
@@ -282,6 +359,11 @@ def test_proximity_matches_global_brute(spark, lattice):
                 assert exp_prox == best, key
             n_checked += 1
     assert n_checked == len(got)
+
+
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_proximity_matches_global_brute_fmts(spark, lattices, fmt):
+    test_proximity_matches_global_brute(spark, lattices[fmt], fmt)
 
 
 def test_morph_open_two_pass_composition(spark, lattice):

@@ -15,7 +15,7 @@ from rasters_spark import codec
 from rasters_spark.operators import focal, terrain
 
 from tests.test_focal import (  # noqa: F401  (spark, lattice fixtures)
-    COLS, CW, CH, H, NX, NY, W, _global_array, _lattice_rows, lattice,
+    COLS, CW, CH, FMTS, H, NX, NY, W, _global_array, _lattice_rows, lattice, lattices,
 )
 
 
@@ -47,25 +47,30 @@ def _brute_conv(g, k, normalize):
     return out
 
 
-@pytest.mark.parametrize("kernel,normalize", [
-    (focal.BINOMIAL3, True),
-    (focal.LAPLACIAN3, False),
-    (focal.BINOMIAL5, True),   # radius-2: 2-wide halo strips
-])
-def test_convolve_tiles_match_global_brute(spark, lattice, kernel, normalize):
-    want = _brute_conv(_global_array(), kernel, normalize)
-    got = _collect_tiles(focal.convolve_tiles(lattice, kernel, normalize=normalize))
+_CONV_CASES = [
+    (focal.BINOMIAL3, True, "kernel0-True"),
+    (focal.LAPLACIAN3, False, "kernel1-False"),
+    (focal.BINOMIAL5, True, "kernel2-True"),   # radius-2: 2-wide halo strips
+]
+
+
+@pytest.mark.parametrize("kernel,normalize,fmt", [
+    pytest.param(k, n, f, id=i if f == "raw" else f"{i}-{f}")
+    for f in FMTS for k, n, i in _CONV_CASES])
+def test_convolve_tiles_match_global_brute(spark, lattices, kernel, normalize, fmt):
+    want = _brute_conv(_global_array(fmt), kernel, normalize)
+    got = _collect_tiles(focal.convolve_tiles(lattices[fmt], kernel, normalize=normalize))
     for ty in range(NY):
         for tx in range(NX):
             crop = want[ty * H:(ty + 1) * H, tx * W:(tx + 1) * W]
             np.testing.assert_allclose(
                 got[f"t{ty}{tx}"], crop.astype(np.float32),
                 rtol=0, atol=1e-6, equal_nan=True,
-                err_msg=f"tile t{ty}{tx} kernel={kernel.tolist()}")
+                err_msg=f"tile t{ty}{tx} kernel={kernel.tolist()} fmt={fmt}")
 
 
-def test_convolve_stats_match_brute(spark, lattice):
-    g = _global_array()
+def test_convolve_stats_match_brute(spark, lattice, fmt="raw"):
+    g = _global_array(fmt)
     num = _brute_conv(g, focal.BINOMIAL3, normalize=False)
     rows = {r["image_id"]: r for r in focal.convolve_stats(lattice, focal.BINOMIAL3).collect()}
     for ty in range(NY):
@@ -76,6 +81,11 @@ def test_convolve_stats_match_brute(spark, lattice):
             # binomial weights are sixteenths and pixels quarter-integers
             # — the sums are exact doubles, so compare exactly
             assert r["conv_sum"] == float(np.nansum(crop))
+
+
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_convolve_stats_match_brute_fmts(spark, lattices, fmt):
+    test_convolve_stats_match_brute(spark, lattices[fmt], fmt)
 
 
 def test_kernel_validation():
@@ -109,24 +119,29 @@ def _brute_terrain(g, zf=1.0, alt=terrain.DEFAULT_ALTITUDE, az=terrain.DEFAULT_A
     return out
 
 
-def test_slope_aspect_hillshade_match_global_brute(spark, lattice):
-    want = _brute_terrain(_global_array())
+def test_slope_aspect_hillshade_match_global_brute(spark, lattice, fmt="raw"):
+    want = _brute_terrain(_global_array(fmt))
     got = {}
     for r in terrain.slope_aspect_hillshade(lattice).collect():
         ty, tx = int(r["image_id"][1]), int(r["image_id"][2])
         got[(ty * H + r["prow"], tx * W + r["pcol"])] = (
             r["slope_deg"], r["aspect_deg"], r["hillshade"])
     # interior lattice cells with complete windows must agree exactly
-    # (mind NaN aspect on flat cells)
+    # (aspect is NULL on flat cells)
     assert set(got) == set(want)
     for key, (s, a, h) in want.items():
         gs, ga, gh_ = got[key]
         assert gs == pytest.approx(s, abs=1e-12), key
         if math.isnan(a):
-            assert math.isnan(ga), key
+            assert ga is None, key
         else:
             assert ga == pytest.approx(a, abs=1e-12), key
         assert gh_ == pytest.approx(h, abs=1e-12), key
+
+
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_slope_aspect_hillshade_match_global_brute_fmts(spark, lattices, fmt):
+    test_slope_aspect_hillshade_match_global_brute(spark, lattices[fmt], fmt)
 
 
 def test_terrain_slope_direction_sanity(spark):
@@ -198,11 +213,11 @@ def test_halo_family_payload_crosses_one_exchange(spark, lattice):
     assert n_bytes_exchanges(terrain.flow_d8(lattice)) <= 1
 
 
-def test_flow_d8_matches_global_brute(spark, lattice):
+def test_flow_d8_matches_global_brute(spark, lattice, fmt="raw"):
     """D8 per cell vs per-cell Python brute force over the assembled
     global array: steepest positive drop, ties -> smallest ESRI code,
     0 on pits/flats, neighbors beyond the lattice/NaN excluded."""
-    g = _global_array()
+    g = _global_array(fmt)
     got = {(r.image_id, r.prow, r.pcol): (r.d8, r.n_down)
            for r in terrain.flow_d8(lattice).collect()}
     gh, gw = g.shape
@@ -228,6 +243,11 @@ def test_flow_d8_matches_global_brute(spark, lattice):
     assert n_checked == len(got)
 
 
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_flow_d8_matches_global_brute_fmts(spark, lattices, fmt):
+    test_flow_d8_matches_global_brute(spark, lattices[fmt], fmt)
+
+
 def test_flow_d8_pit_flat_and_tie(spark):
     # centre is a pit -> 0; uniform tile -> every cell flat -> 0;
     # symmetric ridge ties E and W at equal drop -> E (code 1 < 16) wins
@@ -244,8 +264,8 @@ def test_flow_d8_pit_flat_and_tie(spark):
     assert got[("ridge", 1, 1)] == 1  # E beats W on the code tie-break
 
 
-def test_curvature_zt_matches_global_brute(spark, lattice):
-    g = _global_array()
+def test_curvature_zt_matches_global_brute(spark, lattice, fmt="raw"):
+    g = _global_array(fmt)
     got = {(r.image_id, r.prow, r.pcol): (r.curv, r.plan_curv, r.prof_curv)
            for r in terrain.curvature_zt(lattice).collect()}
     gh, gw = g.shape
@@ -275,6 +295,11 @@ def test_curvature_zt_matches_global_brute(spark, lattice):
     assert n_checked == len(got)
 
 
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_curvature_zt_matches_global_brute_fmts(spark, lattices, fmt):
+    test_curvature_zt_matches_global_brute(spark, lattices[fmt], fmt)
+
+
 def test_curvature_flat_and_parabola(spark):
     flat = np.full((3, 3), 7.0, dtype=np.float32)
     # z = col^2 with L=1: D = 1, E = 0 -> curv = -2; ridge line is flat
@@ -293,8 +318,8 @@ def test_curvature_flat_and_parabola(spark):
     assert c == -2.0 * (((0.0 + 4.0) / 2.0 - 1.0) / 1.0)  # D = 1 -> curv -2
 
 
-def test_terrain_indices_match_global_brute(spark, lattice):
-    g = _global_array()
+def test_terrain_indices_match_global_brute(spark, lattice, fmt="raw"):
+    g = _global_array(fmt)
     got = {(r.image_id, r.prow, r.pcol): (r.tri, r.tpi, r.n_nbr)
            for r in terrain.terrain_indices(lattice).collect()}
     gh, gw = g.shape
@@ -323,6 +348,11 @@ def test_terrain_indices_match_global_brute(spark, lattice):
             assert tpi == g[gi, gj] - (ns / nn), key
             n_checked += 1
     assert n_checked == len(got)
+
+
+@pytest.mark.parametrize("fmt", FMTS[1:])
+def test_terrain_indices_match_global_brute_fmts(spark, lattices, fmt):
+    test_terrain_indices_match_global_brute(spark, lattices[fmt], fmt)
 
 
 def test_flow_accumulation_matches_path_walk(spark, lattice):
