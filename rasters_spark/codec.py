@@ -21,13 +21,13 @@ Pixel decode has two layers. Point reads decode inside the JVM
 (``operators.sample.pixel_value_sql``, hex/conv bit math, bit-exact
 against :func:`pixel_at`). Whole tiles decode through ONE shape-batched
 numpy decoder, :func:`decode_grouped`, which groups an Arrow batch by
-``(w, h, fmt)`` and decodes each group with one ``frombuffer``.
-:func:`decode_tile`, :func:`decode_tile_typed` and
-:func:`pixel_at` are the per-tile references the tests compare against.
-The focal/terrain/contour/chips stencils decode through
-:func:`decode_grouped` (``operators.focal.map_halo``);
-:func:`decode_batch` iterates :func:`decode_tile` only for the
-remaining pandas kernels (rastermath, polygonize, render, …).
+``(w, h, fmt)`` and decodes each group with one ``frombuffer``; it is
+the only whole-tile decoder, and every whole-tile operator reaches it
+through ``tiles.map_tiles`` (halo operators through
+``operators.focal.map_halo`` on top of it) or a batched kernel
+(tile_stats, resample). :func:`decode_tile`, :func:`decode_tile_typed`
+and :func:`pixel_at` are the per-tile references the tests compare
+against.
 phash is the reference-style integrity fingerprint (FIXTURES.md §1):
 sign bits of an 8×8 block-mean downsample vs. its mean.
 """
@@ -186,13 +186,6 @@ def pixel_at(data: bytes, w: int, h: int, fmt: str, row: int, col: int) -> float
         span = float(vmax - vmin) or 1.0
         return float(np.float32(vmin) + np.float32(q) / np.float32(254.0) * np.float32(span))
     raise ValueError(f"unknown fmt: {fmt}")
-
-
-def decode_batch(bytes_s, w_s, h_s, fmt_s):
-    """Iterate decoded arrays for a pandas batch of tiles (the remaining
-    pandas kernels; batched kernels use :func:`decode_grouped`)."""
-    for data, w, h, fmt in zip(bytes_s, w_s, h_s, fmt_s):
-        yield decode_tile(data, int(w), int(h), fmt)
 
 
 #: the known pixel formats, in ``decode_grouped``'s per-shape group order

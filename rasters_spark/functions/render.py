@@ -12,13 +12,11 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from rasters_spark import codec
+from rasters_spark.tiles import map_tiles
 
 # 4-stop grayscale→viridis-ish LUT (deterministic, no matplotlib)
 _LUT_STOPS = np.array([
@@ -75,28 +73,25 @@ def _apply_lut(norm: np.ndarray) -> np.ndarray:
     return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
 
 
+def _stretch_image(arr: np.ndarray, lo_pct: float, hi_pct: float, gray: bool) -> np.ndarray:
+    """The to_pillow image (raster.py:2158-2219): percentile stretch,
+    then a linear uint8 gray ramp (``gray``) or the LUT's RGB."""
+    lo = np.nanpercentile(arr, lo_pct)
+    hi = np.nanpercentile(arr, hi_pct)
+    span = (hi - lo) or 1.0
+    norm = (arr - lo) / span
+    if gray:
+        return np.clip(np.rint(np.nan_to_num(norm, nan=0.0) * 255), 0, 255).astype(np.uint8)
+    return _apply_lut(norm)
+
+
 def render_png(tiles: DataFrame, mode: str = "rgb", lo_pct: float = 2.0, hi_pct: float = 98.0) -> DataFrame:
     """raster.py:2158-2219 pipeline: percentile stretch → LUT (rgb) or
     linear gray → PNG bytes. → (image_id, png binary, w, h)."""
-    schema = "image_id string, png binary, w int, h int"
+    def kernel(arr, h, w):
+        return [encode_png(_stretch_image(arr, lo_pct, hi_pct, mode == "gray"))], [w], [h]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                lo = np.nanpercentile(arr, lo_pct)
-                hi = np.nanpercentile(arr, hi_pct)
-                span = (hi - lo) or 1.0
-                norm = (arr - lo) / span
-                if mode == "gray":
-                    img = np.clip(np.rint(np.nan_to_num(norm, nan=0.0) * 255), 0, 255).astype(np.uint8)
-                else:
-                    img = _apply_lut(norm)
-                rows.append({"image_id": pdf["image_id"].iloc[i], "png": encode_png(img),
-                             "w": int(arr.shape[1]), "h": int(arr.shape[0])})
-            yield pd.DataFrame(rows)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, "image_id string, png binary, w int, h int")
 
 
 def render_jpeg(tiles: DataFrame, mode: str = "rgb", quality: int = 95,
@@ -106,26 +101,11 @@ def render_jpeg(tiles: DataFrame, mode: str = "rgb", quality: int = 95,
     (functions/jpeg.py, pure numpy). → (image_id, jpeg binary, w, h)."""
     from rasters_spark.functions.jpeg import encode_jpeg
 
-    schema = "image_id string, jpeg binary, w int, h int"
+    def kernel(arr, h, w):
+        img = _stretch_image(arr, lo_pct, hi_pct, mode == "gray")
+        return [encode_jpeg(img, quality=quality)], [w], [h]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                lo = np.nanpercentile(arr, lo_pct)
-                hi = np.nanpercentile(arr, hi_pct)
-                span = (hi - lo) or 1.0
-                norm = (arr - lo) / span
-                if mode == "gray":
-                    img = np.clip(np.rint(np.nan_to_num(norm, nan=0.0) * 255), 0, 255).astype(np.uint8)
-                else:
-                    img = _apply_lut(norm)
-                rows.append({"image_id": pdf["image_id"].iloc[i],
-                             "jpeg": encode_jpeg(img, quality=quality),
-                             "w": int(arr.shape[1]), "h": int(arr.shape[0])})
-            yield pd.DataFrame(rows)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, "image_id string, jpeg binary, w int, h int")
 
 
 def world_file(x_origin: float, y_origin: float,
@@ -150,24 +130,14 @@ def save_geojpegs(tiles: DataFrame, out_dir: str, mode: str = "rgb",
 
     os.makedirs(out_dir, exist_ok=True)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        for pdf in batches:
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                lo = np.nanpercentile(arr, 2.0)
-                hi = np.nanpercentile(arr, 98.0)
-                span = (hi - lo) or 1.0
-                img = _apply_lut((arr - lo) / span) if mode == "rgb" else np.clip(
-                    np.rint(np.nan_to_num((arr - lo) / span, nan=0.0) * 255), 0, 255).astype(np.uint8)
-                iid = pdf["image_id"].iloc[i]
-                with open(os.path.join(out_dir, f"{iid}.jpg"), "wb") as fh:
-                    fh.write(encode_jpeg(img, quality=quality))
-                with open(os.path.join(out_dir, f"{iid}.jgw"), "w") as fh:
-                    fh.write(world_file(pdf["x_origin"].iloc[i], pdf["y_origin"].iloc[i],
-                                        pdf["cell_width"].iloc[i], pdf["cell_height"].iloc[i]))
-                n += 1
-        yield pd.DataFrame({"n": [n]})
+    def kernel(arr, h, w, iid, x0, y0, cw, ch):
+        with open(os.path.join(out_dir, f"{iid}.jpg"), "wb") as fh:
+            fh.write(encode_jpeg(_stretch_image(arr, 2.0, 98.0, mode != "rgb"),
+                                 quality=quality))
+        with open(os.path.join(out_dir, f"{iid}.jgw"), "w") as fh:
+            fh.write(world_file(x0, y0, cw, ch))
+        return ([1],)
 
-    (tiles.select("image_id", "bytes", "w", "h", "fmt",
-                  "x_origin", "y_origin", "cell_width", "cell_height")
-     .mapInPandas(run, schema="n long").agg({"n": "sum"}).collect())
+    map_tiles(tiles, kernel, "n long", keep=(),
+              meta=("image_id", "x_origin", "y_origin", "cell_width", "cell_height")
+              ).agg({"n": "sum"}).collect()

@@ -8,14 +8,12 @@ frames raster.py:1487-1492.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rasters_spark.grid import _col
+from rasters_spark.tiles import cell_rows, map_tiles
 
 
 # --- bbox accessors (bbox.py:110-248) -------------------------------------------
@@ -270,32 +268,17 @@ def pixel_centroids(tiles: DataFrame, drop_nodata: bool = True) -> DataFrame:
     """Every pixel as a value-attached point — THE raster→vector
     operator: (image_id, prow, pcol, x, y, value). One Arrow pass per
     tile; at scale this is the long-form handoff to vector joins."""
-    from rasters_spark import codec
+    def kernel(arr, hh, ww, x0, y0, cw, ch):
+        v = arr.astype(np.float64)
+        keep = np.isfinite(v) if drop_nodata else np.ones(v.shape, bool)
+        return cell_rows(keep,
+                         np.broadcast_to(x0 + cw * (np.arange(ww) + 0.5), (hh, ww)),
+                         np.broadcast_to(y0 + ch * (np.arange(hh) + 0.5)[:, None], (hh, ww)),
+                         np.where(np.isfinite(v), v, np.nan))
 
-    schema = "image_id string, prow int, pcol int, x double, y double, value double"
-    cols = tiles.select("image_id", "bytes", "w", "h", "fmt",
-                        "x_origin", "y_origin", "cell_width", "cell_height")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                hh, ww = arr.shape
-                rr, cc = np.indices((hh, ww))
-                v = arr.ravel().astype(np.float64)
-                keep = np.isfinite(v) if drop_nodata else np.ones(v.size, bool)
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rr.ravel()[keep].astype(np.int32),
-                    "pcol": cc.ravel()[keep].astype(np.int32),
-                    "x": pdf["x_origin"].iloc[i] + pdf["cell_width"].iloc[i] * (cc.ravel()[keep] + 0.5),
-                    "y": pdf["y_origin"].iloc[i] + pdf["cell_height"].iloc[i] * (rr.ravel()[keep] + 0.5),
-                    "value": np.where(np.isfinite(v[keep]), v[keep], np.nan),
-                }))
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {k: [] for k in ["image_id", "prow", "pcol", "x", "y", "value"]})
-
-    return cols.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel,
+                     "image_id string, prow int, pcol int, x double, y double, value double",
+                     meta=("x_origin", "y_origin", "cell_width", "cell_height"))
 
 
 def pixel_outlines(tiles: DataFrame, drop_nodata: bool = True) -> DataFrame:

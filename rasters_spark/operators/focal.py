@@ -32,8 +32,8 @@ Scale design (the halo-exchange pattern):
   that join (the same blessed shape as the IDW cogroup); missing
   neighbors (lattice edge, isolated tile) become NaN halo.
 - Every halo operator (here, ``terrain``, ``contour``, ``chips``) runs
-  through ONE runner, :func:`map_halo`: one mapInArrow whose batches
-  decode through ``codec.decode_grouped``; each tile is padded to
+  through ONE runner, :func:`map_halo` (the whole-tile runner
+  ``tiles.map_tiles`` over the halo payload); each tile is padded to
   (h+2r, w+2r) with its strips placed, and the operator's kernel takes
   (2r+1)² shifted adds / fmin / fmax over it — no per-pixel Python.
   With the fixtures' exactly-representable quarter-integer pixels every
@@ -49,22 +49,15 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from rasters_spark import codec
+from rasters_spark.tiles import (TILE_KEEP, TILE_SCHEMA, _arrow_types, _concat,
+                                 cell_rows, map_tiles, raw_tile)
 
 #: layout-compatibility columns: strips only flow between tiles that
 #: agree on all of these (one lattice per distinct layout).
 LAYOUT_COLS = ("crs", "cell_width", "cell_height", "w", "h")
-
-#: raster→raster halo operators keep these input columns and replace
-#: the pixels with one raw grid (``raw_tile``), giving ``TILE_SCHEMA``.
-TILE_KEEP = ("image_id", "x_origin", "y_origin", "cell_width",
-             "cell_height", "crs", "w", "h")
-TILE_SCHEMA = ("image_id string, x_origin double, y_origin double, "
-               "cell_width double, cell_height double, crs string, "
-               "w int, h int, fmt string, bytes binary")
 
 #: the 8 neighbor directions (dx → +x / east, dy → +row / "down" in
 #: the y_origin + dy·h·cell_height sense; cell_height < 0 means down
@@ -85,21 +78,6 @@ def _origin_key(col):
     ``+ 0.0`` collapses IEEE −0.0 (ty·negative-span at ty=0) onto +0.0
     so both render \"0.000000000\"."""
     return F.format_string("%.9f", col.cast("double") + F.lit(0.0))
-
-
-def _arrow_types(schema: StructType):
-    return [to_arrow_type(f.dataType) for f in schema.fields]
-
-
-def _concat(parts, typ):
-    """Per-tile column parts → one Arrow array. Numeric parts are numpy
-    arrays, the rest Python sequences; NaN becomes NULL (the pandas
-    conversion rule the Arrow kernels always had)."""
-    import pyarrow as pa
-
-    if isinstance(parts[0], np.ndarray):
-        return pa.array(np.concatenate(parts), type=typ, from_pandas=True)
-    return pa.array([v for p in parts for v in p], type=typ, from_pandas=True)
 
 
 def _strip_batch(batch, radius: int) -> dict[str, list]:
@@ -214,59 +192,16 @@ def _with_halo_payload(tiles: DataFrame, radius: int) -> DataFrame:
 def map_halo(tiles: DataFrame, radius: int, kernel, schema: str,
              keep: tuple[str, ...] = ("image_id",),
              meta: tuple[str, ...] = ()) -> DataFrame:
-    """The one halo runner: ``_with_halo_payload`` then ONE mapInArrow.
-    Each Arrow batch decodes through ``codec.decode_grouped`` (a bad
-    blob fails naming its image_id); every tile is padded by
-    ``_place_halos`` to ``pad`` (h+2r, w+2r) and handed to
-    ``kernel(pad, h, w, *meta values)``, which returns the columns of
-    ``schema`` after ``keep`` as equal-length sequences — one output
-    row per element, zero rows allowed. The ``keep`` columns lead
-    ``schema`` and are copied from the tile's input row. Rows come out
-    in input tile order."""
-    out = StructType.fromDDL(schema)
-    types = _arrow_types(out)
-    ktypes, vtypes = types[:len(keep)], types[len(keep):]
-    cols = dict.fromkeys((*keep, "image_id", "bytes", "w", "h", "fmt", "halos", *meta))
-    src = _with_halo_payload(tiles, radius).select(*cols)
+    """The one halo runner: ``_with_halo_payload`` then
+    ``tiles.map_tiles``. Every tile is padded by ``_place_halos`` to
+    ``pad`` (h+2r, w+2r) and handed to ``kernel(pad, h, w, *meta
+    values)``, which returns the non-``keep`` columns of ``schema`` as
+    ``map_tiles`` kernels do."""
+    def padded(arr, hh, ww, halos, *m):
+        return kernel(_place_halos(arr, halos, radius), hh, ww, *m)
 
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            halos = batch.column("halos").to_pylist()
-            metas = [batch.column(c).to_pylist() for c in meta]
-            got = [None] * batch.num_rows
-            for pos, ww, hh, _, pix in codec.decode_grouped(
-                    *(batch.column(c).to_numpy(zero_copy_only=False)
-                      for c in ("bytes", "w", "h", "fmt", "image_id"))):
-                for k, i in enumerate(pos):
-                    pad = _place_halos(pix[k], halos[i], radius)
-                    got[i] = kernel(pad, hh, ww, *(m[i] for m in metas))
-            rows = [i for i in range(batch.num_rows) if len(got[i][0])]
-            if not rows:
-                continue
-            take = pa.array(np.repeat(rows, [len(got[i][0]) for i in rows]))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c).take(take).cast(t) for c, t in zip(keep, ktypes)]
-                + [_concat([got[i][j] for i in rows], t) for j, t in enumerate(vtypes)],
-                names=out.names)
-
-    return src.mapInArrow(run, schema=out)
-
-
-def raw_tile(grid: np.ndarray):
-    """A raster→raster kernel's one output row (``fmt``, ``bytes``):
-    the grid as a raw float32 blob."""
-    return ["raw"], [grid.astype(np.float32).tobytes()]
-
-
-def cell_rows(mask: np.ndarray, *grids: np.ndarray):
-    """A per-cell kernel's output columns: ``prow``, ``pcol`` (int32)
-    of every ``mask`` cell in row-major order, then each grid's value
-    there."""
-    rows, cols = np.nonzero(mask)
-    return (rows.astype(np.int32), cols.astype(np.int32),
-            *(g[rows, cols] for g in grids))
+    return map_tiles(_with_halo_payload(tiles, radius), padded, schema, keep,
+                     ("halos", *meta))
 
 
 def _focal_grids(pad: np.ndarray, hh: int, ww: int, radius: int, stat: str):

@@ -32,14 +32,11 @@ entry filters the (w=64, h=48) group and the docstring of
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rasters_spark import codec
+from rasters_spark.tiles import TILE_KEEP, TILE_SCHEMA, map_tiles, raw_tile
 
 _KEY_STRIDE = 1 << 32
 
@@ -100,23 +97,36 @@ def _local_ccl(mask: np.ndarray) -> tuple[np.ndarray, int]:
     return run_id, len(parent)
 
 
-def _tile_regions(arr: np.ndarray, threshold: float, gx0: int, gy0: int):
-    """(summary, boundary) frames for one tile: summary rows
-    (node, n_pixels) keyed by the region's min global pixel key;
-    boundary rows (gx, gy, node) for masked perimeter pixels."""
+def _tile_labels(arr: np.ndarray, threshold: float, gx0: int, gy0: int):
+    """Tile-local regions of ``value >= threshold`` (compared in
+    ``arr``'s dtype): the per-pixel root run (-1 outside the mask),
+    each run's node key (the min global pixel key of its region) and
+    the pixel row/col grids."""
     h, w = arr.shape
     with np.errstate(invalid="ignore"):
         mask = np.isfinite(arr) & (arr >= threshold)
     root, n_runs = _local_ccl(mask)
-    if n_runs == 0:
-        return None, None
     jj, ii = np.meshgrid(np.arange(w, dtype=np.int64),
                          np.arange(h, dtype=np.int64))
     key = (gy0 + ii) * _KEY_STRIDE + (gx0 + jj)
     m = root >= 0
-    # min pixel key per root (node id), pixel count per root
     minkey = np.full(n_runs, np.iinfo(np.int64).max, dtype=np.int64)
     np.minimum.at(minkey, root[m], key[m])
+    return root, minkey, ii, jj
+
+
+def _tile_regions(arr: np.ndarray, threshold: float, gx0: int, gy0: int):
+    """The scan columns of one tile (row_type, gx, gy, node, n_pixels,
+    gx_min, gx_max, gy_min, gy_max): an 's' row (node, n_pixels, bbox)
+    per region keyed by its min global pixel key, then a 'b' row (gx,
+    gy, node) per masked perimeter pixel; -1 fills the other side's
+    columns."""
+    h, w = arr.shape
+    root, minkey, ii, jj = _tile_labels(arr, threshold, gx0, gy0)
+    n_runs = len(minkey)
+    if n_runs == 0:
+        return ([],) * 9
+    m = root >= 0
     counts = np.zeros(n_runs, dtype=np.int64)
     np.add.at(counts, root[m], 1)
     gxmin = np.full(n_runs, np.iinfo(np.int64).max, dtype=np.int64)
@@ -128,52 +138,25 @@ def _tile_regions(arr: np.ndarray, threshold: float, gx0: int, gy0: int):
     np.minimum.at(gymin, root[m], gy0 + ii[m])
     np.maximum.at(gymax, root[m], gy0 + ii[m])
     live = counts > 0
-    summary = pd.DataFrame({"node": minkey[live], "n_pixels": counts[live],
-                            "gx_min": gxmin[live], "gx_max": gxmax[live],
-                            "gy_min": gymin[live], "gy_max": gymax[live]})
     edge = m & ((ii == 0) | (ii == h - 1) | (jj == 0) | (jj == w - 1))
-    boundary = pd.DataFrame({
-        "gx": (gx0 + jj[edge]), "gy": (gy0 + ii[edge]),
-        "node": minkey[root[edge]]})
-    return summary, boundary
+    no_s = np.full(int(live.sum()), -1, np.int64)
+    no_b = np.full(int(edge.sum()), -1, np.int64)
+    return (["s"] * len(no_s) + ["b"] * len(no_b),
+            np.r_[no_s, gx0 + jj[edge]], np.r_[no_s, gy0 + ii[edge]],
+            np.r_[minkey[live], minkey[root[edge]]],
+            *(np.r_[g[live], no_b] for g in (counts, gxmin, gxmax, gymin, gymax)))
 
 
 def _scan(tiles: DataFrame, threshold: float) -> DataFrame:
     """One decode pass emitting the union of summary and boundary rows
     (row_type 's'/'b')."""
-    src = tiles.select("image_id", "x_origin", "y_origin", "cell_width",
-                       "cell_height", "w", "h", "fmt", "bytes")
-    schema = ("image_id string, row_type string, gx long, gy long, node long, "
-              "n_pixels long, gx_min long, gx_max long, gy_min long, gy_max long")
+    def kernel(arr, h, w, x0, y0, cw, ch):
+        return _tile_regions(arr, threshold, round(x0 / cw), round(y0 / ch))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                cw = float(pdf["cell_width"].iloc[i])
-                ch = float(pdf["cell_height"].iloc[i])
-                gx0 = round(float(pdf["x_origin"].iloc[i]) / cw)
-                gy0 = round(float(pdf["y_origin"].iloc[i]) / ch)
-                s, b = _tile_regions(arr, threshold, gx0, gy0)
-                if s is None:
-                    continue
-                iid = pdf["image_id"].iloc[i]
-                s = s.assign(image_id=iid, row_type="s", gx=-1, gy=-1)
-                b = b.assign(image_id=iid, row_type="b", n_pixels=-1,
-                             gx_min=-1, gx_max=-1, gy_min=-1, gy_max=-1)
-                cols = ["image_id", "row_type", "gx", "gy", "node", "n_pixels",
-                        "gx_min", "gx_max", "gy_min", "gy_max"]
-                frames.append(s[cols])
-                frames.append(b[cols])
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "row_type": pd.Series([], dtype=str),
-                                 **{c: pd.Series([], dtype=np.int64)
-                                    for c in ("gx", "gy", "node", "n_pixels",
-                                              "gx_min", "gx_max", "gy_min", "gy_max")}}))
-
-    return src.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel,
+                     "image_id string, row_type string, gx long, gy long, node long, "
+                     "n_pixels long, gx_min long, gx_max long, gy_min long, gy_max long",
+                     meta=("x_origin", "y_origin", "cell_width", "cell_height"))
 
 
 def _region_mapping(tiles: DataFrame, threshold: float):
@@ -223,51 +206,19 @@ def sieve(tiles: DataFrame, threshold: float, min_pixels: int) -> DataFrame:
     small = (labeled.join(totals.filter(F.col("tot") < min_pixels), "root")
              .groupBy("image_id")
              .agg(F.collect_list("node").alias("small_nodes")))
-    t = tiles.join(small, "image_id", "left")
-    src = t.select("image_id", "x_origin", "y_origin", "cell_width",
-                   "cell_height", "crs", "w", "h", "fmt", "bytes", "small_nodes")
-    schema = ", ".join(
-        ["image_id string", "x_origin double", "y_origin double",
-         "cell_width double", "cell_height double", "crs string",
-         "w int", "h int", "fmt string", "bytes binary"])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {c: [] for c in ("image_id", "x_origin", "y_origin", "cell_width",
-                                    "cell_height", "crs", "w", "h", "fmt", "bytes")}
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                arr = arr.astype(np.float64)
-                small_nodes = pdf["small_nodes"].iloc[i]
-                if small_nodes is not None and len(small_nodes):
-                    cw = float(pdf["cell_width"].iloc[i])
-                    ch = float(pdf["cell_height"].iloc[i])
-                    gx0 = round(float(pdf["x_origin"].iloc[i]) / cw)
-                    gy0 = round(float(pdf["y_origin"].iloc[i]) / ch)
-                    h, w = arr.shape
-                    with np.errstate(invalid="ignore"):
-                        mask = np.isfinite(arr) & (arr >= threshold)
-                    root, n_runs = _local_ccl(mask)
-                    if n_runs:
-                        jj, ii = np.meshgrid(np.arange(w, dtype=np.int64),
-                                             np.arange(h, dtype=np.int64))
-                        key = (gy0 + ii) * _KEY_STRIDE + (gx0 + jj)
-                        minkey = np.full(n_runs, np.iinfo(np.int64).max,
-                                         dtype=np.int64)
-                        m = root >= 0
-                        np.minimum.at(minkey, root[m], key[m])
-                        kill = np.isin(minkey,
-                                       np.asarray(list(small_nodes), dtype=np.int64))
-                        drop = m & kill[np.where(m, root, 0)]
-                        arr = np.where(drop, np.nan, arr)
-                for c in ("image_id", "x_origin", "y_origin", "cell_width",
-                          "cell_height", "crs", "w", "h"):
-                    rows[c].append(pdf[c].iloc[i])
-                rows["fmt"].append("raw")
-                rows["bytes"].append(arr.astype(np.float32).tobytes())
-            yield pd.DataFrame(rows)
+    def kernel(arr, h, w, small_nodes, x0, y0, cw, ch):
+        arr = arr.astype(np.float64)
+        if small_nodes:
+            root, minkey, _, _ = _tile_labels(arr, threshold, round(x0 / cw), round(y0 / ch))
+            m = root >= 0
+            drop = np.zeros(arr.shape, bool)
+            drop[m] = np.isin(minkey, np.asarray(small_nodes, dtype=np.int64))[root[m]]
+            arr = np.where(drop, np.nan, arr)
+        return raw_tile(arr)
 
-    return src.mapInPandas(run, schema=schema)
+    return map_tiles(tiles.join(small, "image_id", "left"), kernel, TILE_SCHEMA, TILE_KEEP,
+                     ("small_nodes", "x_origin", "y_origin", "cell_width", "cell_height"))
 
 
 def polygonize(tiles: DataFrame, threshold: float) -> DataFrame:

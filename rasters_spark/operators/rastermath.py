@@ -7,7 +7,8 @@ eager there, each allocating a full array (SURVEY §3 EP3: N ops = N
 materializations).
 
 Here a CHAIN of element-wise steps is composed into one numpy closure
-and executed in a single mapInPandas pass over the tile batch — the
+and executed as one per-tile kernel in a single ``tiles.map_tiles``
+(mapInArrow) pass over the tile batch — the
 engine-level kernel fusion Catalyst can't do across Python UDFs
 (SURVEY §4.2(3)). NaN discipline matches the reference: arithmetic
 runs under errstate(invalid='ignore') and NaN propagates
@@ -22,17 +23,23 @@ at any scale.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from rasters_spark import codec
+from rasters_spark.tiles import cell_rows, map_tiles
 
 Kernel = Callable[[np.ndarray], np.ndarray]
 
 PASSTHROUGH = ("image_id", "w", "h", "caption", "x_origin", "y_origin", "cell_width", "cell_height", "crs")
+
+#: the tile schema trim and augment_tiles emit
+_TILE_DDL = ("image_id string, bytes binary, w int, h int, fmt string, "
+             "x_origin double, y_origin double, cell_width double, "
+             "cell_height double, crs string")
 
 
 def compose(*fns: Kernel) -> Kernel:
@@ -134,23 +141,13 @@ def _out_schema(df: DataFrame) -> str:
 
 def elementwise(tiles: DataFrame, kernel: Kernel) -> DataFrame:
     """Apply a fused element-wise kernel to every tile: ONE Arrow pass."""
-    keep = [c for c in PASSTHROUGH if c in tiles.columns]
-    schema = _out_schema(tiles)
+    def run(arr, h, w):
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out = kernel(arr).astype(np.float32)
+        return [codec.encode_tile(out, "raw")], ["raw"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for arr in codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]):
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out = kernel(arr).astype(np.float32)
-                blobs.append(codec.encode_tile(out, "raw"))
-            res = pdf[keep].copy()
-            res["bytes"] = blobs
-            res["fmt"] = "raw"
-            yield res
-
-    cols = keep + ["bytes", "fmt"]
-    return tiles.select(*dict.fromkeys(cols + ["bytes", "w", "h", "fmt"])).mapInPandas(run, schema=schema)
+    return map_tiles(tiles, run, _out_schema(tiles),
+                     keep=tuple(c for c in PASSTHROUGH if c in tiles.columns))
 
 
 def astype_tiles(tiles: DataFrame, fmt: str, kernel: Kernel | None = None,
@@ -166,89 +163,61 @@ def astype_tiles(tiles: DataFrame, fmt: str, kernel: Kernel | None = None,
     (raster.py:1559-1567 narrows write-time dtypes the same way).
     ``kernel``: optional fused element-wise step applied pre-cast (e.g.
     a threshold for a bool mask) — one Arrow pass total."""
-    keep = [c for c in PASSTHROUGH if c in tiles.columns]
-    schema = _out_schema(tiles)
     if nodata_fill is None:
         nodata_fill = float(codec.I32_NODATA) if fmt == "i32" else 0.0
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for arr in codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]):
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out = kernel(arr) if kernel is not None else arr
-                if fmt in codec.INT_FMTS:
-                    out = np.where(np.isnan(out), nodata_fill, out)
-                blobs.append(codec.encode_tile(out, fmt))
-            res = pdf[keep].copy()
-            res["bytes"] = blobs
-            res["fmt"] = fmt
-            yield res
+    def run(arr, h, w):
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out = kernel(arr) if kernel is not None else arr
+        if fmt in codec.INT_FMTS:
+            out = np.where(np.isnan(out), nodata_fill, out)
+        return [codec.encode_tile(out, fmt)], [fmt]
 
-    cols = keep + ["bytes", "fmt"]
-    return tiles.select(*dict.fromkeys(cols + ["bytes", "w", "h", "fmt"])).mapInPandas(run, schema=schema)
+    return map_tiles(tiles, run, _out_schema(tiles),
+                     keep=tuple(c for c in PASSTHROUGH if c in tiles.columns))
+
+
+def _decode_b(blob, h: int, w: int, fmt: str, image_id) -> np.ndarray:
+    """Side b of a tile pair, decoded through ``codec.decode_grouped``
+    so a bad blob fails naming the pair's image_id too."""
+    return next(codec.decode_grouped([blob], [w], [h], [fmt], [image_id]))[4][0]
 
 
 def tile_binary(a: DataFrame, b: DataFrame, fn: Callable[[np.ndarray, np.ndarray], np.ndarray]) -> DataFrame:
     """Raster⊗raster element-wise op between two same-grid tile tables,
     joined on image_id (reference shape check raster.py:1921-1923)."""
-    left = a.select("image_id", "w", "h", "x_origin", "y_origin", "cell_width", "cell_height", "crs",
-                    a["bytes"].alias("bytes_a"), a["fmt"].alias("fmt_a"))
+    keep = ("image_id", "w", "h", "x_origin", "y_origin", "cell_width", "cell_height", "crs")
     right = b.select("image_id", b["bytes"].alias("bytes_b"), b["fmt"].alias("fmt_b"))
-    j = left.join(right, "image_id")
-    schema = ("image_id string, w int, h int, x_origin double, y_origin double, "
-              "cell_width double, cell_height double, crs string, bytes binary, fmt string")
+    src = a.select(*keep, "bytes", "fmt").join(right, "image_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for i in range(len(pdf)):
-                w, h = int(pdf["w"].iloc[i]), int(pdf["h"].iloc[i])
-                aa = codec.decode_tile(pdf["bytes_a"].iloc[i], w, h, pdf["fmt_a"].iloc[i])
-                bb = codec.decode_tile(pdf["bytes_b"].iloc[i], w, h, pdf["fmt_b"].iloc[i])
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    blobs.append(codec.encode_tile(fn(aa, bb).astype(np.float32), "raw"))
-            res = pdf[["image_id", "w", "h", "x_origin", "y_origin", "cell_width", "cell_height", "crs"]].copy()
-            res["bytes"] = blobs
-            res["fmt"] = "raw"
-            yield res
+    def run(arr, h, w, bytes_b, fmt_b, image_id):
+        bb = _decode_b(bytes_b, h, w, fmt_b, image_id)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            return [codec.encode_tile(fn(arr, bb).astype(np.float32), "raw")], ["raw"]
 
-    return j.mapInPandas(run, schema=schema)
+    return map_tiles(src, run, "image_id string, w int, h int, x_origin double, "
+                     "y_origin double, cell_width double, cell_height double, "
+                     "crs string, bytes binary, fmt string",
+                     keep=keep, meta=("bytes_b", "fmt_b", "image_id"))
 
 
 def trim(tiles: DataFrame) -> DataFrame:
     """raster.py:987-1004 — crop each tile to the bbox of valid data;
     origin shifts by the §1.3(2) rule. Tiles with no valid pixels drop
     (reference raises on empty; relationally they vanish)."""
-    schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-              "x_origin double, y_origin double, cell_width double, cell_height double, crs string")
+    def run(arr, h, w, x0, y0, cw, ch):
+        valid = np.isfinite(arr)
+        if not valid.any():
+            return ([],) * 6
+        rr = np.flatnonzero(valid.any(axis=1))
+        cc = np.flatnonzero(valid.any(axis=0))
+        r0, r1, c0, c1 = rr[0], rr[-1] + 1, cc[0], cc[-1] + 1
+        return ([codec.encode_tile(arr[r0:r1, c0:c1], "raw")], [int(c1 - c0)],
+                [int(r1 - r0)], ["raw"], [x0 + float(c0) * cw], [y0 + float(r0) * ch])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                valid = np.isfinite(arr)
-                if not valid.any():
-                    continue
-                rr = np.flatnonzero(valid.any(axis=1))
-                cc = np.flatnonzero(valid.any(axis=0))
-                r0, r1, c0, c1 = rr[0], rr[-1] + 1, cc[0], cc[-1] + 1
-                sub = arr[r0:r1, c0:c1]
-                rows.append({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "bytes": codec.encode_tile(sub, "raw"),
-                    "w": int(c1 - c0), "h": int(r1 - r0), "fmt": "raw",
-                    "x_origin": pdf["x_origin"].iloc[i] + float(c0) * pdf["cell_width"].iloc[i],
-                    "y_origin": pdf["y_origin"].iloc[i] + float(r0) * pdf["cell_height"].iloc[i],
-                    "cell_width": pdf["cell_width"].iloc[i],
-                    "cell_height": pdf["cell_height"].iloc[i],
-                    "crs": pdf["crs"].iloc[i],
-                })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {k: [] for k in ["image_id", "bytes", "w", "h", "fmt", "x_origin", "y_origin", "cell_width", "cell_height", "crs"]})
-
-    cols = ["image_id", "bytes", "w", "h", "fmt", "x_origin", "y_origin", "cell_width", "cell_height", "crs"]
-    return tiles.select(*cols).mapInPandas(run, schema=schema)
+    return map_tiles(tiles, run, _TILE_DDL,
+                     keep=("image_id", "cell_width", "cell_height", "crs"),
+                     meta=("x_origin", "y_origin", "cell_width", "cell_height"))
 
 
 # ---------------------------------------------------------------------------
@@ -264,8 +233,6 @@ def align_layers(a: DataFrame, b: DataFrame) -> DataFrame:
     pair, carrying ``bytes_a``/``bytes_b``. Both sides hash-shuffle on
     the skinny grid key — the payloads cross exactly one exchange
     each and meet 1:1 (no fanout)."""
-    from pyspark.sql import functions as F
-
     from rasters_spark.operators.focal import _origin_key
     keyed = lambda df: df.withColumn(  # noqa: E731
         "ox_key", _origin_key(F.col("x_origin"))).withColumn(
@@ -298,45 +265,23 @@ def layer_algebra(pairs: DataFrame, op: str = "ndiff") -> DataFrame:
     One Arrow pass; nothing but skinny doubles leaves the task."""
     if op not in _LAYER_OPS:
         raise ValueError(f"unknown layer op: {op!r} (one of {_LAYER_OPS})")
-    src = pairs.select("image_id", "w", "h", "fmt_a", "bytes_a", "fmt_b", "bytes_b")
-    schema = "image_id string, prow int, pcol int, value double"
+    src = pairs.select("image_id", "w", "h", F.col("fmt_a").alias("fmt"),
+                       F.col("bytes_a").alias("bytes"), "fmt_b", "bytes_b")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            aa = list(codec.decode_batch(pdf["bytes_a"], pdf["w"], pdf["h"], pdf["fmt_a"]))
-            bb = list(codec.decode_batch(pdf["bytes_b"], pdf["w"], pdf["h"], pdf["fmt_b"]))
-            for i in range(len(pdf)):
-                a = aa[i].astype(np.float64)
-                b = bb[i].astype(np.float64)
-                both = np.isfinite(a) & np.isfinite(b)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    if op == "ndiff":
-                        bad = (a + b) == 0.0
-                        val = np.where(bad, np.nan, (a - b) / (a + b))
-                    elif op == "diff":
-                        bad = np.zeros_like(both)
-                        val = a - b
-                    else:
-                        bad = b == 0.0
-                        val = np.where(bad, np.nan, a / b)
-                rows, cols = np.nonzero(both)
-                if rows.size == 0:
-                    continue
-                v = val[rows, cols]
-                v_null = (bad[rows, cols])
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "value": np.where(v_null, np.nan, v)}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "value": pd.Series([], dtype=float)}))
+    def run(arr, h, w, bytes_b, fmt_b, image_id):
+        a = arr.astype(np.float64)
+        b = _decode_b(bytes_b, h, w, fmt_b, image_id).astype(np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            if op == "ndiff":
+                val = np.where((a + b) == 0.0, np.nan, (a - b) / (a + b))
+            elif op == "diff":
+                val = a - b
+            else:
+                val = np.where(b == 0.0, np.nan, a / b)
+        return cell_rows(np.isfinite(a) & np.isfinite(b), val)
 
-    return src.mapInPandas(run, schema=schema)
+    return map_tiles(src, run, "image_id string, prow int, pcol int, value double",
+                     meta=("bytes_b", "fmt_b", "image_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -358,63 +303,31 @@ def augment_tiles(tiles: DataFrame, ops=_AUG_OPS) -> DataFrame:
     for op in ops:
         if op not in _AUG_OPS:
             raise ValueError(f"unknown augment op: {op!r} (one of {_AUG_OPS})")
-    cols = ["image_id", "bytes", "w", "h", "fmt", "x_origin", "y_origin",
-            "cell_width", "cell_height", "crs"]
-    src = tiles.select(*cols)
-    schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-              "x_origin double, y_origin double, cell_width double, "
-              "cell_height double, crs string")
+    def flip(a, op):
+        if op in ("hflip", "rot180"):
+            a = a[:, ::-1]
+        if op in ("vflip", "rot180"):
+            a = a[::-1, :]
+        return codec.encode_tile(np.ascontiguousarray(a, dtype=np.float32), "raw")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                for op in ops:
-                    a = arr
-                    if op in ("hflip", "rot180"):
-                        a = a[:, ::-1]
-                    if op in ("vflip", "rot180"):
-                        a = a[::-1, :]
-                    out["image_id"].append(f"{pdf['image_id'].iloc[i]}:{op}")
-                    out["bytes"].append(
-                        codec.encode_tile(np.ascontiguousarray(a, dtype=np.float32), "raw"))
-                    out["fmt"].append("raw")
-                    for c in ("w", "h", "x_origin", "y_origin",
-                              "cell_width", "cell_height", "crs"):
-                        out[c].append(pdf[c].iloc[i])
-            yield pd.DataFrame(out)
+    def run(arr, h, w, image_id):
+        return ([f"{image_id}:{op}" for op in ops], [flip(arr, op) for op in ops],
+                ["raw"] * len(ops))
 
-    return src.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, run, _TILE_DDL,
+                     keep=("w", "h", "x_origin", "y_origin", "cell_width", "cell_height", "crs"),
+                     meta=("image_id",))
 
 
 def pixels_of(tiles: DataFrame) -> DataFrame:
     """Decode tiles to skinny per-pixel rows (image_id, prow, pcol,
     value) — NaN → NULL at the boundary. The export/debug face of the
     codec; map-only."""
-    src = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    schema = "image_id string, prow int, pcol int, value double"
+    def run(arr, h, w):
+        v = arr.astype(np.float64)
+        return cell_rows(np.ones((h, w), bool), np.where(np.isfinite(v), v, np.nan))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                v = arr.astype(np.float64).ravel()
-                rr, cc = np.divmod(np.arange(hh * ww, dtype=np.int64), ww)
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rr.astype(np.int32),
-                    "pcol": cc.astype(np.int32),
-                    "value": np.where(np.isfinite(v), v, np.nan)}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "value": pd.Series([], dtype=float)}))
-
-    return src.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, run, "image_id string, prow int, pcol int, value double")
 
 
 def reclassify(breaks, classes) -> Kernel:

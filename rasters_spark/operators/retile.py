@@ -22,16 +22,11 @@ pure arithmetic.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from rasters_spark import codec
-
-_COLS = ("image_id", "x_origin", "y_origin", "cell_width", "cell_height",
-         "crs", "w", "h", "fmt", "bytes")
+from rasters_spark.tiles import TILE_SCHEMA, map_tiles
 
 
 def retile_split(tiles: DataFrame, factor: int) -> DataFrame:
@@ -42,44 +37,20 @@ def retile_split(tiles: DataFrame, factor: int) -> DataFrame:
     if factor < 1:
         raise ValueError("factor must be >= 1")
     f = int(factor)
-    src = tiles.select(*_COLS)
-    schema = ", ".join(
-        ["image_id string", "x_origin double", "y_origin double",
-         "cell_width double", "cell_height double", "crs string",
-         "w int", "h int", "fmt string", "bytes binary"])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {c: [] for c in _COLS}
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                if hh % f or ww % f:
-                    raise ValueError(
-                        f"tile {pdf['image_id'].iloc[i]} is {ww}x{hh}: "
-                        f"not divisible by factor {f}")
-                cw = float(pdf["cell_width"].iloc[i])
-                ch = float(pdf["cell_height"].iloc[i])
-                x0 = float(pdf["x_origin"].iloc[i])
-                y0 = float(pdf["y_origin"].iloc[i])
-                fmt = pdf["fmt"].iloc[i]
-                cwd, chd = ww // f, hh // f
-                for ci in range(f):
-                    for cj in range(f):
-                        sub = np.ascontiguousarray(
-                            arr[ci * chd:(ci + 1) * chd, cj * cwd:(cj + 1) * cwd])
-                        rows["image_id"].append(
-                            f"{pdf['image_id'].iloc[i]}_{ci}_{cj}")
-                        rows["x_origin"].append(x0 + cj * (ww / f) * cw)
-                        rows["y_origin"].append(y0 + ci * (hh / f) * ch)
-                        rows["cell_width"].append(cw)
-                        rows["cell_height"].append(ch)
-                        rows["crs"].append(pdf["crs"].iloc[i])
-                        rows["w"].append(cwd)
-                        rows["h"].append(chd)
-                        rows["fmt"].append(fmt)
-                        rows["bytes"].append(
-                            codec.encode_tile(sub.astype(np.float32), fmt))
-            yield pd.DataFrame(rows)
+    def kernel(arr, hh, ww, iid, fmt, x0, y0, cw, ch):
+        if hh % f or ww % f:
+            raise ValueError(f"tile {iid} is {ww}x{hh}: not divisible by factor {f}")
+        cwd, chd = ww // f, hh // f
+        kids = [(ci, cj) for ci in range(f) for cj in range(f)]
+        return ([f"{iid}_{ci}_{cj}" for ci, cj in kids],
+                [x0 + cj * (ww / f) * cw for _, cj in kids],
+                [y0 + ci * (hh / f) * ch for ci, _ in kids],
+                [cwd] * len(kids), [chd] * len(kids),
+                [codec.encode_tile(np.ascontiguousarray(
+                    arr[ci * chd:(ci + 1) * chd, cj * cwd:(cj + 1) * cwd]).astype(np.float32), fmt)
+                 for ci, cj in kids])
 
-    return src.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, TILE_SCHEMA,
+                     keep=("cell_width", "cell_height", "crs", "fmt"),
+                     meta=("image_id", "fmt", "x_origin", "y_origin", "cell_width", "cell_height"))

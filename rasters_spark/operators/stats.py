@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasters_spark import codec
+from rasters_spark.tiles import cell_rows, map_tiles
 
 TILE_STATS_SCHEMA = (
     "image_id string, n_pixels long, n_valid long, vsum double, vmin double, vmax double"
@@ -91,29 +92,20 @@ def stretch_params(tiles: DataFrame, lo_pct: float = 2.0, hi_pct: float = 98.0) 
     fixup nor the lo+frac·(hi−lo) form matches it at inexact
     fractions), so the oracle hash-matches bit-for-bit.
     """
-    schema = "image_id string, lo double, hi double, n_valid long"
+    def kernel(arr, h, w):
+        v = np.sort(arr[np.isfinite(arr)].astype(np.float64))
+        if len(v) == 0:
+            return [np.nan], [np.nan], [0]
+        out = []
+        for q in (lo_pct / 100.0, hi_pct / 100.0):
+            pos = (len(v) - 1) * q
+            loi = int(np.floor(pos))
+            hii = int(np.ceil(pos))
+            frac = pos - loi
+            out.append(float(v[loi] * (1.0 - frac) + v[hii] * frac))
+        return [out[0]], [out[1]], [len(v)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                v = np.sort(arr[np.isfinite(arr)].astype(np.float64))
-                if len(v) == 0:
-                    rows.append({"image_id": pdf["image_id"].iloc[i],
-                                 "lo": None, "hi": None, "n_valid": 0})
-                    continue
-                out = []
-                for q in (lo_pct / 100.0, hi_pct / 100.0):
-                    pos = (len(v) - 1) * q
-                    loi = int(np.floor(pos))
-                    hii = int(np.ceil(pos))
-                    frac = pos - loi
-                    out.append(float(v[loi] * (1.0 - frac) + v[hii] * frac))
-                rows.append({"image_id": pdf["image_id"].iloc[i],
-                             "lo": out[0], "hi": out[1], "n_valid": len(v)})
-            yield pd.DataFrame(rows)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, "image_id string, lo double, hi double, n_valid long")
 
 
 def tile_unique_values(tiles: DataFrame, few_threshold: int = 10) -> DataFrame:
@@ -121,23 +113,19 @@ def tile_unique_values(tiles: DataFrame, few_threshold: int = 10) -> DataFrame:
     exact per-tile distinct count of finite pixel values + the
     ``< 10`` few-values flag that switches the reference's rendering
     mode. → (image_id, n_unique, few_values)."""
-    schema = "image_id string, n_unique long, few_values boolean"
+    def kernel(arr, h, w):
+        n = int(len(np.unique(arr[np.isfinite(arr)])))
+        return [n], [n < few_threshold]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                n = int(len(np.unique(arr[np.isfinite(arr)])))
-                rows.append({"image_id": pdf["image_id"].iloc[i],
-                             "n_unique": n, "few_values": n < few_threshold})
-            yield pd.DataFrame(rows)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, "image_id string, n_unique long, few_values boolean")
 
 
 ZONAL_PARTIAL_SCHEMA = (
     "poly_id long, n_valid long, vsum double, vmin double, vmax double"
 )
+
+#: the georeferencing meta columns the zonal kernels read
+_ORIGIN = ("x_origin", "y_origin", "cell_width", "cell_height")
 
 
 def zonal_stats(tiles: DataFrame, polygons: DataFrame, level: int | None = None) -> DataFrame:
@@ -168,65 +156,15 @@ def zonal_stats(tiles: DataFrame, polygons: DataFrame, level: int | None = None)
     needs the cell-join variant — out of scope while the engine's
     polygon sources are dim tables.
     """
-    from rasters_spark.operators.joins import _ring_xy, ray_cast_inside
+    bc = _broadcast_zones(tiles, polygons)
 
-    zrows = polygons.select("poly_id", "xmin", "ymin", "xmax", "ymax", "ring").collect()
-    zones = []
-    for r in zrows:
-        rx, ry = _ring_xy(r.ring)
-        zones.append((int(r.poly_id), float(r.xmin), float(r.ymin),
-                      float(r.xmax), float(r.ymax), rx, ry))
-    zxmin = np.array([z[1] for z in zones])
-    zymin = np.array([z[2] for z in zones])
-    zxmax = np.array([z[3] for z in zones])
-    zymax = np.array([z[4] for z in zones])
-    bc = tiles.sparkSession.sparkContext.broadcast((zones, zxmin, zymin, zxmax, zymax))
+    def kernel(arr, h, w, x0, y0, cw, ch):
+        hits = list(_zone_values(bc.value, arr, h, w, x0, y0, cw, ch))
+        return ([p for p, _ in hits], [len(v) for _, v in hits],
+                [float(v.sum()) for _, v in hits], [float(v.min()) for _, v in hits],
+                [float(v.max()) for _, v in hits])
 
-    payload = tiles.select("image_id", "bytes", "w", "h", "fmt",
-                           "x_origin", "y_origin", "cell_width", "cell_height")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zs, bxmin, bymin, bxmax, bymax = bc.value
-        for pdf in batches:
-            rows = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                h, w = arr.shape
-                x0 = pdf["x_origin"].iloc[i]
-                y0 = pdf["y_origin"].iloc[i]
-                cw = pdf["cell_width"].iloc[i]
-                ch = pdf["cell_height"].iloc[i]
-                txmin, txmax = x0, x0 + cw * w
-                tymax, tymin = y0, y0 + ch * h  # north-up: ch < 0
-                hit = np.flatnonzero((bxmin < txmax) & (bxmax > txmin)
-                                     & (bymin < tymax) & (bymax > tymin))
-                if len(hit) == 0:
-                    continue
-                xs = x0 + cw * (np.arange(w, dtype=np.float64) + 0.5)
-                ys = y0 + ch * (np.arange(h, dtype=np.float64) + 0.5)
-                gx = np.broadcast_to(xs, (h, w)).ravel()
-                gy = np.repeat(ys, w)
-                vals = arr.ravel()
-                finite = np.isfinite(vals)
-                for zi in hit:
-                    poly_id, xmn, ymn, xmx, ymx, rx, ry = zs[zi]
-                    # half-open bbox window first (cheap), exact
-                    # ray-cast only on the survivors
-                    m = (finite & (gx >= xmn) & (gx < xmx)
-                         & (gy >= ymn) & (gy < ymx))
-                    idx_ = np.flatnonzero(m)
-                    if len(idx_) == 0:
-                        continue
-                    keep = ray_cast_inside(gx[idx_], gy[idx_], rx, ry)
-                    sel = idx_[keep]
-                    if len(sel) == 0:
-                        continue
-                    v = vals[sel].astype(np.float64)
-                    rows.append({"poly_id": poly_id, "n_valid": len(sel),
-                                 "vsum": float(v.sum()),
-                                 "vmin": float(v.min()), "vmax": float(v.max())})
-            yield pd.DataFrame(rows, columns=["poly_id", "n_valid", "vsum", "vmin", "vmax"])
-
-    partial = payload.mapInPandas(run, schema=ZONAL_PARTIAL_SCHEMA)
+    partial = map_tiles(tiles, kernel, ZONAL_PARTIAL_SCHEMA, keep=(), meta=_ORIGIN)
     return (partial.groupBy("poly_id").agg(
         F.sum("n_valid").alias("n_valid"),
         F.sum("vsum").alias("vsum"),
@@ -250,21 +188,15 @@ def histogram(tiles: DataFrame, lo: float, hi: float, nbins: int) -> DataFrame:
     if nbins <= 0 or not hi > lo:
         raise ValueError("need hi > lo and nbins > 0")
     wbin = (hi - lo) / nbins
-    src = tiles.select("bytes", "w", "h", "fmt")
-    schema = "bin long, n_pixels long"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            acc = np.zeros(nbins, dtype=np.int64)
-            for arr in codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]):
-                v = arr[np.isfinite(arr)].astype(np.float64)
-                b = np.floor((v - lo) / wbin)
-                b = b[(b >= 0) & (b < nbins)].astype(np.int64)
-                acc += np.bincount(b, minlength=nbins)
-            nz = np.nonzero(acc)[0]
-            yield pd.DataFrame({"bin": nz.astype(np.int64), "n_pixels": acc[nz]})
+    def kernel(arr, h, w):
+        v = arr[np.isfinite(arr)].astype(np.float64)
+        b = np.floor((v - lo) / wbin)
+        acc = np.bincount(b[(b >= 0) & (b < nbins)].astype(np.int64), minlength=nbins)
+        nz = np.flatnonzero(acc)
+        return nz, acc[nz]
 
-    partials = src.mapInPandas(run, schema=schema)
+    partials = map_tiles(tiles, kernel, "bin long, n_pixels long", keep=())
     return partials.groupBy("bin").agg(F.sum("n_pixels").alias("n_pixels"))
 
 
@@ -291,34 +223,22 @@ def qa_flags_stats(tiles: DataFrame, bits: dict | None = None,
     bits = QA_BITS if bits is None else bits
     if mask_flag not in bits:
         raise ValueError(f"mask_flag {mask_flag!r} not in bits {sorted(bits)}")
-    cols = tiles.select("image_id", "bytes", "w", "h", "fmt")
     names = sorted(bits)
     schema = ("image_id string, n_valid long, "
               + ", ".join(f"n_{f} long" for f in names)
               + ", n_clear long, clear_vsum double")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                                    ["image_id", "n_valid", *[f"n_{f}" for f in names],
-                                     "n_clear", "clear_vsum"]}
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                v = arr.astype(np.float64)
-                valid = np.isfinite(v)
-                qa = np.zeros(v.shape, dtype=np.int64)
-                qa[valid] = np.floor(v[valid] * scale).astype(np.int64)
-                out["image_id"].append(pdf["image_id"].iloc[i])
-                out["n_valid"].append(int(valid.sum()))
-                for f in names:
-                    flag = ((qa >> bits[f]) & 1).astype(bool) & valid
-                    out[f"n_{f}"].append(int(flag.sum()))
-                clear = valid & ~(((qa >> bits[mask_flag]) & 1).astype(bool))
-                out["n_clear"].append(int(clear.sum()))
-                out["clear_vsum"].append(float(v[clear].sum()) if clear.any() else 0.0)
-            yield pd.DataFrame(out)
+    def kernel(arr, h, w):
+        v = arr.astype(np.float64)
+        valid = np.isfinite(v)
+        qa = np.zeros(v.shape, dtype=np.int64)
+        qa[valid] = np.floor(v[valid] * scale).astype(np.int64)
+        flags = [int((((qa >> bits[f]) & 1).astype(bool) & valid).sum()) for f in names]
+        clear = valid & ~(((qa >> bits[mask_flag]) & 1).astype(bool))
+        return ([int(valid.sum())], *([n] for n in flags), [int(clear.sum())],
+                [float(v[clear].sum()) if clear.any() else 0.0])
 
-    return cols.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, schema)
 
 
 def equalize_lut(tiles: DataFrame) -> DataFrame:
@@ -331,35 +251,15 @@ def equalize_lut(tiles: DataFrame) -> DataFrame:
     the output skinny and lets the relational twin certify the FULL
     cumulative distribution (a wrong sort order or a dropped value
     shifts every later rank). ONE map-only Arrow pass."""
-    cols = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    schema = ("image_id string, value double, n_at long, cum long, cdf double")
+    def kernel(arr, h, w):
+        v = arr.astype(np.float64).ravel()
+        uniq, counts = np.unique(v[np.isfinite(v)], return_counts=True)
+        cum = np.cumsum(counts)
+        return (uniq, counts.astype(np.int64), cum.astype(np.int64),
+                cum.astype(np.float64) / float(counts.sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                v = arr.astype(np.float64).ravel()
-                v = v[np.isfinite(v)]
-                if v.size == 0:
-                    continue
-                uniq, counts = np.unique(v, return_counts=True)
-                cum = np.cumsum(counts)
-                n = float(v.size)
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "value": uniq,
-                    "n_at": counts.astype(np.int64),
-                    "cum": cum.astype(np.int64),
-                    "cdf": cum.astype(np.float64) / n}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "value": pd.Series([], dtype=float),
-                                 "n_at": pd.Series([], dtype=np.int64),
-                                 "cum": pd.Series([], dtype=np.int64),
-                                 "cdf": pd.Series([], dtype=float)}))
-
-    return cols.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel,
+                     "image_id string, value double, n_at long, cum long, cdf double")
 
 
 def zonal_quantiles(tiles: DataFrame, polygons: DataFrame,
@@ -380,8 +280,6 @@ def zonal_quantiles(tiles: DataFrame, polygons: DataFrame,
     needs t-digest-style sketches — this operator is exact where
     pixel values are quantized (q8/i32/b1 always; fixture raw too)."""
     from pyspark.sql import Window
-
-    from rasters_spark.operators.joins import _ring_xy, ray_cast_inside
 
     hist = _zonal_value_counts(tiles, polygons)
     w = Window.partitionBy("poly_id").orderBy("value")
@@ -420,35 +318,15 @@ def integral_image(tiles: DataFrame) -> DataFrame:
     independently). Quarter-integer pixels keep every prefix sum
     EXACT in double, so the twin's two chained cumulative windows
     match bit-for-bit. ONE map-only Arrow pass (two np.cumsum)."""
-    cols = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    schema = ("image_id string, prow int, pcol int, sat double, nsat long")
+    def kernel(arr, h, w):
+        v = arr.astype(np.float64)
+        m = np.isfinite(v)
+        sat = np.where(m, v, 0.0).cumsum(axis=0).cumsum(axis=1)
+        nsat = m.astype(np.int64).cumsum(axis=0).cumsum(axis=1)
+        return cell_rows(np.ones((h, w), bool), sat, nsat)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            arrs = codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
-            for i, arr in enumerate(arrs):
-                hh, ww = arr.shape
-                v = arr.astype(np.float64)
-                m = np.isfinite(v)
-                vz = np.where(m, v, 0.0)
-                sat = vz.cumsum(axis=0).cumsum(axis=1)
-                nsat = m.astype(np.int64).cumsum(axis=0).cumsum(axis=1)
-                rr, cc = np.divmod(np.arange(hh * ww, dtype=np.int64), ww)
-                frames.append(pd.DataFrame({
-                    "image_id": pdf["image_id"].iloc[i],
-                    "prow": rr.astype(np.int32),
-                    "pcol": cc.astype(np.int32),
-                    "sat": sat.ravel(),
-                    "nsat": nsat.ravel()}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"image_id": pd.Series([], dtype=str),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "sat": pd.Series([], dtype=float),
-                                 "nsat": pd.Series([], dtype=np.int64)}))
-
-    return cols.mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel,
+                     "image_id string, prow int, pcol int, sat double, nsat long")
 
 
 def zonal_mode(tiles: DataFrame, polygons: DataFrame) -> DataFrame:
@@ -473,64 +351,64 @@ def zonal_mode(tiles: DataFrame, polygons: DataFrame) -> DataFrame:
 def _zonal_value_counts(tiles: DataFrame, polygons: DataFrame) -> DataFrame:
     """(poly_id, value, cnt) — the shared per-zone value-histogram
     partial pass (broadcast zones, map-only; see zonal_quantiles)."""
-    from rasters_spark.operators.joins import _ring_xy, ray_cast_inside
+    bc = _broadcast_zones(tiles, polygons)
 
-    zrows = polygons.select("poly_id", "xmin", "ymin", "xmax", "ymax", "ring").collect()
+    def kernel(arr, h, w, x0, y0, cw, ch):
+        pid, val, cnt = [np.empty(0, np.int64)], [np.empty(0)], [np.empty(0, np.int64)]
+        for p, v in _zone_values(bc.value, arr, h, w, x0, y0, cw, ch):
+            uniq, counts = np.unique(v, return_counts=True)
+            pid.append(np.full(len(uniq), p, np.int64))
+            val.append(uniq)
+            cnt.append(counts)
+        return np.concatenate(pid), np.concatenate(val), np.concatenate(cnt)
+
+    partial = map_tiles(tiles, kernel, "poly_id long, value double, cnt long",
+                        keep=(), meta=_ORIGIN)
+    return partial.groupBy("poly_id", "value").agg(F.sum("cnt").alias("cnt"))
+
+
+def _broadcast_zones(tiles: DataFrame, polygons: DataFrame):
+    """Collect the zone DIM table once and ship it as a Spark broadcast
+    variable: (zones, xmin, ymin, xmax, ymax) with each zone
+    ``(poly_id, xmin, ymin, xmax, ymax, ring xs, ring ys)``."""
+    from rasters_spark.operators.joins import _ring_xy
+
     zones = []
-    for r in zrows:
+    for r in polygons.select("poly_id", "xmin", "ymin", "xmax", "ymax", "ring").collect():
         rx, ry = _ring_xy(r.ring)
         zones.append((int(r.poly_id), float(r.xmin), float(r.ymin),
                       float(r.xmax), float(r.ymax), rx, ry))
-    zxmin = np.array([z[1] for z in zones])
-    zymin = np.array([z[2] for z in zones])
-    zxmax = np.array([z[3] for z in zones])
-    zymax = np.array([z[4] for z in zones])
-    bc = tiles.sparkSession.sparkContext.broadcast((zones, zxmin, zymin, zxmax, zymax))
-    payload = tiles.select("image_id", "bytes", "w", "h", "fmt",
-                           "x_origin", "y_origin", "cell_width", "cell_height")
+    return tiles.sparkSession.sparkContext.broadcast(
+        (zones, *(np.array([z[k] for z in zones]) for k in (1, 2, 3, 4))))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zs, bxmin, bymin, bxmax, bymax = bc.value
-        for pdf in batches:
-            frames = []
-            for i, arr in enumerate(codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])):
-                h, w = arr.shape
-                x0 = pdf["x_origin"].iloc[i]
-                y0 = pdf["y_origin"].iloc[i]
-                cw = pdf["cell_width"].iloc[i]
-                ch = pdf["cell_height"].iloc[i]
-                txmin, txmax = x0, x0 + cw * w
-                tymax, tymin = y0, y0 + ch * h
-                hit = np.flatnonzero((bxmin < txmax) & (bxmax > txmin)
-                                     & (bymin < tymax) & (bymax > tymin))
-                if len(hit) == 0:
-                    continue
-                xs = x0 + cw * (np.arange(w, dtype=np.float64) + 0.5)
-                ys = y0 + ch * (np.arange(h, dtype=np.float64) + 0.5)
-                gx = np.broadcast_to(xs, (h, w)).ravel()
-                gy = np.repeat(ys, w)
-                vals = arr.ravel()
-                finite = np.isfinite(vals)
-                for zi in hit:
-                    poly_id, xmn, ymn, xmx, ymx, rx, ry = zs[zi]
-                    m = (finite & (gx >= xmn) & (gx < xmx)
-                         & (gy >= ymn) & (gy < ymx))
-                    idx_ = np.flatnonzero(m)
-                    if len(idx_) == 0:
-                        continue
-                    keep = ray_cast_inside(gx[idx_], gy[idx_], rx, ry)
-                    sel = idx_[keep]
-                    if len(sel) == 0:
-                        continue
-                    uniq, counts = np.unique(vals[sel].astype(np.float64),
-                                             return_counts=True)
-                    frames.append(pd.DataFrame({
-                        "poly_id": poly_id, "value": uniq,
-                        "cnt": counts.astype(np.int64)}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame({"poly_id": pd.Series([], dtype=np.int64),
-                                 "value": pd.Series([], dtype=float),
-                                 "cnt": pd.Series([], dtype=np.int64)}))
 
-    partial = payload.mapInPandas(run, schema="poly_id long, value double, cnt long")
-    return partial.groupBy("poly_id", "value").agg(F.sum("cnt").alias("cnt"))
+def _zone_values(zones, arr, h, w, x0, y0, cw, ch):
+    """Yield ``(poly_id, values)`` — the finite pixel values (float64)
+    whose CENTROID lies inside each zone the tile touches: one
+    vectorized bbox-overlap test prunes the zones, the half-open bbox
+    window selects cheaply, and the exact ray-cast runs only on the
+    window's survivors. Zones selecting no pixel are skipped."""
+    from rasters_spark.operators.joins import ray_cast_inside
+
+    zs, bxmin, bymin, bxmax, bymax = zones
+    txmin, txmax = x0, x0 + cw * w
+    tymax, tymin = y0, y0 + ch * h  # north-up: ch < 0
+    hit = np.flatnonzero((bxmin < txmax) & (bxmax > txmin)
+                         & (bymin < tymax) & (bymax > tymin))
+    if len(hit) == 0:
+        return
+    xs = x0 + cw * (np.arange(w, dtype=np.float64) + 0.5)
+    ys = y0 + ch * (np.arange(h, dtype=np.float64) + 0.5)
+    gx = np.broadcast_to(xs, (h, w)).ravel()
+    gy = np.repeat(ys, w)
+    vals = arr.ravel()
+    finite = np.isfinite(vals)
+    for zi in hit:
+        poly_id, xmn, ymn, xmx, ymx, rx, ry = zs[zi]
+        idx = np.flatnonzero(finite & (gx >= xmn) & (gx < xmx)
+                             & (gy >= ymn) & (gy < ymx))
+        if len(idx) == 0:
+            continue
+        sel = idx[ray_cast_inside(gx[idx], gy[idx], rx, ry)]
+        if len(sel):
+            yield poly_id, vals[sel].astype(np.float64)

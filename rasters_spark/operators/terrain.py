@@ -38,8 +38,8 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame
 
-from rasters_spark.operators.focal import (TILE_KEEP, TILE_SCHEMA, cell_rows,
-                                           map_halo, raw_tile)
+from rasters_spark.operators.focal import map_halo
+from rasters_spark.tiles import TILE_KEEP, TILE_SCHEMA, cell_rows, raw_tile
 
 #: default illumination (the GDAL/ESRI hillshade defaults).
 DEFAULT_ALTITUDE = 45.0

@@ -152,17 +152,42 @@ def test_focal_tiles_i32_above_2_24_crosses_seams_exactly(spark):
                                           err_msg=f"tile t{ty}{tx}")
 
 
-@pytest.mark.parametrize("op", ["focal_tiles", "slope_aspect_hillshade"])
+#: one operator per whole-tile module; ``layer_algebra`` truncates its
+#: b side, which decodes apart from the runner's own batch decode
+TRUNCATED_OPS = ["focal_tiles", "slope_aspect_hillshade", "stretch_params", "histogram",
+                 "zonal_stats", "elementwise", "layer_algebra", "trim", "polygonize",
+                 "retile_split", "render_png", "pixel_centroids"]
+
+
+@pytest.mark.parametrize("op", TRUNCATED_OPS)
 def test_truncated_blob_fails_naming_its_image_id(spark, op):
     """A short blob must fail with its image_id in the error, not a bare
     numpy buffer error."""
-    from rasters_spark.operators import terrain
+    from rasters_spark.functions import render, vector
+    from rasters_spark.operators import polygonize, rastermath, retile, stats, terrain
 
     rows = _lattice_rows()
     rows[4] = (rows[4][0], rows[4][1][:-4], *rows[4][2:])
     df = spark.createDataFrame(rows, COLS)
+    good = spark.createDataFrame(_lattice_rows(), COLS)
+    zone = [{"x": x, "y": y} for x, y in ((0.0, -2.0), (3.0, -2.0), (3.0, 0.0), (0.0, -2.0))]
+    zones = spark.createDataFrame(
+        [(1, 0.0, -2.0, 3.0, 0.0, zone)],
+        "poly_id long, xmin double, ymin double, xmax double, ymax double, "
+        "ring array<struct<x:double,y:double>>")
     run = {"focal_tiles": focal.focal_tiles,
-           "slope_aspect_hillshade": terrain.slope_aspect_hillshade}[op]
+           "slope_aspect_hillshade": terrain.slope_aspect_hillshade,
+           "stretch_params": stats.stretch_params,
+           "histogram": lambda t: stats.histogram(t, 0.0, 10.0, 4),
+           "zonal_stats": lambda t: stats.zonal_stats(t, zones),
+           "elementwise": lambda t: rastermath.elementwise(t, rastermath.add(1.0)),
+           "layer_algebra": lambda t: rastermath.layer_algebra(
+               rastermath.align_layers(good, t)),
+           "trim": rastermath.trim,
+           "polygonize": lambda t: polygonize.polygonize(t, 5.0),
+           "retile_split": lambda t: retile.retile_split(t, 2),
+           "render_png": render.render_png,
+           "pixel_centroids": vector.pixel_centroids}[op]
     with pytest.raises(Exception, match=f"image_id '{rows[4][0]}'"):
         run(df).collect()
 

@@ -8,8 +8,83 @@ from rasters_spark import codec
 from rasters_spark.operators import rastermath, stats
 
 from tests.test_focal import (  # noqa: F401
-    COLS, CW, CH, H, NX, NY, W, _global_array, _values, lattice,
+    COLS, CW, CH, FMTS, H, NX, NY, W, _global_array, _lattice_rows, _values,
+    lattice,
 )
+from tests.test_resample import _plan_nodes
+
+
+def _with_empty_tile(spark, fmt):
+    """The test lattice in ``fmt`` plus one all-nodata tile (b1 has no
+    nodata, so its extra tile is all zeros) → (df, {image_id: pixels})."""
+    rows = _lattice_rows(fmt)
+    empty = np.full((H, W), np.nan)
+    if fmt == "i32":
+        empty[:] = codec.I32_NODATA
+    elif fmt == "b1":
+        empty[:] = 0
+    rows.append(("empty", codec.encode_tile(empty, fmt), W, H, fmt, "EPSG:4326",
+                 -10.0, 0.0, CW, CH))
+    return (spark.createDataFrame(rows, COLS),
+            {r[0]: codec.decode_tile(r[1], W, H, fmt) for r in rows})
+
+
+@pytest.mark.parametrize("fmt", FMTS)
+def test_stretch_params_match_numpy(spark, fmt):
+    """Per-tile lo/hi are the sorted finite pixels interpolated as
+    ``v[lo]·(1−f) + v[hi]·f`` (np.percentile's linear method up to its
+    lerp rounding); an all-nodata tile gives NULL lo/hi and n_valid 0."""
+    df, tiles = _with_empty_tile(spark, fmt)
+    got = {r.image_id: r for r in stats.stretch_params(df, 5.0, 90.0).collect()}
+    assert set(got) == set(tiles)
+    for iid, arr in tiles.items():
+        v = np.sort(arr[np.isfinite(arr)].astype(np.float64))
+        r = got[iid]
+        assert r.n_valid == len(v), iid
+        if len(v) == 0:
+            assert r.lo is None and r.hi is None, iid
+            continue
+        for q, val in ((0.05, r.lo), (0.90, r.hi)):
+            p = (len(v) - 1) * q
+            f = p - np.floor(p)
+            assert val == v[int(np.floor(p))] * (1.0 - f) + v[int(np.ceil(p))] * f, iid
+            assert val == pytest.approx(np.percentile(v, 100 * q), rel=1e-12), iid
+
+
+@pytest.mark.parametrize("fmt", FMTS)
+def test_tile_unique_values_match_numpy(spark, fmt):
+    df, tiles = _with_empty_tile(spark, fmt)
+    for thr in (10, 3):
+        got = {r.image_id: (r.n_unique, r.few_values)
+               for r in stats.tile_unique_values(df, thr).collect()}
+        want = {}
+        for iid, arr in tiles.items():
+            n = len(np.unique(arr[np.isfinite(arr)]))
+            want[iid] = (n, n < thr)
+        assert got == want
+
+
+@pytest.mark.parametrize("op", ["elementwise", "stretch_params", "zonal_stats",
+                                "layer_algebra", "pixel_centroids"])
+def test_whole_tile_operators_plan_is_one_map_in_arrow(spark, lattice, op):
+    """Whole-tile operators run on the one mapInArrow runner: a
+    MapInArrow node, and neither a pandas map nor a Python UDF."""
+    from rasters_spark.functions import vector
+
+    zones = spark.createDataFrame(
+        [(1, 0.0, -2.0, 3.0, 0.0, [{"x": 0.0, "y": -2.0}, {"x": 3.0, "y": 0.0},
+                                   {"x": 0.0, "y": 0.0}, {"x": 0.0, "y": -2.0}])],
+        "poly_id long, xmin double, ymin double, xmax double, ymax double, "
+        "ring array<struct<x:double,y:double>>")
+    df = {"elementwise": lambda: rastermath.elementwise(lattice, rastermath.mul(2.0)),
+          "stretch_params": lambda: stats.stretch_params(lattice),
+          "zonal_stats": lambda: stats.zonal_stats(lattice, zones),
+          "layer_algebra": lambda: rastermath.layer_algebra(
+              rastermath.align_layers(lattice, lattice)),
+          "pixel_centroids": lambda: vector.pixel_centroids(lattice)}[op]()
+    names = [name for name, _ in _plan_nodes(df)]
+    assert any("MapInArrow" in n for n in names), names
+    assert not any("MapInPandas" in n or "ArrowEvalPython" in n for n in names), names
 
 
 def test_histogram_matches_numpy(spark, lattice):

@@ -170,11 +170,7 @@ def test_zonal_stats_triangle_vs_numpy(spark):
     n = 0
     vs = []
     for r in rows:
-        arr = next(iter(codec.decode_batch(
-            __import__("pandas").Series([r.bytes]),
-            __import__("pandas").Series([r.w]),
-            __import__("pandas").Series([r.h]),
-            __import__("pandas").Series([r.fmt]))))
+        arr = codec.decode_tile(r.bytes, r.w, r.h, r.fmt)
         h, w = arr.shape
         xs = r.x_origin + r.cell_width * (np.arange(w) + 0.5)
         ys = r.y_origin + r.cell_height * (np.arange(h) + 0.5)
