@@ -33,7 +33,8 @@ def retile_split(tiles: DataFrame, factor: int) -> DataFrame:
     """Split every tile into ``factor``×``factor`` children (tile
     dims must divide evenly — loud error otherwise). Returns the same
     tile schema; children are encoded with the PARENT's fmt (q8
-    re-quantizes per child; raw/i32/b1 are lossless crops)."""
+    re-quantizes per child; raw/i32/b1 are lossless crops, i32 nodata
+    included)."""
     if factor < 1:
         raise ValueError("factor must be >= 1")
     f = int(factor)
@@ -41,6 +42,10 @@ def retile_split(tiles: DataFrame, factor: int) -> DataFrame:
     def kernel(arr, hh, ww, iid, fmt, x0, y0, cw, ch):
         if hh % f or ww % f:
             raise ValueError(f"tile {iid} is {ww}x{hh}: not divisible by factor {f}")
+        if fmt == "i32":
+            # the float64 decode holds every int32 exactly; put the
+            # nodata sentinel back where it surfaced as NaN
+            arr = np.where(np.isnan(arr), codec.I32_NODATA, arr)
         cwd, chd = ww // f, hh // f
         kids = [(ci, cj) for ci in range(f) for cj in range(f)]
         return ([f"{iid}_{ci}_{cj}" for ci, cj in kids],
@@ -48,7 +53,7 @@ def retile_split(tiles: DataFrame, factor: int) -> DataFrame:
                 [y0 + ci * (hh / f) * ch for ci, _ in kids],
                 [cwd] * len(kids), [chd] * len(kids),
                 [codec.encode_tile(np.ascontiguousarray(
-                    arr[ci * chd:(ci + 1) * chd, cj * cwd:(cj + 1) * cwd]).astype(np.float32), fmt)
+                    arr[ci * chd:(ci + 1) * chd, cj * cwd:(cj + 1) * cwd]), fmt)
                  for ci, cj in kids])
 
     return map_tiles(tiles, kernel, TILE_SCHEMA,

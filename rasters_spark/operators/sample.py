@@ -389,22 +389,21 @@ def sample_idw(joined: DataFrame, tiles: DataFrame | None = None,
             name_of = {n: flat.type.get_field_index(n) for n in out_cols}
             qx_all = flat.field(name_of["x"]).to_numpy(zero_copy_only=False)
             qy_all = flat.field(name_of["y"]).to_numpy(zero_copy_only=False)
-            col = {c: batch.column(batch.schema.get_field_index(c))
-                   for c in ("bytes", "w", "h", "fmt",
-                             "x_origin", "y_origin", "cell_width", "cell_height")}
+            col = {c: batch.column(batch.schema.get_field_index(c)).to_numpy(zero_copy_only=False)
+                   for c in _TILE_PAYLOAD}
+            # every row holds >= 1 matched point: its first names the tile
+            ids = flat.field(name_of["image_id"]).take(
+                pa.array(starts[:-1])).to_numpy(zero_copy_only=False)
             vals = np.empty(len(flat), dtype=np.float64)
-            for i in range(len(rows_col)):
-                s, e2 = starts[i], starts[i + 1]
-                arr = codec.decode_tile(col["bytes"][i].as_py(),
-                                        col["w"][i].as_py(), col["h"][i].as_py(),
-                                        col["fmt"][i].as_py())
-                vals[s:e2] = _idw_tile(
-                    arr,
-                    {"x_origin": col["x_origin"][i].as_py(),
-                     "y_origin": col["y_origin"][i].as_py(),
-                     "cell_width": col["cell_width"][i].as_py(),
-                     "cell_height": col["cell_height"][i].as_py()},
-                    qx_all[s:e2], qy_all[s:e2], power)
+            for pos, _w, _h, _fmt, px in codec.decode_grouped(
+                    col["bytes"], col["w"], col["h"], col["fmt"], ids):
+                for k, i in enumerate(pos):
+                    s, e2 = starts[i], starts[i + 1]
+                    vals[s:e2] = _idw_tile(
+                        px[k],
+                        {c: col[c][i] for c in
+                         ("x_origin", "y_origin", "cell_width", "cell_height")},
+                        qx_all[s:e2], qy_all[s:e2], power)
             arrays = [flat.field(name_of[c]) for c in out_cols]
             arrays.append(pa.array(vals, type=pa.float64(), from_pandas=True))
             yield pa.RecordBatch.from_arrays(arrays, names=out_cols + [value_name])

@@ -5,6 +5,17 @@ what we'd ship on a real cluster via ``spark-submit --py-files``:
 AQE (runtime re-plan + skew-join splitting) is load-bearing for the
 skewed-cell distributions required by the north rule, and Arrow is the
 transport for every pixel kernel.
+
+The Python workers run under the ``rasters_spark.pyworker`` daemon
+module (``spark.python.daemon.module``). On Python 3.11 each task's
+``importlib.invalidate_caches()`` re-reads every zip archive on the
+worker path (``pyspark.zip`` a dozen times, the 5,359-entry spark-core
+jar twice), about 0.2 s per task before any kernel runs; the daemon
+module installs a guard that re-reads only archives whose inode, size
+or mtime changed. Python 3.12 fixed this upstream
+(https://github.com/python/cpython/issues/103200). The workers must be
+able to import the package at daemon start, which is what the
+PYTHONPATH export below (or ``--py-files`` on a cluster) provides.
 """
 
 from __future__ import annotations
@@ -53,6 +64,8 @@ def get_spark(
     builder = (
         builder
         .config("spark.executorEnv.PYTHONPATH", pythonpath)
+        # skips the per-task zip directory re-reads (see module docstring)
+        .config("spark.python.daemon.module", "rasters_spark.pyworker")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

@@ -156,7 +156,7 @@ def test_focal_tiles_i32_above_2_24_crosses_seams_exactly(spark):
 #: b side, which decodes apart from the runner's own batch decode
 TRUNCATED_OPS = ["focal_tiles", "slope_aspect_hillshade", "stretch_params", "histogram",
                  "zonal_stats", "elementwise", "layer_algebra", "trim", "polygonize",
-                 "retile_split", "render_png", "pixel_centroids"]
+                 "retile_split", "render_png", "pixel_centroids", "sample_idw"]
 
 
 @pytest.mark.parametrize("op", TRUNCATED_OPS)
@@ -164,7 +164,9 @@ def test_truncated_blob_fails_naming_its_image_id(spark, op):
     """A short blob must fail with its image_id in the error, not a bare
     numpy buffer error."""
     from rasters_spark.functions import render, vector
-    from rasters_spark.operators import polygonize, rastermath, retile, stats, terrain
+    from rasters_spark.operators import (
+        point_join, polygonize, rastermath, retile, sample, stats, terrain)
+    from rasters_spark.tiles import tiles_with_cells, with_grid
 
     rows = _lattice_rows()
     rows[4] = (rows[4][0], rows[4][1][:-4], *rows[4][2:])
@@ -175,6 +177,10 @@ def test_truncated_blob_fails_naming_its_image_id(spark, op):
         [(1, 0.0, -2.0, 3.0, 0.0, zone)],
         "poly_id long, xmin double, ymin double, xmax double, ymax double, "
         "ring array<struct<x:double,y:double>>")
+    # one point inside every lattice tile
+    points = spark.createDataFrame(
+        [(ty * NX + tx, (tx + 0.5) * W * CW, (ty + 0.5) * H * CH)
+         for ty in range(NY) for tx in range(NX)], "point_id long, x double, y double")
     run = {"focal_tiles": focal.focal_tiles,
            "slope_aspect_hillshade": terrain.slope_aspect_hillshade,
            "stretch_params": stats.stretch_params,
@@ -187,7 +193,9 @@ def test_truncated_blob_fails_naming_its_image_id(spark, op):
            "polygonize": lambda t: polygonize.polygonize(t, 5.0),
            "retile_split": lambda t: retile.retile_split(t, 2),
            "render_png": render.render_png,
-           "pixel_centroids": vector.pixel_centroids}[op]
+           "pixel_centroids": vector.pixel_centroids,
+           "sample_idw": lambda t: sample.sample_idw(
+               point_join.point_in_tile_join(points, tiles_with_cells(with_grid(t))))}[op]
     with pytest.raises(Exception, match=f"image_id '{rows[4][0]}'"):
         run(df).collect()
 

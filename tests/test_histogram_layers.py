@@ -177,6 +177,35 @@ def test_retile_split_roundtrip(spark, lattice):
                     assert (k.w, k.h) == (W // 2, H // 2)
 
 
+def test_retile_split_i32_keeps_nodata_and_exact_values(spark):
+    """i32 children are exact int32 crops of the parent: the nodata
+    sentinel survives and values above 2**24 (not exact in float32)
+    come back unrounded."""
+    from rasters_spark.operators import retile
+
+    parents = {}
+    rows = []
+    for ty in range(NY):
+        for tx in range(NX):
+            v = _values(tx, ty)
+            a = np.where(np.isnan(v), codec.I32_NODATA, v * 4 + 2**24 + 1).astype(np.int32)
+            a[0, 0] = codec.I32_NODATA
+            parents[f"t{ty}{tx}"] = a
+            rows.append((f"t{ty}{tx}", codec.encode_tile(a, "i32"), W, H, "i32",
+                         "EPSG:4326", tx * W * CW, ty * H * CH, CW, CH))
+    kids = {r.image_id: r for r in
+            retile.retile_split(spark.createDataFrame(rows, COLS), 2).collect()}
+    assert len(kids) == NX * NY * 4
+    for iid, a in parents.items():
+        for ci in range(2):
+            for cj in range(2):
+                k = kids[f"{iid}_{ci}_{cj}"]
+                assert k.fmt == "i32"
+                np.testing.assert_array_equal(
+                    codec.decode_tile_typed(k.bytes, k.w, k.h, k.fmt),
+                    a[ci * 2:(ci + 1) * 2, cj * 2:(cj + 1) * 2])
+
+
 def test_retile_split_indivisible_raises(spark, lattice):
     from rasters_spark.operators import retile
 
