@@ -11,11 +11,12 @@ plans over DataFrames of image tiles:
 - spatial predicates reduce to equi-joins on hierarchical cell ids
   (``cells.py``) with residual refinement, broadcast for small sides;
 - point reads decode in the JVM; whole-tile pixel kernels run as
-  ``mapInArrow`` stages over ``codec.decode_grouped`` — per-tile numpy
-  kernels through the one runner ``tiles.map_tiles`` (halo operators
-  through ``operators.focal.map_halo`` on top of it), the batched
-  resample and ``tile_stats`` kernels per decode group — no per-row
-  Python anywhere (``codec.py``, ``tiles.py``, ``operators/``).
+  ``mapInArrow`` stages over ``codec.decode_grouped`` through the one
+  runner ``tiles.map_groups`` — the resample, ``tile_stats`` and focal
+  strip kernels once per (w, h, fmt) decode group, the rest per tile
+  through ``tiles.map_tiles`` (halo operators through
+  ``operators.focal.map_halo`` on top of it) — no per-row Python
+  anywhere (``codec.py``, ``tiles.py``, ``operators/``).
 """
 
 __version__ = "0.1.0"

@@ -23,9 +23,12 @@ against :func:`pixel_at`). Whole tiles decode through ONE shape-batched
 numpy decoder, :func:`decode_grouped`, which groups an Arrow batch by
 ``(w, h, fmt)`` and decodes each group with one ``frombuffer``; it is
 the only whole-tile decoder, and every whole-tile operator reaches it
+through the one runner ``tiles.map_groups`` — with a kernel per decode
+group (resample, tile_stats, the focal strip cutter) or per tile
 through ``tiles.map_tiles`` (halo operators through
-``operators.focal.map_halo`` on top of it) or a batched kernel
-(tile_stats, resample). :func:`decode_tile`, :func:`decode_tile_typed`
+``operators.focal.map_halo``); only ``sample.sample_idw`` (point-struct
+rows) and ``rastermath._decode_b`` (the second tile of a pair) call it
+directly. :func:`decode_tile`, :func:`decode_tile_typed`
 and :func:`pixel_at` are the per-tile references the tests compare
 against.
 phash is the reference-style integrity fingerprint (FIXTURES.md §1):

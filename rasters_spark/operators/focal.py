@@ -49,11 +49,9 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from rasters_spark import codec
-from rasters_spark.tiles import (TILE_KEEP, TILE_SCHEMA, _arrow_types, _concat,
-                                 cell_rows, map_tiles, raw_tile)
+from rasters_spark.tiles import (TILE_KEEP, TILE_SCHEMA, cell_rows, map_groups,
+                                 map_tiles, raw_tile)
 
 #: layout-compatibility columns: strips only flow between tiles that
 #: agree on all of these (one lattice per distinct layout).
@@ -80,63 +78,40 @@ def _origin_key(col):
     return F.format_string("%.9f", col.cast("double") + F.lit(0.0))
 
 
-def _strip_batch(batch, radius: int) -> dict[str, list]:
-    """Cut the 8 r-wide edge slabs of every tile in an Arrow batch, one
-    ``codec.decode_grouped`` group at a time; rows are addressed to the
-    neighbor origin they belong to. Strips ship as ``<f8`` so every
-    decoded value crosses the seam exactly (an i32 pixel above 2**24
-    does not survive float32)."""
-    col = {c: batch.column(c).to_numpy(zero_copy_only=False)
-           for c in ("image_id", "bytes", "w", "h", "fmt", "crs",
-                     "x_origin", "y_origin", "cell_width", "cell_height")}
+def _edge_strips(tiles: DataFrame, radius: int) -> DataFrame:
+    """Skinny strip table: one row per (tile, direction), addressed by
+    the neighbor's printf-quantized origin. O(perimeter·r) bytes per
+    tile — the only payload-derived data that crosses the strip join.
+    A group kernel on ``map_groups`` cuts the 8 r-wide edge slabs of a
+    whole decode group at once. Strips ship as ``<f8`` so every decoded
+    value crosses the seam exactly (an i32 pixel above 2**24 does not
+    survive float32)."""
     r = radius
-    out: dict[str, list] = {}
-    for pos, ww, hh, _, pix in codec.decode_grouped(
-            col["bytes"], col["w"], col["h"], col["fmt"], col["image_id"]):
+    d = np.array(_DIRS)
+
+    def kernel(pos, pix, hh, ww, x0, y0, cw, ch):
         if r > min(ww, hh):
             # a window wider than a tile needs strips from tiles ≥2
             # steps away (multi-ring exchange) — out of scope, loudly
             raise ValueError(
                 f"focal radius {r} exceeds tile extent {ww}x{hh}; "
                 f"halo exchange covers radius <= min(w, h)")
-        cw, ch = col["cell_width"][pos], col["cell_height"][pos]
-        x0, y0 = col["x_origin"][pos], col["y_origin"][pos]
-        m = len(pos)
+        x0, y0, cw, ch = (v.to_numpy(zero_copy_only=False) for v in (x0, y0, cw, ch))
+        strips, size = [], []
         for dx, dy in _DIRS:
             cols = slice(0, r) if dx < 0 else slice(ww - r, ww) if dx > 0 else slice(0, ww)
             rows = slice(0, r) if dy < 0 else slice(hh - r, hh) if dy > 0 else slice(0, hh)
             sl = np.ascontiguousarray(pix[:, rows, cols], dtype="<f8")
-            for k, v in (("crs", col["crs"][pos]), ("cell_width", cw),
-                         ("cell_height", ch), ("w", np.full(m, ww)),
-                         ("h", np.full(m, hh)), ("nbr_ox", x0 + dx * (ww * cw)),
-                         ("nbr_oy", y0 + dy * (hh * ch)), ("dx", np.full(m, dx)),
-                         ("dy", np.full(m, dy)), ("sw", np.full(m, sl.shape[2])),
-                         ("sh", np.full(m, sl.shape[1])),
-                         ("strip", [s.tobytes() for s in sl])):
-                out.setdefault(k, []).append(v)
-    return out
+            strips += [s.tobytes() for s in sl]
+            size.append(sl.shape[1:])
+        m = len(pos)
+        sh, sw = np.repeat(size, m, axis=0).T
+        return (np.tile(pos, len(_DIRS)),
+                (x0 + d[:, :1] * (ww * cw)).ravel(), (y0 + d[:, 1:] * (hh * ch)).ravel(),
+                np.repeat(d[:, 0], m), np.repeat(d[:, 1], m), sw, sh, strips)
 
-
-def _edge_strips(tiles: DataFrame, radius: int) -> DataFrame:
-    """Skinny strip table: one row per (tile, direction), addressed by
-    the neighbor's printf-quantized origin. O(perimeter·r) bytes per
-    tile — the only payload-derived data that crosses the strip join."""
-    src = tiles.select("image_id", "bytes", "w", "h", "fmt", "crs",
-                       "x_origin", "y_origin", "cell_width", "cell_height")
-    schema = StructType.fromDDL(_STRIP_SCHEMA)
-    types = _arrow_types(schema)
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            out = _strip_batch(batch, radius)
-            if out:
-                yield pa.RecordBatch.from_arrays(
-                    [_concat(out[k], t) for k, t in zip(schema.names, types)],
-                    names=schema.names)
-
-    return src.mapInArrow(run, schema=schema)
+    return map_groups(tiles, kernel, _STRIP_SCHEMA, LAYOUT_COLS,
+                      ("x_origin", "y_origin", "cell_width", "cell_height"))
 
 
 def _halos(tiles: DataFrame, radius: int) -> DataFrame:

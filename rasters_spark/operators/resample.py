@@ -19,9 +19,10 @@ Spark shape (SURVEY §3 EP2): target-cell candidates are generated per
 tile by PURE SQL (window_for_bbox + sequence/explode — no KD-tree, no
 Python) with nearest values fetched O(1) per candidate by the JVM
 decode (merge_mean, to_grid_nearest), or — for the kernels that read
-several pixels or feed a composite — by ``_tile_candidates``, which
-decodes each tile once in numpy and derives the same candidates with
-the same expression order (conv taps, composites); composites are
+several pixels or feed a composite — by ``_tile_candidates``, a group
+kernel on ``tiles.map_groups`` (each tile decodes once) that derives
+the same candidates in numpy with the same expression order (conv
+taps, composites); composites are
 plain hash aggregations with map-side combine. The persisted candidate
 mapping (image_id, trow, tcol, prow, pcol) IS the reference's reusable
 KDTree index (kdtree.py:182-202) — write it once with TableIO and
@@ -33,15 +34,14 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from rasters_spark import codec, grid
+from rasters_spark import grid
 from rasters_spark.operators.sample import sample_nearest
+from rasters_spark.tiles import map_groups
 
 
-#: the tile columns the whole-tile numpy kernels read
-_PAYLOAD = ("image_id", "bytes", "w", "h", "fmt",
-            "x_origin", "y_origin", "cell_width", "cell_height")
+#: the georeferencing columns the whole-tile numpy kernels read
+_ORIGIN = ("x_origin", "y_origin", "cell_width", "cell_height")
 
 
 def target_candidates(tiles: DataFrame, target: dict) -> DataFrame:
@@ -85,24 +85,23 @@ def target_candidates(tiles: DataFrame, target: dict) -> DataFrame:
     return cand
 
 
-def _tile_candidates(batch, target: dict):
-    """``target_candidates`` for one Arrow batch of tiles, in numpy:
-    each blob decodes once (``codec.decode_grouped``) and its target
-    cells are derived with the SQL expression order of
+def _tile_candidates(h: int, w: int, x0, y0, cw, ch, target: dict):
+    """``target_candidates`` for one decode group of ``h``×``w`` tiles
+    with origins ``x0``/``y0`` and cells ``cw``/``ch``, in numpy: the
+    target cells are derived with the SQL expression order of
     ``target_candidates`` — bbox ``x0 + cw·w`` / ``y0 + ch·h``; window
     ``rint((v − t0)/tc − 0.5)`` (+1 at the end), the ``oob`` test, then
     the clamps; centres ``t0 + tc·(i + 0.5)``; source position
     ``f = (t − x0)/cw − 0.5`` with ``rint(f)`` in bounds — so the
     candidate set is bit-identical.
 
-    Yields per (w, h, fmt) group ``(pos, k, trow, tcol, prow, pcol, fr,
-    fc, pixels)``: ``pos`` are the group's batch rows, ``pixels`` their
-    ``(m, h, w)`` decode, and candidate ``n`` is tile ``pos[k[n]]`` ×
-    target cell ``(trow[n], tcol[n])`` at fractional source position
-    ``(fr[n], fc[n])``, nearest pixel ``(prow[n], pcol[n])``. A group's
-    windows differ in size (±1, or clamped at the grid edge), so they
-    are padded to the largest one and masked."""
-    col = {c: batch.column(c).to_numpy(zero_copy_only=False) for c in _PAYLOAD}
+    Returns ``(k, trow, tcol, prow, pcol, fr, fc)``: candidate ``n`` is
+    the group's tile ``k[n]`` × target cell ``(trow[n], tcol[n])`` at
+    fractional source position ``(fr[n], fc[n])``, nearest pixel
+    ``(prow[n], pcol[n])``. A group's windows differ in size (±1, or
+    clamped at the grid edge), so they are padded to the largest one
+    and masked."""
+    x0, y0, cw, ch = (np.asarray(v, np.float64) for v in (x0, y0, cw, ch))
     tx0, ty0 = float(target["x_origin"]), float(target["y_origin"])
     tcw, tch = float(target["cell_width"]), float(target["cell_height"])
     rows, cols = int(target["rows"]), int(target["cols"])
@@ -110,72 +109,53 @@ def _tile_candidates(batch, target: dict):
     def index(v, t0, tc):
         return np.rint((v - t0) / tc - 0.5).astype(np.int64)
 
-    for pos, w, h, _, pix in codec.decode_grouped(
-            col["bytes"], col["w"], col["h"], col["fmt"], col["image_id"]):
-        x0, y0, cw, ch = (col[c][pos].astype(np.float64) for c in
-                          ("x_origin", "y_origin", "cell_width", "cell_height"))
-        rs, cs = index(y0, ty0, tch), index(x0, tx0, tcw)
-        rend = index(y0 + ch * float(h), ty0, tch) + 1
-        cend = index(x0 + cw * float(w), tx0, tcw) + 1
-        oob = (rend < 0) | (cend < 0) | (rs > rows) | (cs > cols)
-        rs, cs = np.maximum(rs, 0), np.maximum(cs, 0)
-        nr = np.where(oob, 0, np.minimum(rend, rows) - rs)
-        nc = np.where(oob, 0, np.minimum(cend, cols) - cs)
-        if nr.max() <= 0 or nc.max() <= 0:
-            continue
-        k, a, b = np.nonzero((np.arange(nr.max()) < nr[:, None])[:, :, None]
-                             & (np.arange(nc.max()) < nc[:, None])[:, None, :])
-        trow, tcol = rs[k] + a, cs[k] + b
-        fr = (ty0 + tch * (trow + 0.5) - y0[k]) / ch[k] - 0.5
-        fc = (tx0 + tcw * (tcol + 0.5) - x0[k]) / cw[k] - 0.5
-        prow, pcol = np.rint(fr).astype(np.int64), np.rint(fc).astype(np.int64)
-        ok = (prow >= 0) & (prow < h) & (pcol >= 0) & (pcol < w)
-        yield (pos, k[ok], trow[ok], tcol[ok], prow[ok], pcol[ok],
-               fr[ok], fc[ok], pix)
+    rs, cs = index(y0, ty0, tch), index(x0, tx0, tcw)
+    rend = index(y0 + ch * float(h), ty0, tch) + 1
+    cend = index(x0 + cw * float(w), tx0, tcw) + 1
+    oob = (rend < 0) | (cend < 0) | (rs > rows) | (cs > cols)
+    rs, cs = np.maximum(rs, 0), np.maximum(cs, 0)
+    nr = np.where(oob, 0, np.minimum(rend, rows) - rs)
+    nc = np.where(oob, 0, np.minimum(cend, cols) - cs)
+    k, a, b = np.nonzero((np.arange(nr.max()) < nr[:, None])[:, :, None]
+                         & (np.arange(nc.max()) < nc[:, None])[:, None, :])
+    trow, tcol = rs[k] + a, cs[k] + b
+    fr = (ty0 + tch * (trow + 0.5) - y0[k]) / ch[k] - 0.5
+    fc = (tx0 + tcw * (tcol + 0.5) - x0[k]) / cw[k] - 0.5
+    prow, pcol = np.rint(fr).astype(np.int64), np.rint(fc).astype(np.int64)
+    ok = (prow >= 0) & (prow < h) & (pcol >= 0) & (pcol < w)
+    return k[ok], trow[ok], tcol[ok], prow[ok], pcol[ok], fr[ok], fc[ok]
 
 
-def _map_candidates(tiles: DataFrame, target: dict, value_fn,
-                    keep: tuple[str, ...] = ("image_id",),
-                    drop_null: bool = False) -> DataFrame:
-    """One mapInArrow pass over ``tiles`` → (``keep``…, trow, tcol,
-    value): every ``_tile_candidates`` group goes through
-    ``value_fn(pixels, k, prow, pcol, fr, fc) -> (value, null)`` and
-    ``value`` is NULL exactly where ``null`` is set (rows dropped
-    instead with ``drop_null``). Blobs enter Python once per tile; only
-    skinny candidate rows come out, so nothing fans a blob out and the
-    map is a codegen boundary for any aggregate above it."""
+def _map_candidates(tiles: DataFrame, target: dict, value_fn) -> DataFrame:
+    """(image_id, trow, tcol, value) per ``_tile_candidates`` candidate,
+    a group kernel on ``tiles.map_groups``: ``value_fn(pixels, k, prow,
+    pcol, fr, fc)`` gives every candidate's value, NaN coming out NULL.
+    Blobs enter Python once per tile; only skinny candidate rows come
+    out, so nothing fans a blob out and the map is a codegen boundary
+    for any aggregate above it."""
+    def kernel(pos, pix, h, w, *origin):
+        k, trow, tcol, *at = _tile_candidates(h, w, *origin, target)
+        return pos[k], trow, tcol, value_fn(pix, k, *at)
+
+    return map_groups(tiles, kernel, "image_id string, trow long, tcol long, value double",
+                      meta=_ORIGIN)
+
+
+def _valid_nearest(tiles: DataFrame, target: dict,
+                   keep: tuple[str, ...] = ("image_id",)) -> DataFrame:
+    """(``keep``…, trow, tcol, value): the nearest pixel of every
+    candidate that is not nodata — the composites' observations. The
+    nodata candidates are dropped in the kernel, never shipped."""
+    def kernel(pos, pix, h, w, *origin):
+        k, trow, tcol, prow, pcol, _, _ = _tile_candidates(h, w, *origin, target)
+        v = pix[k, prow, pcol].astype(np.float64)
+        ok = ~np.isnan(v)
+        return pos[k[ok]], trow[ok], tcol[ok], v[ok]
+
     keep = tuple(dict.fromkeys(keep))
-    out_schema = StructType(
-        [tiles.schema[c] for c in keep]
-        + [StructField("trow", LongType()), StructField("tcol", LongType()),
-           StructField("value", DoubleType())])
-
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            for pos, k, trow, tcol, prow, pcol, fr, fc, pix in _tile_candidates(batch, target):
-                val, null = value_fn(pix, k, prow, pcol, fr, fc)
-                rows = pos[k]
-                if drop_null:
-                    rows, trow, tcol, val, null = (
-                        x[~null] for x in (rows, trow, tcol, val, null))
-                if len(rows) == 0:
-                    continue
-                take = pa.array(rows)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(c).take(take) for c in keep]
-                    + [pa.array(trow), pa.array(tcol),
-                       pa.array(val, type=pa.float64(), mask=null)],
-                    names=out_schema.names)
-
-    return tiles.select(*dict.fromkeys(_PAYLOAD + keep)).mapInArrow(run, schema=out_schema)
-
-
-def _nearest_np(pix, k, prow, pcol, fr, fc):
-    """Nearest pixel of each candidate; NaN (nodata) → null."""
-    v = pix[k, prow, pcol].astype(np.float64)
-    return v, np.isnan(v)
+    schema = ", ".join([f"{c} {tiles.schema[c].dataType.simpleString()}" for c in keep]
+                       + ["trow long", "tcol long", "value double"])
+    return map_groups(tiles, kernel, schema, keep, _ORIGIN)
 
 
 def merge_mean(tiles: DataFrame, target: dict,
@@ -192,8 +172,7 @@ def merge_mean(tiles: DataFrame, target: dict,
 def mosaic_first(tiles: DataFrame, target: dict, order_col: str = "image_id") -> DataFrame:
     """mosaic(): first-non-NaN in input order per target cell
     → (trow, tcol, value)."""
-    v = _map_candidates(tiles, target, _nearest_np, keep=("image_id", order_col),
-                        drop_null=True)
+    v = _valid_nearest(tiles, target, keep=("image_id", order_col))
     return v.groupBy("trow", "tcol").agg(F.min_by("value", order_col).alias("value"))
 
 
@@ -222,8 +201,7 @@ def composite_max(tiles: DataFrame, target: dict, epoch_expr=None,
     min(epoch)) agrees bit-for-bit."""
     if epoch_expr is None:
         epoch_expr = F.expr("cast(substring(image_id, 4, 12) as bigint) % 3")
-    v = _map_candidates(tiles, target, _nearest_np, drop_null=True).withColumn(
-        "epoch", epoch_expr)
+    v = _valid_nearest(tiles, target).withColumn("epoch", epoch_expr)
     out = v.groupBy("trow", "tcol").agg(
         F.max(F.struct(F.col("value").alias("v"),
                        (-F.col("epoch")).alias("ne"))).alias("b"),
@@ -324,13 +302,10 @@ def to_grid_conv(tiles: DataFrame, target: dict, resampling: str = "linear") -> 
         env = {"dr": fr - r0, "dc": fc - c0}
         rr = {i: np.clip(r0.astype(np.int64) + i, 0, h - 1) for i in taps}
         cc = {j: np.clip(c0.astype(np.int64) + j, 0, w - 1) for j in taps}
-        null = np.zeros(len(k), dtype=bool)
         for i in taps:
             for j in taps:
-                v = pix[k, rr[i], cc[j]].astype(np.float64)
-                null |= np.isnan(v)
-                env[f"v_{_lbl(i)}_{_lbl(j)}"] = v
-        return eval(blend, {"__builtins__": {}}, env), null
+                env[f"v_{_lbl(i)}_{_lbl(j)}"] = pix[k, rr[i], cc[j]].astype(np.float64)
+        return eval(blend, {"__builtins__": {}}, env)
 
     return _map_candidates(tiles, target, conv)
 
@@ -387,75 +362,60 @@ def _segment_stat(key: np.ndarray, val: np.ndarray, stat: str):
     return keys, out, counts
 
 
-def _batch_cell_values(batch, target: dict):
-    """Vectorized source-pixel → target-cell routing for a WHOLE Arrow
-    batch (round-6: the former per-tile Python loop — meshgrid +
+def _cell_values(pos, pix, x0, y0, cw, ch, target: dict):
+    """Vectorized source-pixel → target-cell routing for one decode
+    group (round-6: the former per-tile Python loop — meshgrid +
     index_point + masks per 16-64px tile — was ~60% of to_grid_med's
     wall at 20k tiles; fixture shapes cycle through 9 (w,h) combos, so
     batching by shape vectorizes ~all of it away).
 
-    Yields per ``codec.decode_grouped`` (w, h, fmt) group
-    ``(gkey, vals)``: ``gkey`` is the GLOBAL int64 segment key
-    ``row·(rows·cols) + trow·cols + tcol`` (``row`` the batch row) and
-    ``vals`` the finite, in-bounds pixel values (float64) in C scan
-    order per tile — the same per-segment element ORDER as the
-    per-tile loop, so every downstream reduction stays bit-identical.
-    """
-    col = {c: batch.column(c).to_numpy(zero_copy_only=False) for c in _PAYLOAD}
+    Returns ``(gkey, vals)``: ``gkey`` is the GLOBAL int64 segment key
+    ``row·(rows·cols) + trow·cols + tcol`` (``row`` the batch row from
+    ``pos``) and ``vals`` the finite, in-bounds pixel values (float64)
+    in C scan order per tile — the same per-segment element ORDER as
+    the per-tile loop, so every downstream reduction stays
+    bit-identical."""
+    _, h, w = pix.shape
     t_x0, t_y0 = float(target["x_origin"]), float(target["y_origin"])
     t_cw, t_ch = float(target["cell_width"]), float(target["cell_height"])
     t_rows, t_cols = int(target["rows"]), int(target["cols"])
-    span = t_rows * t_cols
-    for pos, w, h, _, pix in codec.decode_grouped(
-            col["bytes"], col["w"], col["h"], col["fmt"], col["image_id"]):
-        x0s, y0s, cws, chs = (col[c][pos, None].astype(np.float64) for c in
-                              ("x_origin", "y_origin", "cell_width", "cell_height"))
-        # per-tile pixel-center coords -> target indices (banker's round,
-        # the exact npref.index_point expression order)
-        px = x0s + cws * (np.arange(w) + 0.5)                                # (m, w)
-        py = y0s + chs * (np.arange(h) + 0.5)                                # (m, h)
-        tcol = np.round((px - t_x0) / t_cw - 0.5).astype(np.int64)
-        trow = np.round((py - t_y0) / t_ch - 0.5).astype(np.int64)
-        rok = (trow >= 0) & (trow < t_rows)                                   # (m, h)
-        cok = (tcol >= 0) & (tcol < t_cols)                                   # (m, w)
-        Vm = pix.astype(np.float64, copy=False)
-        mask = np.isfinite(Vm) & rok[:, :, None] & cok[:, None, :]
-        if not mask.any():
-            continue
-        gkey = (pos.astype(np.int64)[:, None, None] * span
-                + trow[:, :, None] * t_cols + tcol[:, None, :])
-        flat = mask.ravel()
-        yield gkey.ravel()[flat], Vm.ravel()[flat]
+    x0s, y0s, cws, chs = (np.asarray(v, np.float64)[:, None] for v in (x0, y0, cw, ch))
+    # per-tile pixel-center coords -> target indices (banker's round,
+    # the exact npref.index_point expression order)
+    px = x0s + cws * (np.arange(w) + 0.5)                                # (m, w)
+    py = y0s + chs * (np.arange(h) + 0.5)                                # (m, h)
+    tcol = np.round((px - t_x0) / t_cw - 0.5).astype(np.int64)
+    trow = np.round((py - t_y0) / t_ch - 0.5).astype(np.int64)
+    rok = (trow >= 0) & (trow < t_rows)                                   # (m, h)
+    cok = (tcol >= 0) & (tcol < t_cols)                                   # (m, w)
+    Vm = pix.astype(np.float64, copy=False)
+    flat = (np.isfinite(Vm) & rok[:, :, None] & cok[:, None, :]).ravel()
+    gkey = (pos.astype(np.int64)[:, None, None] * (t_rows * t_cols)
+            + trow[:, :, None] * t_cols + tcol[:, None, :])
+    return gkey.ravel()[flat], Vm.ravel()[flat]
 
 
 def _map_cell_values(tiles: DataFrame, target: dict, reduce_fn, schema: str) -> DataFrame:
-    """One mapInArrow pass for the source-pixel binning kernels:
-    every ``_batch_cell_values`` group goes through
+    """The source-pixel binning kernels, a group kernel on
+    ``tiles.map_groups``: every ``_cell_values`` group goes through
     ``reduce_fn(gkey, vals) -> (keys, *columns)`` (one output row per
     distinct key) and comes out as ``(image_id, trow, tcol, *columns)``
     against ``schema``. The whole group lives inside one tile's decode —
     NO shuffle at all."""
     span, tcols = int(target["rows"]) * int(target["cols"]), int(target["cols"])
-    names = StructType.fromDDL(schema).names
-    src = tiles.select(*_PAYLOAD)
 
-    def run(batches):
-        import pyarrow as pa
+    def kernel(pos, pix, h, w, *origin):
+        gkey, vals = _cell_values(pos, pix, *origin, target)
+        if not len(vals):
+            return (gkey,)
+        # ONE sort/reduction per decode group: global keys embed the
+        # tile row, so per-segment ordering — and therefore every
+        # reduction — is identical to per-tile calls
+        keys, *cols = reduce_fn(gkey, vals)
+        cell = keys % span
+        return keys // span, cell // tcols, cell % tcols, *cols
 
-        for batch in batches:
-            for gkey, vals in _batch_cell_values(batch, target):
-                # ONE sort/reduction per decode group: global keys embed
-                # the tile row, so per-segment ordering — and therefore
-                # every reduction — is identical to per-tile calls
-                keys, *cols = reduce_fn(gkey, vals)
-                cell = keys % span
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column("image_id").take(pa.array(keys // span)),
-                     pa.array(cell // tcols), pa.array(cell % tcols),
-                     *(pa.array(c) for c in cols)],
-                    names=names)
-
-    return src.mapInArrow(run, schema=schema)
+    return map_groups(tiles, kernel, schema, ("image_id",), _ORIGIN)
 
 
 def to_grid_stat(tiles: DataFrame, target: dict, stat: str) -> DataFrame:
@@ -516,8 +476,7 @@ def to_grid_conv_py(tiles: DataFrame, target: dict, resampling: str = "lanczos")
                 ci = np.clip(c0 + tj, 0, ww - 1)
                 row_acc += wc[b] * pix[k, ri, ci].astype(np.float64)
             num += wr[a] * row_acc
-        val = num / (wr.sum(axis=0) * wc.sum(axis=0))
-        return val, np.isnan(val)
+        return num / (wr.sum(axis=0) * wc.sum(axis=0))
 
     return _map_candidates(tiles, target, conv)
 

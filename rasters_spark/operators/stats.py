@@ -10,64 +10,41 @@ embarrassingly parallel and the final agg moves only 4 doubles/tile.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rasters_spark import codec
-from rasters_spark.tiles import cell_rows, map_tiles
+from rasters_spark.tiles import cell_rows, map_groups, map_tiles
 
 TILE_STATS_SCHEMA = (
     "image_id string, n_pixels long, n_valid long, vsum double, vmin double, vmax double"
 )
 
 
-def _stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        n = len(pdf)
-        ids = pdf["image_id"].to_numpy()
-        out = {
-            "image_id": ids,
-            "n_pixels": np.empty(n, np.int64),
-            "n_valid": np.empty(n, np.int64),
-            "vsum": np.empty(n, np.float64),
-            "vmin": np.empty(n, np.float64),
-            "vmax": np.empty(n, np.float64),
-        }
-        for pos, w, h, fmt, px in codec.decode_grouped(
-                pdf["bytes"].to_numpy(), pdf["w"].to_numpy(), pdf["h"].to_numpy(),
-                pdf["fmt"].to_numpy(), ids):
-            # float32→float64 BEFORE reducing: exact for quarter-integer fixtures
-            V = px.reshape(len(pos), h * w).astype(np.float64, copy=False)
-            valid = np.isfinite(V)
-            nv = valid.sum(axis=1)
-            out["n_pixels"][pos] = h * w
-            out["n_valid"][pos] = nv
-            if fmt == "q8":
-                # q8 values are arbitrary float32: sum each tile's
-                # compacted valid pixels, the accumulation order the
-                # oracle hashed
-                out["vsum"][pos] = [V[k][valid[k]].sum() for k in range(len(pos))]
-            else:
-                # raw pixels are quarter-integers and i32/b1 integers,
-                # so the masked row sum (zeros at nodata) is exact
-                out["vsum"][pos] = np.where(valid, V, 0.0).sum(axis=1)
-            mn = np.where(valid, V, np.inf).min(axis=1)
-            mx = np.where(valid, V, -np.inf).max(axis=1)
-            out["vmin"][pos] = np.where(nv > 0, mn, np.nan)
-            out["vmax"][pos] = np.where(nv > 0, mx, np.nan)
-        yield pd.DataFrame(out)
-
-
 def tile_stats(tiles: DataFrame) -> DataFrame:
     """Per-tile (n_pixels, n_valid, vsum, vmin, vmax) from the binary
-    pixel column. NaN partials surface as NULL (all-nodata tiles,
-    reference `empty` raster.py:1871-1876 ≙ n_valid = 0)."""
-    cols = tiles.select("image_id", "bytes", "w", "h", "fmt")
-    return cols.mapInPandas(_stats_batches, schema=TILE_STATS_SCHEMA)
+    pixel column, one ``map_groups`` kernel call per decode group. NaN
+    partials surface as NULL (all-nodata tiles, reference `empty`
+    raster.py:1871-1876 ≙ n_valid = 0)."""
+    def kernel(pos, px, h, w, fmt):
+        # float32→float64 BEFORE reducing: exact for quarter-integer fixtures
+        V = px.reshape(len(pos), h * w).astype(np.float64, copy=False)
+        valid = np.isfinite(V)
+        nv = valid.sum(axis=1)
+        if fmt[0].as_py() == "q8":
+            # q8 values are arbitrary float32: sum each tile's compacted
+            # valid pixels, the accumulation order the oracle hashed
+            vsum = np.array([V[k][valid[k]].sum() for k in range(len(pos))])
+        else:
+            # raw pixels are quarter-integers and i32/b1 integers, so
+            # the masked row sum (zeros at nodata) is exact
+            vsum = np.where(valid, V, 0.0).sum(axis=1)
+        mn = np.where(valid, V, np.inf).min(axis=1)
+        mx = np.where(valid, V, -np.inf).max(axis=1)
+        return (pos, np.full(len(pos), h * w), nv, vsum,
+                np.where(nv > 0, mn, np.nan), np.where(nv > 0, mx, np.nan))
+
+    return map_groups(tiles, kernel, TILE_STATS_SCHEMA, meta=("fmt",))
 
 
 def global_range(tiles: DataFrame) -> DataFrame:

@@ -11,9 +11,11 @@ Engine-wide conventions:
   the partition key the table would be written bucketed/z-ordered by,
   giving Iceberg/Parquet min-max pruning on cell ranges for free;
 - every whole-tile pixel kernel runs through ONE runner,
-  :func:`map_tiles`: one mapInArrow whose batches decode through
-  ``codec.decode_grouped`` — operators write only the per-tile numpy
-  kernel, never a decode loop.
+  :func:`map_groups`: one mapInArrow whose batches decode through
+  ``codec.decode_grouped``, with a kernel per (w, h, fmt) decode group
+  (resample's candidate and cell-binning kernels, ``tile_stats``, the
+  focal strip cutter) or, through :func:`map_tiles`, per tile —
+  operators write only the numpy kernel, never a decode loop.
 """
 
 from __future__ import annotations
@@ -89,62 +91,103 @@ def load_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(str(fdir / "pixels.parquet"))
 
 
-def _arrow_types(schema: StructType):
-    return [to_arrow_type(f.dataType) for f in schema.fields]
+def _flat(parts):
+    """Column parts → one column: numpy parts concatenate, the rest
+    (Python sequences) flatten into one list."""
+    if isinstance(parts[0], np.ndarray):
+        return np.concatenate(parts)
+    return [v for p in parts for v in p]
 
 
-def _concat(parts, typ):
-    """Per-tile column parts → one Arrow array. Numeric parts are numpy
-    arrays, the rest Python sequences; NaN becomes NULL (the pandas
-    conversion rule the Arrow kernels always had)."""
+def _group_batch(batch, kernel, out: StructType, keep, meta):
+    """One Arrow batch through :func:`map_groups`' kernel → one
+    ``RecordBatch`` in input-row order (None when no rows come out)."""
     import pyarrow as pa
 
-    if isinstance(parts[0], np.ndarray):
-        return pa.array(np.concatenate(parts), type=typ, from_pandas=True)
-    return pa.array([v for p in parts for v in p], type=typ, from_pandas=True)
+    parts = []
+    for pos, ww, hh, _, pix in codec.decode_grouped(
+            *(batch.column(c).to_numpy(zero_copy_only=False)
+              for c in ("bytes", "w", "h", "fmt", "image_id"))):
+        at = pa.array(pos)
+        got = kernel(pos, pix, hh, ww, *(batch.column(c).take(at) for c in meta))
+        if len(got[0]):
+            parts.append(got)
+    if not parts:
+        return None
+    rows, *made = zip(*parts)
+    rows = np.concatenate(rows)
+    take, made = pa.array(rows), iter(made)
+    cols = []
+    for f in out.fields:
+        t = to_arrow_type(f.dataType)
+        # NaN becomes NULL: the pandas conversion rule the kernels always had
+        cols.append(batch.column(f.name).take(take).cast(t) if f.name in keep else
+                    pa.array(_flat(next(made)), type=t, from_pandas=True))
+    rb = pa.RecordBatch.from_arrays(cols, names=out.names)
+    if (np.diff(rows) < 0).any():
+        rb = rb.take(pa.array(np.argsort(rows, kind="stable")))
+    return rb
+
+
+def map_groups(src: DataFrame, kernel, schema: str,
+               keep: tuple[str, ...] = ("image_id",),
+               meta: tuple[str, ...] = ()) -> DataFrame:
+    """The one whole-tile runner: ONE mapInArrow over ``src`` (which
+    carries ``image_id, bytes, w, h, fmt``). Each Arrow batch decodes
+    once through ``codec.decode_grouped`` with ``image_id`` as ids (a
+    bad blob fails naming its image_id), and every (w, h, fmt) decode
+    group is handed to ``kernel(pos, pixels, h, w, *meta)``: ``pos``
+    are the group's batch rows (ascending), ``pixels`` their
+    ``(len(pos), h, w)`` decode (possibly a read-only view — never
+    write into it) and each ``meta`` column comes as the Arrow array of
+    its values at ``pos``.
+
+    The kernel returns ``(rows, *columns)``: ``rows`` is the batch row
+    of each output row (any order, repeats allowed) and ``columns`` are
+    the DDL ``schema``'s columns not in ``keep``, in schema order, as
+    numpy arrays or sequences of ``len(rows)`` (with zero rows the
+    columns are not read). The ``keep`` columns are taken from the
+    input rows and cast to the schema; NaN becomes NULL. Each batch
+    yields one RecordBatch, ordered by input row (a row's own outputs
+    keep the kernel's order).
+
+    ``sample.sample_idw`` decodes through ``codec.decode_grouped`` on its
+    own: its output rows are the flattened point structs of each tile,
+    not tile rows. So does ``rastermath._decode_b``, the second tile of
+    a pair."""
+    out = StructType.fromDDL(schema)
+    src = src.select(*dict.fromkeys((*keep, "image_id", "bytes", "w", "h", "fmt", *meta)))
+
+    def run(batches):
+        for batch in batches:
+            rb = _group_batch(batch, kernel, out, keep, meta)
+            if rb is not None:
+                yield rb
+
+    return src.mapInArrow(run, schema=out)
 
 
 def map_tiles(src: DataFrame, kernel, schema: str,
               keep: tuple[str, ...] = ("image_id",),
               meta: tuple[str, ...] = ()) -> DataFrame:
-    """The one whole-tile kernel runner: ONE mapInArrow over ``src``
-    (which carries ``image_id, bytes, w, h, fmt``). Each Arrow batch
-    decodes through ``codec.decode_grouped`` with ``image_id`` as ids
-    (a bad blob fails naming its image_id) and every tile is handed to
-    ``kernel(pixels, h, w, *meta values)``. ``pixels`` may be a
-    read-only view: kernels never write into it. The kernel returns the
-    columns of the DDL ``schema`` that are not in ``keep``, in schema
-    order, as equal-length sequences — one output row per element,
-    zero rows allowed; the ``keep`` columns are copied from the tile's
-    input row and cast to the schema. Rows come out in input tile
-    order."""
-    out = StructType.fromDDL(schema)
-    types = _arrow_types(out)
-    made = {n: j for j, n in enumerate(n for n in out.names if n not in keep)}
-    src = src.select(*dict.fromkeys((*keep, "image_id", "bytes", "w", "h", "fmt", *meta)))
+    """:func:`map_groups` one tile at a time: every tile is handed to
+    ``kernel(pixels, h, w, *meta values)`` (``pixels`` may be a
+    read-only view; the meta values are Python scalars). The kernel
+    returns the columns of ``schema`` that are not in ``keep``, in
+    schema order, as equal-length sequences — one output row per
+    element, zero rows allowed; the ``keep`` columns are copied from the
+    tile's input row. Rows come out in input tile order."""
+    def per_tile(pos, pix, h, w, *metas):
+        metas = [m.to_pylist() for m in metas]
+        rows, got = [], []
+        for k, i in enumerate(pos):
+            g = kernel(pix[k], h, w, *(m[k] for m in metas))
+            if len(g[0]):
+                rows += [i] * len(g[0])
+                got.append(g)
+        return (np.array(rows, dtype=np.int64), *(_flat(c) for c in zip(*got)))
 
-    def run(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            metas = [batch.column(c).to_pylist() for c in meta]
-            got = [None] * batch.num_rows
-            for pos, ww, hh, _, pix in codec.decode_grouped(
-                    *(batch.column(c).to_numpy(zero_copy_only=False)
-                      for c in ("bytes", "w", "h", "fmt", "image_id"))):
-                for k, i in enumerate(pos):
-                    got[i] = kernel(pix[k], hh, ww, *(m[i] for m in metas))
-            rows = [i for i in range(batch.num_rows) if len(got[i][0])]
-            if not rows:
-                continue
-            take = pa.array(np.repeat(rows, [len(got[i][0]) for i in rows]))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(n).take(take).cast(t) if n in keep else
-                 _concat([got[i][made[n]] for i in rows], t)
-                 for n, t in zip(out.names, types)],
-                names=out.names)
-
-    return src.mapInArrow(run, schema=out)
+    return map_groups(src, per_tile, schema, keep, meta)
 
 
 def raw_tile(values: np.ndarray):

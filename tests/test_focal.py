@@ -152,20 +152,28 @@ def test_focal_tiles_i32_above_2_24_crosses_seams_exactly(spark):
                                           err_msg=f"tile t{ty}{tx}")
 
 
-#: one operator per whole-tile module; ``layer_algebra`` truncates its
-#: b side, which decodes apart from the runner's own batch decode
+#: one operator per whole-tile module plus each group kernel (resample,
+#: tile_stats); ``layer_algebra`` truncates its b side, which decodes
+#: apart from the runner's own batch decode
 TRUNCATED_OPS = ["focal_tiles", "slope_aspect_hillshade", "stretch_params", "histogram",
                  "zonal_stats", "elementwise", "layer_algebra", "trim", "polygonize",
-                 "retile_split", "render_png", "pixel_centroids", "sample_idw"]
+                 "retile_split", "render_png", "pixel_centroids", "sample_idw",
+                 "tile_stats", "to_grid_bilinear", "to_grid_med", "composite_max",
+                 "mosaic_first"]
+#: a 0.5° target grid over the whole lattice (x 0..3, y 0..-2)
+LATTICE_TARGET = dict(x_origin=0.0, y_origin=0.0, cell_width=0.5, cell_height=-0.5,
+                      rows=4, cols=6, crs="EPSG:4326")
 
 
 @pytest.mark.parametrize("op", TRUNCATED_OPS)
 def test_truncated_blob_fails_naming_its_image_id(spark, op):
     """A short blob must fail with its image_id in the error, not a bare
     numpy buffer error."""
+    from pyspark.sql import functions as F
+
     from rasters_spark.functions import render, vector
     from rasters_spark.operators import (
-        point_join, polygonize, rastermath, retile, sample, stats, terrain)
+        point_join, polygonize, rastermath, resample, retile, sample, stats, terrain)
     from rasters_spark.tiles import tiles_with_cells, with_grid
 
     rows = _lattice_rows()
@@ -195,7 +203,13 @@ def test_truncated_blob_fails_naming_its_image_id(spark, op):
            "render_png": render.render_png,
            "pixel_centroids": vector.pixel_centroids,
            "sample_idw": lambda t: sample.sample_idw(
-               point_join.point_in_tile_join(points, tiles_with_cells(with_grid(t))))}[op]
+               point_join.point_in_tile_join(points, tiles_with_cells(with_grid(t)))),
+           "tile_stats": stats.tile_stats,
+           "to_grid_bilinear": lambda t: resample.to_grid_bilinear(t, LATTICE_TARGET),
+           "to_grid_med": lambda t: resample.to_grid_stat(t, LATTICE_TARGET, "med"),
+           # the default epoch parses the fixture image_id, which t11 is not
+           "composite_max": lambda t: resample.composite_max(t, LATTICE_TARGET, F.lit(0)),
+           "mosaic_first": lambda t: resample.mosaic_first(t, LATTICE_TARGET)}[op]
     with pytest.raises(Exception, match=f"image_id '{rows[4][0]}'"):
         run(df).collect()
 
