@@ -919,7 +919,7 @@ def q_trim_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_merge_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tiles(spark, sf_dir).filter("fmt = 'raw'")
-    return resample.merge_mean(t, RASTERIZE_TARGET, fmts=("raw",))
+    return resample.merge_mean(t, RASTERIZE_TARGET)
 
 
 def q_temporal_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2676,7 +2676,8 @@ def _rasterize_sql(polys: str, csz: float, rows: int, cols: int, agg: str) -> st
 
 def _resample_cte(tiles: str, pixels: str, fmt_filter: str) -> str:
     """Shared CTE chain: tiles → 0.25° target-cell candidates → nearest
-    source-pixel sample (mirrors resample.target_candidates exactly)."""
+    source-pixel sample — the oracle whose expression order
+    resample._tile_candidates follows exactly."""
     return f"""
         with t as (select * from {tiles} {fmt_filter}),
         win as (

@@ -15,18 +15,18 @@ SURVEY §1.3(5)):
   nearest / bilinear (pinned by pytest goldens) / average
   (area-mean of source pixels per target cell).
 
-Spark shape (SURVEY §3 EP2): target-cell candidates are generated per
-tile by PURE SQL (window_for_bbox + sequence/explode — no KD-tree, no
-Python) with nearest values fetched O(1) per candidate by the JVM
-decode (merge_mean, to_grid_nearest), or — for the kernels that read
-several pixels or feed a composite — by ``_tile_candidates``, a group
-kernel on ``tiles.map_groups`` (each tile decodes once) that derives
-the same candidates in numpy with the same expression order (conv
-taps, composites); composites are
-plain hash aggregations with map-side combine. The persisted candidate
-mapping (image_id, trow, tcol, prow, pcol) IS the reference's reusable
-KDTree index (kdtree.py:182-202) — write it once with TableIO and
-broadcast-join it for repeated resampling.
+Spark shape (SURVEY §3 EP2): every (tile, target cell) candidate and
+its nearest source pixel come from ONE numpy kernel,
+``_tile_candidates``, run per decode group on ``tiles.map_groups``
+(each tile decodes once; no KD-tree, no pixel explode): nearest
+(to_grid_nearest), the merge/mosaic/max composites and the conv taps
+all take their candidates from it, and only skinny candidate rows leave
+the map — composites are plain hash aggregations with map-side
+combine. The candidate mapping (image_id, trow, tcol, prow, pcol) IS
+the reference's reusable KDTree index (kdtree.py:182-202) —
+``build_resample_index`` writes it once with TableIO and
+``resample_with_index`` joins it back for repeated resampling, with
+JVM point reads (``sample.sample_nearest``).
 """
 
 from __future__ import annotations
@@ -44,56 +44,16 @@ from rasters_spark.tiles import map_groups
 _ORIGIN = ("x_origin", "y_origin", "cell_width", "cell_height")
 
 
-def target_candidates(tiles: DataFrame, target: dict) -> DataFrame:
-    """Per tile × overlapping target cell: (image_id, trow, tcol, tx, ty,
-    prow, pcol) with in-bounds nearest source-pixel indices."""
-    tg = grid.grid_struct(**target)
-    w = grid.window_for_bbox(tg, F.col("bbox"))
-    sg = F.col("grid")
-    tcols = int(target["cols"])
-    # Round-6: ONE Generate over a packed trow·cols+tcol key array
-    # instead of two stacked sequence explodes. The window expressions
-    # (8+ rint chains) appear exactly once — inside the array builder —
-    # rather than re-inlined per struct-field extract in every
-    # downstream filter/sequence, which (with the decode now fused into
-    # the same whole-stage-codegen method) pushed the generated
-    # consume method past janino's 64 KB limit on the composite/mosaic
-    # pipelines and dropped the WHOLE stage to interpreted mode.
-    keys = F.flatten(F.transform(
-        F.sequence(F.col("win")["row_start"], F.col("win")["row_end"] - 1),
-        lambda r: F.transform(
-            F.sequence(F.col("win")["col_start"], F.col("win")["col_end"] - 1),
-            lambda c: r * tcols + c)))
-    cand = (
-        tiles.withColumn("win", w)
-        .filter(
-            ~F.col("win")["oob"]
-            & (F.col("win")["row_end"] > F.col("win")["row_start"])
-            & (F.col("win")["col_end"] > F.col("win")["col_start"])
-        )
-        .withColumn("_tk", F.explode(keys))
-        .drop("win")
-        .withColumn("trow", F.expr(f"_tk div {tcols}"))
-        .withColumn("tcol", F.expr(f"_tk % {tcols}"))
-        .drop("_tk")
-        .withColumn("tx", grid.cell_center_x(tg, F.col("tcol")))
-        .withColumn("ty", grid.cell_center_y(tg, F.col("trow")))
-        .withColumn("prow", grid.point_row(sg, F.col("ty")))
-        .withColumn("pcol", grid.point_col(sg, F.col("tx")))
-        .filter(grid.in_bounds(sg, F.col("prow"), F.col("pcol")))
-    )
-    return cand
-
-
 def _tile_candidates(h: int, w: int, x0, y0, cw, ch, target: dict):
-    """``target_candidates`` for one decode group of ``h``×``w`` tiles
-    with origins ``x0``/``y0`` and cells ``cw``/``ch``, in numpy: the
-    target cells are derived with the SQL expression order of
-    ``target_candidates`` — bbox ``x0 + cw·w`` / ``y0 + ch·h``; window
-    ``rint((v − t0)/tc − 0.5)`` (+1 at the end), the ``oob`` test, then
-    the clamps; centres ``t0 + tc·(i + 0.5)``; source position
-    ``f = (t − x0)/cw − 0.5`` with ``rint(f)`` in bounds — so the
-    candidate set is bit-identical.
+    """Every (tile, target cell) pair and its nearest source pixel for
+    one decode group of ``h``×``w`` tiles with origins ``x0``/``y0`` and
+    cells ``cw``/``ch`` — the reference's KDTree index
+    (kdtree.py:182-202) in numpy. The expression order is that of the
+    DuckDB oracle ``__spark_entry__._resample_cte`` — bbox ``x0 + cw·w``
+    / ``y0 + ch·h``; window ``rint((v − t0)/tc − 0.5)`` (+1 at the end),
+    the ``oob`` test, then the clamps; centres ``t0 + tc·(i + 0.5)``;
+    source position ``f = (t − x0)/cw − 0.5`` with ``rint(f)`` in
+    bounds — so the candidate set is bit-identical to it.
 
     Returns ``(k, trow, tcol, prow, pcol, fr, fc)``: candidate ``n`` is
     the group's tile ``k[n]`` × target cell ``(trow[n], tcol[n])`` at
@@ -158,15 +118,13 @@ def _valid_nearest(tiles: DataFrame, target: dict,
     return map_groups(tiles, kernel, schema, keep, _ORIGIN)
 
 
-def merge_mean(tiles: DataFrame, target: dict,
-               fmts: tuple[str, ...] | None = None) -> DataFrame:
+def merge_mean(tiles: DataFrame, target: dict) -> DataFrame:
     """Raster.merge float path: mean of valid overlaps per target cell
     → (trow, tcol, value, n)."""
-    v = sample_nearest(target_candidates(tiles, target), fmts=fmts)
-    return v.groupBy("trow", "tcol").agg(
+    return _valid_nearest(tiles, target).groupBy("trow", "tcol").agg(
         (F.sum("value") / F.count("value")).alias("value"),
         F.count("value").alias("n"),
-    ).filter(F.col("n") > 0)
+    )
 
 
 def mosaic_first(tiles: DataFrame, target: dict, order_col: str = "image_id") -> DataFrame:
@@ -214,10 +172,9 @@ def composite_max(tiles: DataFrame, target: dict, epoch_expr=None,
 def to_grid_nearest(tiles: DataFrame, target: dict) -> DataFrame:
     """Per-tile grid→grid nearest warp in sparse long form
     (image_id, trow, tcol, value) — the reference's per-raster
-    to_grid(resampling='nearest'), one output row per target cell."""
-    return sample_nearest(target_candidates(tiles, target)).select(
-        "image_id", "trow", "tcol", "value"
-    )
+    to_grid(resampling='nearest'), one output row per target cell
+    (nodata → NULL)."""
+    return _map_candidates(tiles, target, lambda pix, k, prow, pcol, fr, fc: pix[k, prow, pcol])
 
 
 # --- separable convolution kernels (to_grid linear/cubic/cubic_spline) --------
@@ -599,7 +556,12 @@ def build_resample_index(tiles: DataFrame, target: dict, table) -> dict:
     TableIO snapshot. Build once, reuse for every raster on the same
     geometry pair — the reference's ``kd_tree=`` reuse
     (raster.py:1220-1226) becomes read + broadcast join."""
-    cand = target_candidates(tiles, target).select("image_id", "trow", "tcol", "prow", "pcol")
+    def kernel(pos, pix, h, w, *origin):
+        k, trow, tcol, prow, pcol, _, _ = _tile_candidates(h, w, *origin, target)
+        return pos[k], trow, tcol, prow, pcol
+
+    cand = map_groups(tiles, kernel, "image_id string, trow long, tcol long, prow long, pcol long",
+                      meta=_ORIGIN)
     return table.write(cand, operation="resample-index",
                        job_id="kdtree", inputs=[str(target)])
 

@@ -111,28 +111,20 @@ def with_q8_header(df: DataFrame) -> DataFrame:
 
 
 def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
-                    value_name: str = "value",
-                    fmts: tuple[str, ...] | None = None) -> DataFrame:
+                    value_name: str = "value") -> DataFrame:
     """Attach the decoded pixel at (``row_col``, ``col_col``) as a double
     column — ENTIRELY inside the JVM (hex/conv bit math), no
     ArrowEvalPython node, bit-exact against ``codec.pixel_at`` (NaN→NULL,
     i32 sentinel → NULL, q8 float32 chain; verified exhaustively, and
     certified against the DuckDB oracles of every point-read query).
-    Round-6 optimization: the Python
-    boundary round trip was ~60% of merge_mean's wall even at 8 B/row
-    (guide §4.1 — built-ins beat any UDF). The per-row bit pattern and
-    the q8 header floats are hoisted into their own projection columns
-    (CollapseProject keeps non-cheap aliases un-inlined) so each
-    hex/conv runs once per row, not once per reference — inlining them
-    measured 1.8× slower."""
+    Round-6 optimization: the Python boundary round trip was ~60% of a
+    nearest-read stage's wall even at 8 B/row (guide §4.1 — built-ins
+    beat any UDF). The per-row bit pattern and the q8 header floats are
+    hoisted into their own projection columns (CollapseProject keeps
+    non-cheap aliases un-inlined) so each hex/conv runs once per row,
+    not once per reference — inlining them measured 1.8× slower."""
     off = f"({row_col}*w+{col_col})"
     b = f"_pxb_{value_name}"
-    # ``fmts``: branch pruning for callers whose input is statically
-    # filtered to known formats (e.g. merge_mean over fmt='raw') — the
-    # dead q8/i32 branches cost a measured ~20% of the stage even when
-    # never taken (bigger codegen, per-row header IFs)
-    all_fmts = ("raw", "i32", "b1", "q8")
-    fmts = tuple(f for f in all_fmts if fmts is None or f in fmts) or all_fmts
     # one bits column per fmt family: raw/i32 → LE uint32 of the 4-byte
     # slice, b1/q8 → the single byte value
     bits_of = {
@@ -150,23 +142,19 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
     }
 
     def _case(exprs: dict) -> str:
-        if len(fmts) == 1:
-            return exprs[fmts[0]]
-        branches = " ".join(f"WHEN fmt = '{f}' THEN {exprs[f]}" for f in fmts[:-1])
-        return f"CASE {branches} ELSE {exprs[fmts[-1]]} END"
+        *head, last = codec.FMTS
+        branches = " ".join(f"WHEN fmt = '{f}' THEN {exprs[f]}" for f in head)
+        return f"CASE {branches} ELSE {exprs[last]} END"
 
-    bits_expr = _case(bits_of)
-    val_expr = _case(val_of)
-    add_hdr = "q8" in fmts and "_q8_vmin" not in df.columns
+    add_hdr = "_q8_vmin" not in df.columns
     if add_hdr:
         df = with_q8_header(df)
-    return (df.withColumn(b, F.expr(bits_expr))
-              .withColumn(value_name, F.expr(val_expr))
+    return (df.withColumn(b, F.expr(_case(bits_of)))
+              .withColumn(value_name, F.expr(_case(val_of)))
               .drop(*([b, "_q8_vmin", "_q8_vmax"] if add_hdr else [b])))
 
 
-def sample_nearest(joined: DataFrame, value_name: str = "value",
-                   fmts: tuple[str, ...] | None = None) -> DataFrame:
+def sample_nearest(joined: DataFrame, value_name: str = "value") -> DataFrame:
     """Nearest-pixel sampling with JVM-side byte slicing.
 
     The joined rows carry the full tile blob; the relevant 4 (raw) / 9
@@ -174,7 +162,7 @@ def sample_nearest(joined: DataFrame, value_name: str = "value",
     (``pixel_value_sql`` — hex/conv IEEE-754 bit math), so the stage has
     no Python boundary at all (round-6: the ArrowEvalPython round trip
     was the dominant cost even at 8 B/row)."""
-    return pixel_value_sql(joined, "prow", "pcol", value_name, fmts)
+    return pixel_value_sql(joined, "prow", "pcol", value_name)
 
 
 _TILE_PAYLOAD = ("bytes", "w", "h", "fmt", "x_origin", "y_origin",

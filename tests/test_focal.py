@@ -159,7 +159,7 @@ TRUNCATED_OPS = ["focal_tiles", "slope_aspect_hillshade", "stretch_params", "his
                  "zonal_stats", "elementwise", "layer_algebra", "trim", "polygonize",
                  "retile_split", "render_png", "pixel_centroids", "sample_idw",
                  "tile_stats", "to_grid_bilinear", "to_grid_med", "composite_max",
-                 "mosaic_first"]
+                 "mosaic_first", "merge_mean", "to_grid_nearest"]
 #: a 0.5° target grid over the whole lattice (x 0..3, y 0..-2)
 LATTICE_TARGET = dict(x_origin=0.0, y_origin=0.0, cell_width=0.5, cell_height=-0.5,
                       rows=4, cols=6, crs="EPSG:4326")
@@ -209,7 +209,9 @@ def test_truncated_blob_fails_naming_its_image_id(spark, op):
            "to_grid_med": lambda t: resample.to_grid_stat(t, LATTICE_TARGET, "med"),
            # the default epoch parses the fixture image_id, which t11 is not
            "composite_max": lambda t: resample.composite_max(t, LATTICE_TARGET, F.lit(0)),
-           "mosaic_first": lambda t: resample.mosaic_first(t, LATTICE_TARGET)}[op]
+           "mosaic_first": lambda t: resample.mosaic_first(t, LATTICE_TARGET),
+           "merge_mean": lambda t: resample.merge_mean(t, LATTICE_TARGET),
+           "to_grid_nearest": lambda t: resample.to_grid_nearest(t, LATTICE_TARGET)}[op]
     with pytest.raises(Exception, match=f"image_id '{rows[4][0]}'"):
         run(df).collect()
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
 
 from rasters_spark import codec
 from rasters_spark.operators.sample import pixel_value_sql
@@ -49,13 +48,10 @@ def _rows():
     return rows
 
 
-@pytest.mark.parametrize("fmts", [None, ("raw",)])
-def test_pixel_value_sql_matches_pixel_at(spark, fmts):
+def test_pixel_value_sql_matches_pixel_at(spark):
     rows = _rows()
-    if fmts is not None:
-        rows = [r for r in rows if r[4] in fmts]
     df = spark.createDataFrame(rows, SCHEMA)
-    out = (pixel_value_sql(df, "prow", "pcol", fmts=fmts)
+    out = (pixel_value_sql(df, "prow", "pcol")
            .select("image_id", "value").toPandas().set_index("image_id")["value"])
     bad = []
     for r in rows:

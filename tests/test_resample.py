@@ -168,6 +168,45 @@ def test_to_grid_nearest_bool_shim(spark):
     assert got == exp
 
 
+def test_to_grid_nearest_matches_numpy(spark):
+    """Row for row against the scalar recomputation, in every pixel
+    format: fixture raw tiles with a nodata lattice poked in, encoded as
+    raw/q8/i32 (i32 offset past 2**24, so a float32 path would round)
+    and b1 (no nodata) — one DataFrame, so batches hold several decode
+    groups. Same (image_id, trow, tcol) set, exact values, and NULL
+    exactly where ``codec.decode_tile`` gives NaN."""
+    import pandas as pd
+
+    from rasters_spark.tiles import with_grid
+
+    geo = ["x_origin", "y_origin", "cell_width", "cell_height", "crs"]
+    src = load_tiles(spark, SF).filter("fmt = 'raw'").limit(12).toPandas()
+    rows = []
+    for r in src.itertuples(index=False):
+        arr = codec.decode_tile(r.bytes, r.w, r.h, r.fmt)
+        arr[::3, ::4] = np.nan
+        nan = np.isnan(arr)
+        for fmt, a in (("raw", arr), ("q8", arr),
+                       ("i32", np.where(nan, codec.I32_NODATA, arr.astype(np.float64) * 4 + 2**25)),
+                       ("b1", np.where(nan, 0.0, arr > 500.0))):
+            rows.append((f"{r.image_id}{fmt}", codec.encode_tile(a, fmt), r.w, r.h, fmt,
+                         *(getattr(r, c) for c in geo)))
+    pdf = pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", *geo])
+    df = with_grid(spark.createDataFrame(
+        rows, "image_id string, bytes binary, w int, h int, fmt string, x_origin double, "
+              "y_origin double, cell_width double, cell_height double, crs string"))
+    got = {(r.image_id, r.trow, r.tcol): r.value
+           for r in resample.to_grid_nearest(df, TARGET).collect()}
+    exp = {(iid, trow, tcol): v for iid, trow, tcol, v in _numpy_candidates(pdf)}
+    assert got.keys() == exp.keys()
+    bad = [(k, got[k], v) for k, v in exp.items()
+           if ((got[k] is not None) if np.isnan(v) else got[k] != v)]
+    assert not bad, bad[:5]
+    nulls = {f: sum(got[k] is None for k in got if k[0].endswith(f))
+             for f in ("raw", "q8", "i32", "b1")}
+    assert nulls["b1"] == 0 and min(nulls[f] for f in ("raw", "q8", "i32")) > 0, nulls
+
+
 def test_composite_max_matches_numpy(spark):
     tiles = load_tiles(spark, SF).filter("fmt = 'raw'").limit(40)
     got = {(r.trow, r.tcol): (r.value, r.epoch, r.n_obs)
@@ -225,15 +264,19 @@ def _plan_nodes(df):
     return [(b.splitlines()[0], b) for b in plan.split("\n\n") if b.startswith("(")]
 
 
-@pytest.mark.parametrize("op", ["to_grid_conv", "composite_max", "mosaic_first"])
+@pytest.mark.parametrize("op", ["to_grid_conv", "composite_max", "mosaic_first",
+                                "merge_mean", "to_grid_nearest"])
 def test_whole_tile_kernels_plan_has_no_python_udf_and_no_blob_exchange(spark, op):
-    """The conv taps and the composites read pixels in ONE mapInArrow
-    over whole tiles: no ArrowEvalPython node, and no Exchange ever
-    carries the ``bytes`` blob (only skinny candidate rows shuffle)."""
+    """Nearest, the conv taps and the composites read pixels in ONE
+    mapInArrow over whole tiles: no ArrowEvalPython node, and no
+    Exchange ever carries the ``bytes`` blob (only skinny candidate
+    rows shuffle)."""
     tiles = load_tiles(spark, SF)
     df = {"to_grid_conv": lambda: resample.to_grid_conv(tiles, TARGET, "cubic"),
           "composite_max": lambda: resample.composite_max(tiles, TARGET),
-          "mosaic_first": lambda: resample.mosaic_first(tiles, TARGET)}[op]()
+          "mosaic_first": lambda: resample.mosaic_first(tiles, TARGET),
+          "merge_mean": lambda: resample.merge_mean(tiles, TARGET),
+          "to_grid_nearest": lambda: resample.to_grid_nearest(tiles, TARGET)}[op]()
     nodes = _plan_nodes(df)
     assert any("MapInArrow" in name for name, _ in nodes), nodes
     assert not any("ArrowEvalPython" in name for name, _ in nodes), nodes

@@ -163,3 +163,15 @@ def test_tile_operators_run_no_map_of_their_own(module):
     tree = ast.parse((ROOT / "rasters_spark" / "operators" / f"{module}.py").read_text())
     for attr in ("mapInArrow", "mapInPandas"):
         assert not _calls_of(tree, attr), (module, attr)
+
+
+def test_one_nearest_candidate_path():
+    """Target-grid candidates come only from ``resample._tile_candidates``:
+    in resample.py the JVM point read ``sample_nearest`` serves only
+    the point-target branch of ``to_geometry`` and the persisted index
+    (``resample_with_index``), and no ``target_candidates`` remains
+    anywhere in the package."""
+    tree = ast.parse((ROOT / "rasters_spark" / "operators" / "resample.py").read_text())
+    assert _calls_of(tree, "sample_nearest") == {"to_geometry", "resample_with_index"}
+    for path in sorted((ROOT / "rasters_spark").rglob("*.py")):
+        assert "target_candidates" not in path.read_text(), path
