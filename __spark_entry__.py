@@ -741,8 +741,8 @@ def q_tile_z_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rasters_spark import cells as C
 
     t = load_tiles(spark, sf_dir)
-    cx = F.col("x_origin") + F.col("cell_width") * F.col("w").cast("double") / 2.0
-    cy = F.col("y_origin") + F.col("cell_height") * F.col("h").cast("double") / 2.0
+    cx = "x_origin + cell_width * cast(w as double) / 2.0E0"
+    cy = "y_origin + cell_height * cast(h as double) / 2.0E0"
     return t.select("image_id", C.z_cell_id(cx, cy, fixtures.CELL_LEVEL).alias("z_id"))
 
 
@@ -769,11 +769,7 @@ def q_tile_windows_for_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = j.withColumn("win", w).filter(~F.col("win")["oob"])
     # overlap anchor: NW cell of (tile bbox ∩ poly bbox) — defined for
     # every surviving (non-oob ⇒ overlapping) pair
-    anchor = cells.pack(
-        LEVEL,
-        cells.cell_iy(F.least(F.col("bbox")["ymax"], F.col("pbox")["ymax"]), LEVEL),
-        cells.cell_ix(F.greatest(F.col("bbox")["xmin"], F.col("pbox")["xmin"]), LEVEL),
-    )
+    anchor = cells.cell_id("greatest(bbox.xmin, pbox.xmin)", "least(bbox.ymax, pbox.ymax)", LEVEL)
     return (
         j.filter(F.col("cell_id") == anchor)
         .select(
@@ -2402,7 +2398,7 @@ def q_events_cell_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.col("value") - F.floor(F.col("value") / 360.0) * 360.0 - 180.0
     y = (F.col("user_id") % 180).cast("double") - 90.0 + 0.5
     return (
-        ev.withColumn("cell_id", cells.cell_id(x, y, 5))
+        ev.withColumns({"x": x, "y": y}).withColumn("cell_id", cells.cell_id("x", "y", 5))
         .groupBy("cell_id")
         .agg(F.count("*").alias("n_events"), F.count_distinct("user_id").alias("n_users"))
     )

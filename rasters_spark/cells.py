@@ -17,18 +17,27 @@ Scale notes (100 TB / 10^12 tiles):
   point↔tile join is a pure equi-join on ``cell_id`` plus a residual bbox
   refinement — the idiomatic Spark reduction of a spatial theta-join;
 - hot cells (the fixture injects 20% of tiles into one footprint per
-  FIXTURES.md) are handled by ``salted``: the big side takes
-  ``pmod(hash(id), S)``, the small side explodes all S salts. AQE
-  skew-join splitting is ALSO enabled in session.py; salting covers the
-  pathological single-key case AQE can't split below task granularity.
+  FIXTURES.md) are handled by salting (``point_in_tile_join(n_salts=S)``):
+  the big side takes ``pmod(hash(id), S)``, the small side explodes all
+  S salts. AQE skew-join splitting is ALSO enabled in session.py;
+  salting covers the pathological single-key case AQE can't split below
+  task granularity.
+
+All math is SQL text rendered once (``*_sql``, cached on their
+parameters) and applied via ``F.expr``/``selectExpr``: the Spark plan and
+the DuckDB oracles read the same characters, and a plan costs one parse,
+not a Column tree of py4j round trips (``cells_for_bbox`` took 82–165 ms
+that way before any DataFrame existed).
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from rasters_spark.grid import _col
+from rasters_spark.grid import double_sql, sql_text, struct_sql
 
 LEVEL_SHIFT = 56
 IY_SHIFT = 28
@@ -38,80 +47,88 @@ def cell_size_deg(level: int) -> float:
     return 180.0 / (1 << level)
 
 
-def cell_ix(lon, level: int) -> Column:
+@lru_cache(maxsize=None)
+def _ix_sql(lon: str, level: int) -> str:
     """lon → x cell index, clamped to [0, 2·2^L − 1]."""
-    size = cell_size_deg(level)
-    nx = 2 * (1 << level)
-    ix = F.floor((_col(lon) + 180.0) / size).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(nx - 1), ix))
+    size = double_sql(cell_size_deg(level))
+    return f"greatest(0, least({2 * (1 << level) - 1}, cast(floor((({lon}) + 180.0E0) / {size}) as bigint)))"
 
 
-def cell_iy(lat, level: int) -> Column:
+@lru_cache(maxsize=None)
+def _iy_sql(lat: str, level: int) -> str:
     """lat → y cell index (north→south, like raster rows), clamped."""
-    size = cell_size_deg(level)
-    ny = 1 << level
-    iy = F.floor((90.0 - _col(lat)) / size).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(ny - 1), iy))
+    size = double_sql(cell_size_deg(level))
+    return f"greatest(0, least({(1 << level) - 1}, cast(floor((90.0E0 - ({lat})) / {size}) as bigint)))"
 
 
-def pack(level: int, iy: Column, ix: Column) -> Column:
-    return (
-        F.lit(level).cast("long") * (1 << LEVEL_SHIFT)
-        + iy * (1 << IY_SHIFT)
-        + ix
-    )
-
-
-def cell_id(lon, lat, level: int) -> Column:
-    """(lon, lat) → int64 cell id at ``level``. Pure SQL."""
-    return pack(level, cell_iy(lat, level), cell_ix(lon, level))
-
-
-def cell_id_sql(lon_expr: str, lat_expr: str, level: int) -> str:
-    """The same cell id as an ANSI-SQL string (for DuckDB oracles)."""
-    size = repr(cell_size_deg(level))
-    nx, ny = 2 * (1 << level), 1 << level
-    ix = f"greatest(0, least({nx - 1}, cast(floor((({lon_expr}) + 180.0) / {size}) as bigint)))"
-    iy = f"greatest(0, least({ny - 1}, cast(floor((90.0 - ({lat_expr})) / {size}) as bigint)))"
+def _pack_sql(level: int, iy: str, ix: str) -> str:
     return f"({level} * {1 << LEVEL_SHIFT} + ({iy}) * {1 << IY_SHIFT} + ({ix}))"
 
 
-def unpack_ix(cid: Column) -> Column:
-    # pure integer ops — ids exceed 2^53, double division would lose bits
-    return F.pmod(_col(cid), F.lit(1 << IY_SHIFT))
+@lru_cache(maxsize=None)
+def cell_id_sql(lon_expr: str, lat_expr: str, level: int) -> str:
+    """(lon, lat) SQL text → the int64 cell id at ``level`` as ANSI-SQL
+    text — the one form, shared verbatim by :func:`cell_id` and the
+    DuckDB oracles."""
+    return _pack_sql(level, _iy_sql(lat_expr, level), _ix_sql(lon_expr, level))
 
 
-def unpack_iy(cid: Column) -> Column:
-    return F.pmod(F.shiftright(_col(cid), IY_SHIFT), F.lit(1 << (LEVEL_SHIFT - IY_SHIFT)))
+def cell_id(lon, lat, level: int) -> Column:
+    """(lon, lat) → int64 cell id at ``level``: ``F.expr`` of
+    :func:`cell_id_sql` (SQL text or Columns, ``grid.sql_text``)."""
+    return F.expr(cell_id_sql(sql_text(lon), sql_text(lat), level))
+
+
+def _unpack_sql(cid: str) -> tuple[str, str]:
+    """(iy, ix) text of a cell id — pure integer ops: ids exceed 2^53,
+    double division would lose bits."""
+    return (f"pmod(shiftright({cid}, {IY_SHIFT}), {1 << (LEVEL_SHIFT - IY_SHIFT)})",
+            f"pmod({cid}, {1 << IY_SHIFT})")
 
 
 def parent(cid, level: int, parent_level: int) -> Column:
     """Coarser ancestor — two-level partitioning for skew splitting."""
     shift = level - parent_level
-    ix = F.shiftright(unpack_ix(cid), shift)
-    iy = F.shiftright(unpack_iy(cid), shift)
-    return pack(parent_level, iy, ix)
+    iy, ix = _unpack_sql(sql_text(cid))
+    return F.expr(_pack_sql(parent_level, f"shiftright({iy}, {shift})", f"shiftright({ix}, {shift})"))
 
 
-def cells_for_bbox(bbox: Column, level: int) -> Column:
+def bbox_fields(bbox) -> tuple[str, str, str, str]:
+    """(xmin, ymin, xmax, ymax) SQL text of a bbox struct argument."""
+    b = struct_sql(bbox)
+    return tuple(f"{b}.{f}" for f in ("xmin", "ymin", "xmax", "ymax"))
+
+
+@lru_cache(maxsize=None)
+def _rect_sql(lo_y: str, hi_y: str, lo_x: str, hi_x: str, level: int, wrap: bool = False) -> str:
+    """Every cell of the index rectangle [lo_y..hi_y]×[lo_x..hi_x] →
+    array<long> text (``sequence`` → ``transform`` → ``flatten``);
+    ``wrap`` takes x modulo the world width."""
+    ix = f"pmod(_cix, {2 * (1 << level)})" if wrap else "_cix"
+    return (f"flatten(transform(sequence({lo_y}, {hi_y}), _ciy -> "
+            f"transform(sequence({lo_x}, {hi_x}), _cix -> {_pack_sql(level, '_ciy', ix)})))")
+
+
+@lru_cache(maxsize=None)
+def cells_for_bbox_sql(xmin: str, ymin: str, xmax: str, ymax: str, level: int) -> str:
+    """SQL text of every cell id whose footprint intersects the bbox
+    (y axis north→south: ymax → the smaller iy)."""
+    return _rect_sql(_iy_sql(ymax, level), _iy_sql(ymin, level),
+                     _ix_sql(xmin, level), _ix_sql(xmax, level), level)
+
+
+def cells_for_bbox(bbox, level: int) -> Column:
     """All cell ids whose footprint intersects bbox → array<long>.
 
     Pure higher-order-function SQL (sequence → transform → flatten):
     no UDF, no explode yet — caller explodes. Cost is O(cells covered);
     choose ``level`` so typical footprints cover O(1..10) cells.
+    ``bbox`` is a struct column name or a Column (``grid.sql_text``).
     """
-    ix0, ix1 = cell_ix(bbox["xmin"], level), cell_ix(bbox["xmax"], level)
-    # y axis is north→south: ymax → smaller iy
-    iy0, iy1 = cell_iy(bbox["ymax"], level), cell_iy(bbox["ymin"], level)
-    return F.flatten(
-        F.transform(
-            F.sequence(iy0, iy1),
-            lambda iy: F.transform(F.sequence(ix0, ix1), lambda ix: pack(level, iy, ix)),
-        )
-    )
+    return F.expr(cells_for_bbox_sql(*bbox_fields(bbox), level))
 
 
-def cells_for_bbox_am(bbox: Column, level: int) -> Column:
+def cells_for_bbox_am(bbox, level: int) -> Column:
     """Antimeridian-aware cell registration: a WRAPPED bbox (the
     reference's crossing convention, raster_geometry.py:512-516 —
     ``x_min`` on the east side of the seam is positive, ``x_max``
@@ -119,14 +136,21 @@ def cells_for_bbox_am(bbox: Column, level: int) -> Column:
     instead of spanning the world. A seam-straddling footprint thus
     registers O(1) cells, not O(world) (VERDICT r01 missing #6).
     Non-wrapped bboxes pass through to ``cells_for_bbox``."""
-    from rasters_spark import grid
+    x0, y0, x1, y1 = bbox_fields(bbox)
+    east = cells_for_bbox_sql(x0, y0, "180.0E0", y1, level)
+    west = cells_for_bbox_sql("-180.0E0", y0, x1, y1, level)
+    return F.expr(f"CASE WHEN {x0} > {x1} THEN array_distinct(concat({east}, {west})) "
+                  f"ELSE {cells_for_bbox_sql(x0, y0, x1, y1, level)} END")
 
-    east = grid.bbox_struct(bbox["xmin"], bbox["ymin"], F.lit(180.0), bbox["ymax"])
-    west = grid.bbox_struct(F.lit(-180.0), bbox["ymin"], bbox["xmax"], bbox["ymax"])
-    return F.when(
-        bbox["xmin"] > bbox["xmax"],
-        F.array_distinct(F.concat(cells_for_bbox(east, level), cells_for_bbox(west, level))),
-    ).otherwise(cells_for_bbox(bbox, level))
+
+@lru_cache(maxsize=None)
+def ring_cells_sql(cid: str, level: int, ring: int) -> str:
+    """SQL text of :func:`ring_cells`."""
+    nx, ny = 2 * (1 << level), 1 << level
+    iy, ix = _unpack_sql(cid)
+    cell = _pack_sql(level, f"greatest(0, least({ny - 1}, {iy} + _cdy))", f"pmod({ix} + _cdx, {nx})")
+    return (f"array_distinct(flatten(transform(sequence({-ring}, {ring}), _cdy -> "
+            f"transform(sequence({-ring}, {ring}), _cdx -> {cell}))))")
 
 
 def ring_cells(cid, level: int, ring: int) -> Column:
@@ -135,26 +159,27 @@ def ring_cells(cid, level: int, ring: int) -> Column:
     Longitude wraps (pmod); latitude clamps then dedups via array_distinct.
     Drives kNN candidate generation (cell-ring expansion, SURVEY §2.3).
     """
+    return F.expr(ring_cells_sql(sql_text(cid), level, ring))
+
+
+@lru_cache(maxsize=None)
+def ring_cells_bbox_sql(xmin: str, ymin: str, xmax: str, ymax: str,
+                        level: int, ring: int) -> str:
+    """SQL text of :func:`ring_cells_bbox`."""
     nx, ny = 2 * (1 << level), 1 << level
-    ix, iy = unpack_ix(cid), unpack_iy(cid)
-    return F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(-ring), F.lit(ring)),
-                lambda dy: F.transform(
-                    F.sequence(F.lit(-ring), F.lit(ring)),
-                    lambda dx: pack(
-                        level,
-                        F.greatest(F.lit(0), F.least(F.lit(ny - 1), iy + dy)),
-                        F.pmod(ix + dx, F.lit(nx)),
-                    ),
-                ),
-            )
-        )
-    )
+    ix0 = _ix_sql(xmin, level)
+    # a wrapped bbox unwraps its x range by one world width
+    ix1 = f"{_ix_sql(xmax, level)} + IF({xmin} > {xmax}, {nx}, 0)"
+    lo_x = f"{ix0} - {ring}"
+    return _rect_sql(f"greatest(0, {_iy_sql(ymax, level)} - {ring})",
+                     f"least({ny - 1}, {_iy_sql(ymin, level)} + {ring})",
+                     lo_x,
+                     # never wrap past a full circle
+                     f"least({ix1} + {ring}, {lo_x} + {nx - 1})",
+                     level, wrap=True)
 
 
-def ring_cells_bbox(bbox: Column, level: int, ring: int) -> Column:
+def ring_cells_bbox(bbox, level: int, ring: int) -> Column:
     """Union of Chebyshev-``ring`` neighborhoods around EVERY cell a
     bbox covers → array<long> of DISTINCT cells, generated directly as
     the padded index rectangle (round-6 kNN optimization).
@@ -174,37 +199,7 @@ def ring_cells_bbox(bbox: Column, level: int, ring: int) -> Column:
     is the ring union over ``cells_for_bbox_am``'s two-sided
     registration — Spark's ``sequence`` would otherwise descend and
     yield the cells BETWEEN the seam sides."""
-    nx, ny = 2 * (1 << level), 1 << level
-    ix0 = cell_ix(bbox["xmin"], level)
-    ix1 = cell_ix(bbox["xmax"], level) + F.when(bbox["xmin"] > bbox["xmax"], nx).otherwise(0)
-    iy0, iy1 = cell_iy(bbox["ymax"], level), cell_iy(bbox["ymin"], level)
-    lo_y = F.greatest(F.lit(0), iy0 - ring)
-    hi_y = F.least(F.lit(ny - 1), iy1 + ring)
-    lo_x = ix0 - ring
-    hi_x = F.least(ix1 + ring, lo_x + nx - 1)  # never wrap past a full circle
-    return F.flatten(
-        F.transform(
-            F.sequence(lo_y, hi_y),
-            lambda iy: F.transform(
-                F.sequence(lo_x, hi_x),
-                lambda ix: pack(level, iy, F.pmod(ix, F.lit(nx))),
-            ),
-        )
-    )
-
-
-def salted(cid, n_salts: int) -> Column:
-    """Composite skew key: cell_id scaled + deterministic per-row salt.
-
-    Big side: ``salted(cell_id, S)`` with salt from a row-unique column;
-    small side: explode ``sequence(0, S-1)`` and add. Keeps the join an
-    equi-join while spreading one hot cell over S reducers.
-    """
-    return _col(cid) * n_salts
-
-
-def salt_of(unique_col, n_salts: int) -> Column:
-    return F.pmod(F.xxhash64(_col(unique_col)), F.lit(n_salts))
+    return F.expr(ring_cells_bbox_sql(*bbox_fields(bbox), level, ring))
 
 
 # --- Z-order (Morton) ids: file-level spatial clustering ----------------------
@@ -226,41 +221,27 @@ _SPREAD_MASKS = (
 )
 
 
-def _spread_bits(c: Column) -> Column:
-    """Spread the low 28 bits of ``c`` into the even bit positions
-    (classic magic-mask bit dilation, public domain)."""
-    out = _col(c)
-    for shift, mask in _SPREAD_MASKS:
-        out = F.shiftleft(out, shift).bitwiseOR(out).bitwiseAND(F.lit(mask))
-    return out
-
-
-def z_cell_id(lon, lat, level: int) -> Column:
-    """(lon, lat) → Morton-interleaved cell id at ``level``:
-    ``(level << 57) | interleave(iy, ix)`` (x in even bits, y in odd;
-    56 interleaved bits + 5 level bits fit a signed int64)."""
-    zx = _spread_bits(cell_ix(lon, level))
-    zy = _spread_bits(cell_iy(lat, level))
-    return (
-        F.lit(level).cast("long") * F.lit(1 << 57)
-        + F.shiftleft(zy, 1).bitwiseOR(zx)
-    )
-
-
+@lru_cache(maxsize=None)
 def z_cell_id_sql(lon_expr: str, lat_expr: str, level: int) -> str:
-    """The same Morton id as an ANSI-SQL string (DuckDB oracle twin —
-    bit-identical integer math, same masks)."""
-    size = repr(cell_size_deg(level))
-    nx, ny = 2 * (1 << level), 1 << level
-    ix = f"greatest(0, least({nx - 1}, cast(floor((({lon_expr}) + 180.0) / {size}) as bigint)))"
-    iy = f"greatest(0, least({ny - 1}, cast(floor((90.0 - ({lat_expr})) / {size}) as bigint)))"
-
+    """(lon, lat) SQL text → the Morton-interleaved cell id at ``level``
+    as ANSI-SQL text, shared verbatim by :func:`z_cell_id` and the DuckDB
+    oracle: ``(level << 57) | interleave(iy, ix)`` (x in even bits, y in
+    odd; 56 interleaved bits + 5 level bits fit a signed int64)."""
     def spread(e: str) -> str:
+        # spread the low 28 bits into the even bit positions (classic
+        # magic-mask bit dilation, public domain)
         for shift, mask in _SPREAD_MASKS:
             e = f"((({e}) << {shift} | ({e})) & {mask})"
         return e
 
-    return f"({level} * {1 << 57} + (({spread(iy)}) << 1 | {spread(ix)}))"
+    return (f"({level} * {1 << 57} + (({spread(_iy_sql(lat_expr, level))}) << 1 | "
+            f"{spread(_ix_sql(lon_expr, level))}))")
+
+
+def z_cell_id(lon, lat, level: int) -> Column:
+    """(lon, lat) → Morton id at ``level``: ``F.expr`` of
+    :func:`z_cell_id_sql` (``lon``/``lat`` as in :func:`cell_id`)."""
+    return F.expr(z_cell_id_sql(sql_text(lon), sql_text(lat), level))
 
 
 # --- XYZ (slippy-map) tiles: the Web-Mercator pyramid scheme ------------------

@@ -18,8 +18,11 @@ no rasterio/PIL, so formats are self-decodable pure-numpy codecs:
   uint16 shim, kdtree.py:293-310) — the float view is exact.
 
 Pixel decode has two layers. Point reads decode inside the JVM
-(``operators.sample.pixel_value_sql``, hex/conv bit math, bit-exact
-against :func:`pixel_at`). Whole tiles decode through ONE shape-batched
+(``operators.sample.pixel_value_sql``, bit-exact against
+:func:`pixel_at`): one hex/conv turns the pixel's bytes into a
+big-endian bigint, and integer shifts and masks of it give the
+little-endian float32/int32 fields — SQL has no byte swap, since
+Spark's ``reverse(binary)`` reverses a UTF-8 string cast, not bytes. Whole tiles decode through ONE shape-batched
 numpy decoder, :func:`decode_grouped`, which groups an Arrow batch by
 ``(w, h, fmt)`` and decodes each group with one ``frombuffer``; it is
 the only whole-tile decoder, and every whole-tile operator reaches it

@@ -198,15 +198,18 @@ def dup_groups(docs: DataFrame, k: int = 3, threshold: float = 0.85,
 
     Iterative min-label propagation (converges in ≤ diameter rounds,
     bounded by log₂ of the largest component in practice) — the driver
-    loop re-plans per iteration; each iteration is two broadcast joins.
+    loop re-plans per iteration over the once-materialized edge list;
+    each iteration is two broadcast joins.
     The DuckDB oracle is a recursive CTE computing the same fixpoint.
     """
     if pairs is None:
         pairs = (minhash_lsh_pairs(docs, threshold=threshold, jaccard_k=k)
                  if method == "lsh" else ngram_jaccard_pairs(docs, k, threshold))
     pairs = pairs.select("doc_a", "doc_b")
-    # undirected edge list + self-loops so singletons-in-pairs keep labels
-    edges = pairs.union(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
+    # undirected edge list + self-loops so singletons-in-pairs keep labels;
+    # materialized once, else every round re-derives the whole LSH pipeline
+    edges = pairs.union(
+        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))).localCheckpoint()
     labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().withColumn(
         "group_id", F.col("doc_id"))
     while True:

@@ -275,18 +275,13 @@ def resize_bilinear_long(tiles: DataFrame, out_w: int, out_h: int) -> DataFrame:
     from rasters_spark.operators.resample import bilinear_weights_sql, conv_blend_sql
     from rasters_spark.operators.sample import pixel_value_sql, with_q8_header
 
-    d = (
-        with_q8_header(tiles.select("image_id", "bytes", "w", "h", "fmt"))
-        .withColumn("orow", F.explode(F.sequence(F.lit(0), F.lit(out_h - 1))))
-        .withColumn("ocol", F.explode(F.sequence(F.lit(0), F.lit(out_w - 1))))
-        .withColumn("fr", F.expr(f"(orow + 0.5) * h / {out_h}.0 - 0.5"))
-        .withColumn("fc", F.expr(f"(ocol + 0.5) * w / {out_w}.0 - 0.5"))
-        .withColumn("dc", F.expr("fc - floor(fc)"))
-        .withColumn("dr", F.expr("fr - floor(fr)"))
-    )
-    for i in (0, 1):
-        d = d.withColumn(f"rr_{i}", F.expr(f"least(greatest(cast(floor(fr) as bigint) + ({i}), 0), h - 1)"))
-        d = d.withColumn(f"cc_{i}", F.expr(f"least(greatest(cast(floor(fc) as bigint) + ({i}), 0), w - 1)"))
+    d = (with_q8_header(tiles.select("image_id", "bytes", "w", "h", "fmt"))
+         .selectExpr("*", f"explode(sequence(0, {out_h - 1})) AS orow")
+         .selectExpr("*", f"explode(sequence(0, {out_w - 1})) AS ocol")
+         .selectExpr("*", f"(orow + 0.5) * h / {out_h}.0 - 0.5 AS fr", f"(ocol + 0.5) * w / {out_w}.0 - 0.5 AS fc"))
+    d = d.selectExpr("*", "fc - floor(fc) AS dc", "fr - floor(fr) AS dr", *(
+        f"least(greatest(cast(floor(f{a}) as bigint) + ({i}), 0), {n} - 1) AS {a}{a}_{i}"
+        for a, n in (("r", "h"), ("c", "w")) for i in (0, 1)))
     for i in (0, 1):
         for j in (0, 1):
             d = pixel_value_sql(d, f"rr_{i}", f"cc_{j}", f"v_{i}_{j}")

@@ -81,6 +81,42 @@ def in_bounds(grid: Column, row, col) -> Column:
     return (r >= 0) & (r < grid["rows"]) & (c >= 0) & (c < grid["cols"])
 
 
+# The same rules as SQL text for hot plans (one parsed expression, not a
+# Column tree of py4j round trips). The Column forms stay for grids built
+# as Columns: PySpark renders Column arithmetic as unparseable ``+(a, b)``.
+
+def point_index_sql(g: str, v: str, axis: str) -> str:
+    """:func:`point_col` (``axis`` 'x') / :func:`point_row` ('y') of
+    coordinate text ``v`` in grid struct text ``g``."""
+    step = "cell_width" if axis == "x" else "cell_height"
+    return f"cast(rint(({v} - {g}.{axis}_origin) / {g}.{step} - 0.5E0) as bigint)"
+
+
+def in_bounds_sql(g: str, row: str, col: str) -> str:
+    return f"({row} >= 0 AND {row} < {g}.rows AND {col} >= 0 AND {col} < {g}.cols)"
+
+
+def double_sql(x: float) -> str:
+    """A DOUBLE literal in Spark SQL and DuckDB (E-notation): a plain
+    ``0.5`` parses as DECIMAL, whose coercion slows Spark's analysis."""
+    r = repr(float(x))
+    return r if "e" in r else f"{r}E0"
+
+
+def sql_text(c) -> str:
+    """SQL text of a column argument: a str is SQL already (a column
+    name or an expression); a Column renders through its own SQL form,
+    which parses back exactly for column references, field paths,
+    literals and ``F.expr`` columns — pass anything else as SQL text."""
+    return c if isinstance(c, str) else c._jc.toString()
+
+
+def struct_sql(s) -> str:
+    """SQL text of a struct argument, ready for ``.field`` access."""
+    s = sql_text(s)
+    return s if s.replace("_", "").replace(".", "").isalnum() else f"({s})"
+
+
 # --- cell centers (affine_center × index, raster_grid.py:687-715) ------------
 
 def cell_center_x(grid: Column, col) -> Column:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rasters_spark import cells, fixtures, grid
+from rasters_spark import cells, fixtures
 
 
 def knn_tiles(
@@ -52,42 +52,31 @@ def knn_tiles(
     # nested grid-field extraction through stacked Generate nodes trips
     # Spark's INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND schema-pruning bug, and
     # two doubles are narrower than the grid struct anyway)
-    g = F.col("grid")
-    flat = tiles.select(
+    bbox_input = "cell_id" not in tiles.columns
+    flat = tiles.selectExpr(
         "image_id",
-        (g["x_origin"] + g["cell_width"] * g["cols"].cast("double") / 2.0).alias("_cx"),
-        (g["y_origin"] + g["cell_height"] * g["rows"].cast("double") / 2.0).alias("_cy"),
-        *(["cell_id"] if "cell_id" in tiles.columns else ["bbox"]),
+        # 2.0E0: a DOUBLE literal (grid.double_sql)
+        "grid.x_origin + grid.cell_width * cast(grid.cols as double) / 2.0E0 AS _cx",
+        "grid.y_origin + grid.cell_height * cast(grid.rows as double) / 2.0E0 AS _cy",
+        "bbox" if bbox_input else "cell_id",
     )
-    if "cell_id" not in tiles.columns:
+    if bbox_input:
         # round-6: one explode of the DISTINCT ring union per tile
         # (padded bbox rectangle, cells.ring_cells_bbox) instead of
         # cells explode × per-cell ring explode — the same candidate
         # set with ~40% fewer generated rows and no duplicate
         # (point, tile) pairs (measured 1.57M → 0.9M ring rows,
         # 2.7M → 1.6M join candidates at sf0.1)
-        index = flat.select(
-            "image_id", "_cx", "_cy",
-            F.explode(cells.ring_cells_bbox(F.col("bbox"), level, ring)).alias("cell_id"),
-        )
+        ring_sql = cells.ring_cells_bbox_sql(*cells.bbox_fields("bbox"), level, ring)
     else:
-        index = flat.select(
-            "image_id", "_cx", "_cy",
-            F.explode(cells.ring_cells(F.col("cell_id"), level, ring)).alias("cell_id"),
-        )
-    pts = points.select(
-        "point_id", "x", "y",
-        cells.cell_id(F.col("x"), F.col("y"), level).alias("cell_id"),
-    )
-    dx = F.col("_cx") - F.col("x")
-    dy = F.col("_cy") - F.col("y")
-    j = (
-        index.join(F.broadcast(pts), "cell_id")
-        # dx*dx, not pow(dx,2): plain multiplication is bit-identical across
-        # engines (numpy / DuckDB oracle), libm pow is not guaranteed to be
-        .withColumn("dist", F.sqrt(dx * dx + dy * dy))
-    )
-    if "cell_id" not in tiles.columns:
+        ring_sql = cells.ring_cells_sql("cell_id", level, ring)
+    index = flat.selectExpr("image_id", "_cx", "_cy", f"explode({ring_sql}) AS cell_id")
+    pts = points.selectExpr("point_id", "x", "y", f"{cells.cell_id_sql('x', 'y', level)} AS cell_id")
+    j = index.join(pts.hint("broadcast"), "cell_id")
+    # dx*dx, not pow(dx,2): plain multiplication is bit-identical across
+    # engines (numpy / DuckDB oracle), libm pow is not guaranteed to be
+    dist = "sqrt((_cx - x) * (_cx - x) + (_cy - y) * (_cy - y))"
+    if bbox_input:
         # Round-6 top-k: candidate pairs are DISTINCT by construction
         # (ring_cells_bbox), so the per-point top-k is a plain
         # row_number window with the (dist, image_id) total order —
@@ -101,12 +90,12 @@ def knn_tiles(
         # the window-group-limit plan does the same top-k inside
         # codegen'd sorts (measured 18.5 s → 7.8 s at sf1, parity at
         # sf0.1).
-        from pyspark.sql.window import Window
-
-        win = Window.partitionBy("point_id").orderBy("dist", "image_id")
-        return (j.withColumn("rank", F.row_number().over(win))
-                .filter(F.col("rank") <= k)
-                .select("point_id", "image_id", "rank", "dist"))
+        return (j.selectExpr("point_id", "image_id", f"{dist} AS dist")
+                .selectExpr("point_id", "image_id",
+                            "row_number() OVER (PARTITION BY point_id ORDER BY dist, image_id) AS rank",
+                            "dist")
+                .filter(f"rank <= {k}"))
+    j = j.selectExpr("*", f"{dist} AS dist")
     # pre-exploded cell_id input: per-cell rings can emit the same
     # (point, tile) pair via several cells — collect_set dedups while
     # aggregating, with partial per-(point, input-partition) truncation

@@ -16,7 +16,7 @@ to a tile iff its banker's-rounded center-affine index lands inside
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Column
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasters_spark import cells, fixtures, grid
@@ -71,29 +71,29 @@ def point_in_tile_join(
         src = tiles_cells if inline_payload else tiles_cells.drop(*payload_cols)
         index = tiles_with_cells(src, level)
         payload_src = None if inline_payload or not payload_cols else tiles_cells
-    pts = points.withColumn("cell_id", cells.cell_id(F.col("x"), F.col("y"), level))
+    cid = cells.cell_id_sql("x", "y", level)
+    pts_cols = [f"`{c}`" for c in points.columns if c != "crs"]
     if n_salts:
-        index = index.withColumn(
-            "join_key", cells.salted(F.col("cell_id"), n_salts) + cells.salt_of(F.col("image_id"), n_salts)
-        )
-        pts = pts.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))).withColumn(
-            "join_key", cells.salted(F.col("cell_id"), n_salts) + F.col("_salt")
-        ).drop("_salt", "cell_id")
+        # big side: cell_id·S + hash salt; small side: every salt of its cell
+        index = index.selectExpr(
+            "*", f"cell_id * {n_salts} + pmod(xxhash64(image_id), {n_salts}) AS join_key")
+        pts = points.selectExpr(
+            *pts_cols, f"explode(sequence(({cid}) * {n_salts}, ({cid}) * {n_salts} + {n_salts - 1})) AS join_key")
         key = "join_key"
     else:
+        pts = points.selectExpr(*pts_cols, f"{cid} AS cell_id")
         key = "cell_id"
-    p = F.broadcast(pts) if broadcast_points else pts
-    j = index.join(p.drop("crs"), key)
-    g = F.col("grid")
-    j = j.withColumn("prow", grid.point_row(g, F.col("y"))).withColumn(
-        "pcol", grid.point_col(g, F.col("x"))
-    )
-    j = j.filter(grid.in_bounds(g, F.col("prow"), F.col("pcol")))
-    if inline_payload:
-        # reproduce the historical column order of the split shape:
-        # join cols (payload last) — callers select by name anyway
-        base = [c for c in j.columns if c not in payload_cols]
-        return j.select(*base, *payload_cols)
+    j = index.join(pts.hint("broadcast") if broadcast_points else pts, key)
+    # inline payload: reproduce the historical column order of the split
+    # shape — join cols, then prow/pcol, payload last (callers select by
+    # name anyway)
+    last = payload_cols if inline_payload else ()
+    j = j.selectExpr(
+        *(f"`{c}`" for c in j.columns if c not in last),
+        f"{grid.point_index_sql('grid', 'y', 'y')} AS prow",
+        f"{grid.point_index_sql('grid', 'x', 'x')} AS pcol",
+        *(f"`{c}`" for c in last),
+    ).filter(grid.in_bounds_sql("grid", "prow", "pcol"))
     if payload_src is not None:
         # matched pairs are bounded by |points|·fanout when the point side
         # was broadcast-able → broadcast them and STREAM the payload scan

@@ -14,12 +14,15 @@ once per tile.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from rasters_spark import codec
+from rasters_spark.grid import double_sql
 
 
 def _idw_tile(arr: np.ndarray, t, qx: np.ndarray, qy: np.ndarray,
@@ -52,30 +55,39 @@ def _idw_tile(arr: np.ndarray, t, qx: np.ndarray, qy: np.ndarray,
     return out
 
 
-def _le32_bits(sl: str) -> str:
-    """bigint from a 4-byte little-endian binary expression ``sl`` —
-    hex() then byte-swap the hex pairs and conv() base-16. Pure JVM
-    string/integer ops, no Python boundary."""
-    h = f"hex({sl})"
-    return (f"conv(concat(substring({h},7,2),substring({h},5,2),"
-            f"substring({h},3,2),substring({h},1,2)),16,10)")
+def _be_sql(sl: str) -> str:
+    """bigint of binary ``sl`` read big-endian (hex, conv base 16). SQL
+    has no byte swap: ``reverse(binary)`` reverses a UTF-8 string cast,
+    so ``hex(reverse(X'C3A90180'))`` is ``8001C3A9``."""
+    return f"cast(conv(hex({sl}), 16, 10) as bigint)"
 
 
-def _f32_from_bits(bits: str) -> str:
-    """IEEE-754 binary32 → double from a bigint bit pattern — exact:
-    (mantissa + 2^23)·2^(exp−150) is a 24-bit integer times a power of
-    two, both exactly representable in double. NaN → NULL (the Arrow
-    kernel's NaN→null convention at the relational boundary), ±Inf kept."""
-    sign = f"IF(({bits} >> 31) & 1 = 1, -1.0, 1.0)"
-    exp = f"(({bits} >> 23) & 255)"
-    man = f"({bits} & 8388607)"
+def _f32_sql(v: str) -> str:
+    """IEEE-754 binary32 → double from ``v = b0<<24 | … | b3``, the
+    big-endian bigint of its little-endian bytes: sign = bit 7 of b3,
+    exponent = b3's low 7 bits + b2's top bit, mantissa = the rest.
+    Exact: (mantissa + 2^23)·2^(exp−150) fits a double. NaN → NULL (the
+    NaN→null rule at the relational boundary), ±Inf kept."""
+    sign = f"IF(({v} >> 7) & 1 = 1, -1.0E0, 1.0E0)"
+    exp = f"((({v} & 127) << 1) | (({v} >> 15) & 1))"
+    man = f"(((({v} >> 8) & 127) << 16) | ((({v} >> 16) & 255) << 8) | ({v} >> 24))"
     return (
         f"CASE WHEN {exp} = 255 THEN "
         f"  CASE WHEN {man} = 0 THEN {sign} * cast('Infinity' as double) "
         f"       ELSE cast(null as double) END "
-        f"WHEN {exp} = 0 THEN {sign} * cast({man} as double) * power(2.0, -149.0) "
+        f"WHEN {exp} = 0 THEN {sign} * cast({man} as double) * power(2.0E0, -149.0E0) "
         f"ELSE {sign} * cast({man} + 8388608 as double) * "
-        f"     power(2.0, cast({exp} as double) - 150.0) END")
+        f"     power(2.0E0, cast({exp} as double) - 150.0E0) END")
+
+
+def _i32_sql(v: str) -> str:
+    """int32 from ``v`` (as in :func:`_f32_sql`), the I32_NODATA
+    sentinel (bytes 00 00 00 80, ``v = 128``) → NULL: the little-endian
+    unsigned value minus 2^32 when the sign bit (bit 7 of b3) is set."""
+    le = (f"((({v} & 255) << 24) | ((({v} >> 8) & 255) << 16) | "
+          f"((({v} >> 16) & 255) << 8) | ({v} >> 24))")
+    return (f"IF({v} = 128, cast(null as double), "
+            f"cast({le} - (({v} >> 7) & 1) * 4294967296 as double))")
 
 
 def _q8_chain_sql(vminf: str, vmaxf: str, q: str) -> str:
@@ -85,18 +97,19 @@ def _q8_chain_sql(vminf: str, vmaxf: str, q: str) -> str:
     bits (>= 2p+2), so each cast equals the direct float32 op.
     ``vminf``/``vmaxf`` are float columns, ``q`` a bigint byte column."""
     sub = f"cast(({vmaxf} - {vminf}) as float)"
-    span = f"IF(cast({sub} as double) = 0.0, cast(1.0 as float), {sub})"
-    t1 = f"cast((cast({q} as float) / cast(254.0 as float)) as float)"
+    span = f"IF(cast({sub} as double) = 0.0E0, cast(1.0E0 as float), {sub})"
+    t1 = f"cast((cast({q} as float) / cast(254.0E0 as float)) as float)"
     t2 = f"cast(({t1} * {span}) as float)"
     out = f"cast(({vminf} + {t2}) as float)"
     return f"IF({q} = 255, cast(null as double), cast({out} as double))"
 
 
-def _q8_header_float_sql(pos: int) -> str:
-    """float32 at byte offset ``pos`` of a q8 header, 0.0f for non-q8."""
-    hdr_bits = f"cast({_le32_bits(f'substring(bytes, {pos}, 4)')} as bigint)"
-    return (f"IF(fmt = 'q8', cast(({_f32_from_bits(hdr_bits)}) as float), "
-            f"cast(0.0 as float))")
+#: q8 header words (big-endian bigints of bytes 1-4 and 5-8; 0 for
+#: other fmts) and the header floats decoded from them
+_Q8_WORDS = {f"_q8_w{i}": f"IF(fmt = 'q8', {_be_sql(f'substring(bytes, {pos}, 4)')}, 0)"
+             for i, pos in ((0, 1), (1, 5))}
+_Q8_FLOATS = {"_q8_vmin": f"cast(({_f32_sql('_q8_w0')}) as float)",
+              "_q8_vmax": f"cast(({_f32_sql('_q8_w1')}) as float)"}
 
 
 def with_q8_header(df: DataFrame) -> DataFrame:
@@ -106,8 +119,32 @@ def with_q8_header(df: DataFrame) -> DataFrame:
     row attaches them once up front, before any explode, so the header
     decodes once per tile instead of once per tap — and its code stays
     out of the exploded rows' codegen method."""
-    return (df.withColumn("_q8_vmin", F.expr(_q8_header_float_sql(1)))
-              .withColumn("_q8_vmax", F.expr(_q8_header_float_sql(5))))
+    return _with_sql(_with_sql(df, _Q8_WORDS), _Q8_FLOATS).drop(*_Q8_WORDS)
+
+
+def _with_sql(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    return df.withColumns({k: F.expr(v) for k, v in exprs.items()})
+
+
+@lru_cache(maxsize=None)
+def _pixel_sql(row_col: str, col_col: str, b: str) -> tuple[str, str]:
+    """(slice bits, value) SQL text of one pixel read: the bits are the
+    big-endian bigint of the pixel's bytes (4 for raw/i32, 1 for b1/q8
+    past the 8-byte header), read once; the value decodes bits column
+    ``b`` per fmt."""
+    off = f"({row_col}*w+{col_col})"
+    start = (f"cast(CASE WHEN fmt IN ('raw', 'i32') THEN 4*{off} + 1 "
+             f"WHEN fmt = 'b1' THEN {off} + 1 ELSE {off} + {codec.HEADER_Q8 + 1} END as int)")
+    bits = _be_sql(f"substring(bytes, {start}, IF(fmt IN ('raw', 'i32'), 4, 1))")
+    val_of = {
+        "raw": _f32_sql(b),
+        "i32": _i32_sql(b),
+        "b1": f"cast({b} as double)",
+        "q8": _q8_chain_sql("_q8_vmin", "_q8_vmax", b),
+    }
+    *head, last = codec.FMTS
+    branches = " ".join(f"WHEN fmt = '{f}' THEN {val_of[f]}" for f in head)
+    return bits, f"CASE {branches} ELSE {val_of[last]} END"
 
 
 def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
@@ -119,39 +156,20 @@ def pixel_value_sql(df: DataFrame, row_col: str, col_col: str,
     certified against the DuckDB oracles of every point-read query).
     Round-6 optimization: the Python boundary round trip was ~60% of a
     nearest-read stage's wall even at 8 B/row (guide §4.1 — built-ins
-    beat any UDF). The per-row bit pattern and the q8 header floats are
-    hoisted into their own projection columns (CollapseProject keeps
-    non-cheap aliases un-inlined) so each hex/conv runs once per row,
-    not once per reference — inlining them measured 1.8× slower."""
-    off = f"({row_col}*w+{col_col})"
+    beat any UDF). Three projections of cached text, each
+    sub-expression once: (1) the pixel's bytes as one big-endian bigint
+    (one hex/conv per row) and the q8 header words; (2) the header
+    floats; (3) the input columns plus the value (shifts and masks of
+    (1)). CollapseProject keeps the hoisted non-cheap columns
+    un-inlined — inlining them measured 1.8× slower."""
     b = f"_pxb_{value_name}"
-    # one bits column per fmt family: raw/i32 → LE uint32 of the 4-byte
-    # slice, b1/q8 → the single byte value
-    bits_of = {
-        "raw": f"cast({_le32_bits(f'substring(bytes, cast(4*{off} as int) + 1, 4)')} as bigint)",
-        "b1": f"cast(conv(hex(substring(bytes, cast({off} as int) + 1, 1)),16,10) as bigint)",
-        "q8": f"cast(conv(hex(substring(bytes, cast({off} as int) + 9, 1)),16,10) as bigint)",
-    }
-    bits_of["i32"] = bits_of["raw"]
-    i32 = f"IF({b} >= 2147483648, {b} - 4294967296, {b})"
-    val_of = {
-        "raw": f"({_f32_from_bits(b)})",
-        "i32": f"IF({i32} = -2147483648, cast(null as double), cast({i32} as double))",
-        "b1": f"cast({b} as double)",
-        "q8": f"({_q8_chain_sql('_q8_vmin', '_q8_vmax', b)})",
-    }
-
-    def _case(exprs: dict) -> str:
-        *head, last = codec.FMTS
-        branches = " ".join(f"WHEN fmt = '{f}' THEN {exprs[f]}" for f in head)
-        return f"CASE {branches} ELSE {exprs[last]} END"
-
-    add_hdr = "_q8_vmin" not in df.columns
+    bits, value = _pixel_sql(row_col, col_col, b)
+    cols = [f"`{c}`" for c in df.columns]
+    add_hdr = "`_q8_vmin`" not in cols
+    df = _with_sql(df, {b: bits, **(_Q8_WORDS if add_hdr else {})})
     if add_hdr:
-        df = with_q8_header(df)
-    return (df.withColumn(b, F.expr(_case(bits_of)))
-              .withColumn(value_name, F.expr(_case(val_of)))
-              .drop(*([b, "_q8_vmin", "_q8_vmax"] if add_hdr else [b])))
+        df = _with_sql(df, _Q8_FLOATS)
+    return df.selectExpr(*cols, f"{value} AS `{value_name}`")
 
 
 def sample_nearest(joined: DataFrame, value_name: str = "value") -> DataFrame:
@@ -221,11 +239,16 @@ def _sharded_tile_agg(skinny: DataFrame, keep: list[str], payload: DataFrame,
     the tile blobs shuffle for it; at ≥10⁹ matched tiles per job the
     broadcast no longer fits and hot-tile counts should come from a
     sampled sketch or the bucketed-at-rest tile stats instead."""
-    structs = F.collect_list(
-        F.struct(*[F.col(c).alias(c) for c in keep])).alias("_rows")
+    structs = F.expr(f"collect_list(struct({', '.join(f'`{c}`' for c in keep)})) AS _rows")
+    cols = [f"`{c}`" for c in keep]
     if max_shards <= 1:
-        agg = skinny.groupBy(F.col("image_id").alias("_aimg")).agg(structs)
-        return payload.join(agg, payload["_img"] == agg["_aimg"]).drop("_img", "_aimg")
+        agg = skinny.groupBy("image_id").agg(structs)
+        return payload.join(agg, F.expr("_img = image_id")).drop("_img", "image_id")
+    hash_cols = ", ".join(f"`{c}`" for c in keep if c != "image_id")
+
+    def n_shards(n: str) -> str:
+        return f"cast(least({max_shards}, greatest(1, ceil({n} / {double_sql(shard_target)}))) as int)"
+
     if tile_counts is None:
         # round-6 replan: per-tile match counts via a WINDOW over the
         # image_id partitioning instead of a separate counts subtree.
@@ -246,46 +269,25 @@ def _sharded_tile_agg(skinny: DataFrame, keep: list[str], payload: DataFrame,
         # pathological one-giant-tile case (documented trade: the r5
         # spread cost 2 extra subtree computations per run, measured
         # ~2x the whole stage at sf0.1).
-        from pyspark.sql.window import Window
-
-        win = Window.partitionBy("image_id")
-        skinny2 = skinny.withColumn("_n", F.count(F.lit(1)).over(win))
-        hash_cols = [c for c in keep if c != "image_id"]
-        skinny2 = skinny2.withColumn(
-            "_ns", F.least(
-                F.lit(max_shards),
-                F.greatest(F.lit(1), F.ceil(F.col("_n") / F.lit(float(shard_target))))
-            ).cast("int")
-        ).withColumn(
-            "_shard", F.pmod(F.hash(*[F.col(c) for c in hash_cols]), F.col("_ns")))
-        agg = skinny2.groupBy(F.col("image_id").alias("_aimg"),
-                              F.col("_shard").alias("_ashard")).agg(structs)
+        ns = n_shards("count(1) OVER (PARTITION BY image_id)")
+        agg = (skinny.selectExpr(*cols, f"pmod(hash({hash_cols}), {ns}) AS _shard")
+               .groupBy("image_id", "_shard").agg(structs))
         # SHUFFLE_HASH, payload as build side: without the hint the
         # planner broadcast-collects the blob table through the driver
         # (~100 MB serial at sf0.1, unbounded at scale); the hash join
         # shuffles it once, in parallel, and builds one-row-per-tile
         # maps per partition
-        return (payload.hint("shuffle_hash").join(agg, payload["_img"] == agg["_aimg"])
-                .drop("_img", "_aimg", "_ashard"))
-    counts = (tile_counts
-              .withColumn("_ns", F.least(
-                  F.lit(max_shards),
-                  F.greatest(F.lit(1), F.ceil(F.col("n") / F.lit(float(shard_target))))
-              ).cast("int"))
-              .select(F.col("image_id").alias("_cimg"), "_ns"))
-    counts = F.broadcast(counts)
-    hash_cols = [c for c in keep if c != "image_id"]
-    skinny2 = skinny.join(counts, skinny["image_id"] == counts["_cimg"]).withColumn(
-        "_shard", F.pmod(F.hash(*[F.col(c) for c in hash_cols]), F.col("_ns")))
-    agg = skinny2.groupBy(F.col("image_id").alias("_aimg"),
-                          F.col("_shard").alias("_ashard")).agg(structs)
-    payload2 = (payload.join(counts, payload["_img"] == counts["_cimg"])
-                .withColumn("_pshard",
-                            F.explode(F.sequence(F.lit(0), F.col("_ns") - 1)))
+        return (payload.hint("shuffle_hash").join(agg, F.expr("_img = image_id"))
+                .drop("_img", "image_id", "_shard"))
+    counts = tile_counts.selectExpr("image_id AS _cimg", f"{n_shards('n')} AS _ns").hint("broadcast")
+    agg = (skinny.join(counts, F.expr("image_id = _cimg"))
+           .selectExpr(*cols, f"pmod(hash({hash_cols}), _ns) AS _shard")
+           .groupBy("image_id", "_shard").agg(structs))
+    payload2 = (payload.join(counts, F.expr("_img = _cimg"))
+                .selectExpr("*", "explode(sequence(0, _ns - 1)) AS _pshard")
                 .drop("_cimg", "_ns"))
-    return (payload2.join(agg, (payload2["_img"] == agg["_aimg"])
-                          & (payload2["_pshard"] == agg["_ashard"]))
-            .drop("_img", "_aimg", "_pshard", "_ashard"))
+    return (payload2.join(agg, F.expr("_img = image_id AND _pshard = _shard"))
+            .drop("_img", "image_id", "_pshard", "_shard"))
 
 
 def sample_idw(joined: DataFrame, tiles: DataFrame | None = None,
@@ -327,21 +329,16 @@ def sample_idw(joined: DataFrame, tiles: DataFrame | None = None,
     (each shard re-joins the payload and decodes the tile once; IDW is
     per-point independent so results are unchanged). ``max_shards=1``
     restores the unsalted plan."""
-    g = F.col("grid")
     if tiles is None:
-        payload = joined.select(
-            F.col("image_id").alias("_img"), "bytes", "w", "h", "fmt",
-            g["x_origin"].alias("x_origin"), g["y_origin"].alias("y_origin"),
-            g["cell_width"].alias("cell_width"), g["cell_height"].alias("cell_height"),
-        ).groupBy("_img").agg(
-            *[F.first(c).alias(c) for c in _TILE_PAYLOAD])
+        payload = joined.selectExpr(
+            "image_id AS _img", "bytes", "w", "h", "fmt",
+            *(f"grid.{c} AS {c}" for c in ("x_origin", "y_origin", "cell_width", "cell_height")),
+        ).groupBy("_img").agg(*(F.expr(f"first({c}) AS {c}") for c in _TILE_PAYLOAD))
     else:
         # every column re-aliased → fresh attribute ids: tiles and
         # joined share lineage (joined = point_in_tile_join(pts, tiles))
         # and reused ids would trip the ambiguous-self-join check
-        payload = tiles.select(
-            F.col("image_id").alias("_img"),
-            *[F.col(c).alias(c) for c in _TILE_PAYLOAD])
+        payload = tiles.selectExpr("image_id AS _img", *(f"{c} AS {c}" for c in _TILE_PAYLOAD))
     skinny = joined.drop("bytes")
     out_cols = list(skinny.columns)
     withp = _sharded_tile_agg(skinny, out_cols, payload,
@@ -426,18 +423,14 @@ def sample_nearest_grouped(joined: DataFrame, tiles: DataFrame,
     exists, so a hot tile cannot grow one without bound; AQE skew-join
     splitting spreads its pairs. Result ≡ sample_nearest (same
     oracle)."""
-    payload = tiles.select(
-        F.col("image_id").alias("_img"), "bytes", "w", "h", "fmt",
-        *[F.col(c).alias(c) for c in ("caption",) if c in tiles.columns])
-    keep = [c for c in joined.columns
+    caption = ["caption AS caption"] if "caption" in tiles.columns else []
+    payload = tiles.selectExpr("image_id AS _img", "bytes", "w", "h", "fmt", *caption)
+    keep = [f"`{c}`" for c in joined.columns
             if c not in ("bytes", "w", "h", "fmt", "grid", "bbox", "caption", "phash",
                          "x_origin", "y_origin", "cell_width", "cell_height", "crs")]
-    skinny = joined.select(*keep)
-    out_cols = keep + [c for c in ("caption",) if c in tiles.columns]
-    j = skinny.join(payload.hint("shuffle_hash"),
-                    skinny["image_id"] == payload["_img"]).drop("_img")
-    return pixel_value_sql(j, "prow", "pcol", value_name).select(
-        *out_cols, value_name)
+    j = joined.selectExpr(*keep).join(payload.hint("shuffle_hash"), F.expr("image_id = _img"))
+    return pixel_value_sql(j, "prow", "pcol", value_name).selectExpr(
+        *keep, *(["caption"] if caption else []), value_name)
 
 
 def sample_auto(joined: DataFrame, tiles: DataFrame | None = None,

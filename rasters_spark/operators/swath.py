@@ -66,11 +66,10 @@ def swath_index_point(swath: DataFrame, points: DataFrame, level: int = 10) -> D
     via cell-bucket candidates + min_by distance; ring 1 so the true NN
     in an adjacent bucket is not missed. → (point_id, swath_id, row,
     col, dist)."""
-    sw = swath.withColumn("cell", cells.cell_id(F.col("x"), F.col("y"), level))
-    pts = points.select(
-        "point_id", F.col("x").alias("qx"), F.col("y").alias("qy"),
-        F.explode(cells.ring_cells(cells.cell_id(F.col("x"), F.col("y"), level), level, 1)).alias("cell"),
-    )
+    cid = cells.cell_id_sql("x", "y", level)
+    sw = swath.selectExpr("*", f"{cid} AS cell")
+    pts = points.selectExpr("point_id", "x AS qx", "y AS qy",
+                            f"explode({cells.ring_cells_sql(cid, level, 1)}) AS cell")
     dx = F.col("x") - F.col("qx")
     dy = F.col("y") - F.col("qy")
     j = sw.join(F.broadcast(pts), "cell").withColumn("dist", F.sqrt(dx * dx + dy * dy))

@@ -326,11 +326,10 @@ def write_zordered(df: DataFrame, path: str, level: int | None = None,
     shrinks by orders of magnitude vs insertion order
     (tests/test_tableio_streaming.py)."""
     from rasters_spark import cells, fixtures
-    from pyspark.sql import functions as F
 
     lv = fixtures.CELL_LEVEL if level is None else level
-    cx = F.col("x_origin") + F.col("cell_width") * F.col("w").cast("double") / 2.0
-    cy = F.col("y_origin") + F.col("cell_height") * F.col("h").cast("double") / 2.0
+    cx = "x_origin + cell_width * cast(w as double) / 2.0E0"
+    cy = "y_origin + cell_height * cast(h as double) / 2.0E0"
     z = df.withColumn("z_id", cells.z_cell_id(cx, cy, lv))
     (z.repartitionByRange(n_files, "z_id")
       .sortWithinPartitions("z_id")

@@ -54,7 +54,8 @@ def load_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tiles_with_cells(tiles: DataFrame, level: int = fixtures.CELL_LEVEL) -> DataFrame:
     """Register each tile into every cell its footprint covers."""
-    return tiles.withColumn("cell_id", F.explode(cells.cells_for_bbox(F.col("bbox"), level)))
+    cover = cells.cells_for_bbox_sql(*cells.bbox_fields("bbox"), level)
+    return tiles.selectExpr("*", f"explode({cover}) AS cell_id")
 
 
 def open_tiles(spark: SparkSession, path: str) -> DataFrame:

@@ -46,12 +46,15 @@ def test_wrapped_bbox_registers_o1_cells(spark):
     ring = [{"x": 179.2, "y": 10.0}, {"x": -179.5, "y": 10.0},
             {"x": -179.5, "y": 11.0}, {"x": 179.2, "y": 11.0}, {"x": 179.2, "y": 10.0}]
     df = spark.createDataFrame([(ring,)], "ring array<struct<x double, y double>>")
-    bb = vecfn.ring_bbox_am(F.col("ring"))
-    row = df.select(
+    # the cell registrations take bbox columns by name (SQL text)
+    boxed = df.select(vecfn.ring_bbox_am(F.col("ring")).alias("bb"),
+                      vecfn.ring_bbox(F.col("ring")).alias("naive"))
+    bb = F.col("bb")
+    row = boxed.select(
         bb["xmin"].alias("xmin"), bb["xmax"].alias("xmax"),
         vecfn.bbox_width_am(bb).alias("width"),
-        F.size(cells.cells_for_bbox_am(bb, 7)).alias("n_cells"),
-        F.size(cells.cells_for_bbox(vecfn.ring_bbox(F.col("ring")), 7)).alias("n_cells_naive"),
+        F.size(cells.cells_for_bbox_am("bb", 7)).alias("n_cells"),
+        F.size(cells.cells_for_bbox("naive", 7)).alias("n_cells_naive"),
     ).collect()[0]
     # reference convention: xmin = min positive x, xmax = max negative x
     assert row.xmin == 179.2 and row.xmax == -179.5

@@ -74,21 +74,24 @@ def test_ring_cells_bbox_equals_union_of_rings(spark):
         x0, x1 = rng.uniform(-180.0, 180.0, 2)
         y0, y1 = np.sort(rng.uniform(-90.0, 90.0, 2))
         rows.append((float(x0), float(y0), float(x1), float(y1)))
-    df = spark.createDataFrame(rows, "xmin double, ymin double, xmax double, ymax double")
     bb = bbox_struct(F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"))
+    df = (spark.createDataFrame(rows, "xmin double, ymin double, xmax double, ymax double")
+          .select("*", cells.cells_for_bbox_am(bb, level).alias("cover_am"),
+                  cells.cells_for_bbox(bb, level).alias("cover")))
 
     def ring_union(cover, ring):
-        return F.array_sort(F.array_distinct(F.flatten(
-            F.transform(cover, lambda c: cells.ring_cells(c, level, ring)))))
+        # the ring text's cell id is the SQL lambda variable ``_c``
+        return F.expr(f"array_sort(array_distinct(flatten(transform({cover}, _c -> "
+                      f"{cells.ring_cells_sql('_c', level, ring)}))))")
 
     bad = F.lit(False)
     for ring in (0, 1, 2, 3):
         got = cells.ring_cells_bbox(bb, level, ring)
         bad = (bad
                | (F.size(got) != F.size(F.array_distinct(got)))
-               | (F.array_sort(got) != ring_union(cells.cells_for_bbox_am(bb, level), ring))
+               | (F.array_sort(got) != ring_union("cover_am", ring))
                | ((F.col("xmin") <= F.col("xmax"))
-                  & (F.array_sort(got) != ring_union(cells.cells_for_bbox(bb, level), ring))))
+                  & (F.array_sort(got) != ring_union("cover", ring))))
     assert df.filter(bad).collect() == []
 
 

@@ -245,8 +245,9 @@ def test_write_zordered_shrinks_rowgroup_spans(spark, tmp_path):
     from rasters_spark.tiles import load_tiles
 
     t = load_tiles(spark, "/root/testdata/sf0.01")
-    cx = F.col("x_origin") + F.col("cell_width") * F.col("w").cast("double") / 2.0
-    cy = F.col("y_origin") + F.col("cell_height") * F.col("h").cast("double") / 2.0
+    # tile centers as SQL text: the cell-math helpers take SQL text
+    cx = "x_origin + cell_width * cast(w as double) / 2.0E0"
+    cy = "y_origin + cell_height * cast(h as double) / 2.0E0"
     base = str(tmp_path / "plain")
     (t.withColumn("z_id", cells.z_cell_id(cx, cy, fixtures.CELL_LEVEL))
       .repartition(8)  # insertion order: z scattered across files

@@ -13,7 +13,7 @@ Three runs at local[8], same input, same plan family:
   B. unsalted, AQE skew-join ON   — Spark's runtime skew splitting
      (spark.sql.adaptive.skewJoin.*), the zero-code mitigation.
   C. salted (n_salts=8), AQE OFF  — the explicit composite-key spread
-     (cells.salted/salt_of through point_in_tile_join).
+     (point_in_tile_join(n_salts=8)).
 
 Broadcast is disabled throughout: the broadcast path has no shuffle and
 therefore no skew — this benchmark exercises the large⋈large shape the
