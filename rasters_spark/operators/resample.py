@@ -275,18 +275,60 @@ def to_grid_bilinear(tiles: DataFrame, target: dict) -> DataFrame:
 
 # --- aggregation kernels (to_grid max/min/med/mode/q1/q3) ----------------------
 
+def _key_segments(key: np.ndarray):
+    """Stable grouping by segment key → ``(order, starts, counts)``:
+    ``key[order]`` ascends, every segment keeps its elements in input
+    (C scan) order, and segment ``i`` is ``order[starts[i]:][:counts[i]]``.
+    A stable int64 argsort is a timsort, which rides the key runs of
+    the scan order; the one grouping of both cell-binning reducers."""
+    order = np.argsort(key, kind="stable")
+    k = key[order]
+    starts = np.flatnonzero(np.r_[len(k) > 0, k[1:] != k[:-1]])
+    return order, starts, np.diff(np.r_[starts, len(k)])
+
+
+def _length_classes(counts: np.ndarray):
+    """Segments by power-of-two length: yields ``(sel, width)`` — the
+    indices of the segments with ``width/2 < count <= width`` — for
+    every width ≥ 2 (single-pixel segments need no sort). A class
+    padded to its width holds < 2× its pixels."""
+    exps = np.frexp(counts - 1)[1]  # bit length of count-1: width = 2**exps
+    for e in np.unique(exps[exps > 0]):
+        yield np.flatnonzero(exps == e), 1 << int(e)
+
+
+def _sorted_segments(key: np.ndarray, val: np.ndarray):
+    """``(k, v, starts, counts)`` with ``k, v`` exactly
+    ``key[o], val[o]`` for ``o = np.lexsort((val, key))``, at segment
+    cost instead of one global sort: group by key (``_key_segments``),
+    then sort each length class's segments as the rows of one
+    ``[segments, width]`` block padded with NaN (numpy sorts NaN after
+    every value, +inf included). Both sorts are stable, so ties — and
+    −0.0/+0.0, which compare equal — keep scan order, as lexsort does."""
+    order, starts, counts = _key_segments(key)
+    k, v = key[order], val[order]
+    for sel, width in _length_classes(counts):
+        cols = np.arange(width)
+        idx = starts[sel, None] + cols
+        real = cols < counts[sel, None]
+        block = np.where(real, v[np.minimum(idx, len(v) - 1)], np.nan)
+        block.sort(axis=1, kind="stable")
+        v[idx[real]] = block[real]
+    return k, v, starts, counts
+
+
 def _segment_stat(key: np.ndarray, val: np.ndarray, stat: str):
     """Vectorized per-segment statistic over (key, value) pairs.
-    Returns (segment_keys, stat_value, counts). Quantiles use linear
+    Returns (segment_keys, stat_value, counts). The pairs are taken in
+    ``np.lexsort((val, key))`` order from ``_sorted_segments``, which
+    sorts each segment's values on their own: a decode group holds
+    millions of pixels but a target cell tens to hundreds, and a sort
+    across cells would be thrown away. Quantiles use linear
     interpolation lo + frac·(hi−lo) (≡ DuckDB quantile_cont / numpy
     'linear' — exact on the quarter-integer fixture values); mode
     tie-breaks to the SMALLEST value (documented engine convention;
     GDAL's tie order is unspecified)."""
-    order = np.lexsort((val, key))
-    k = key[order]
-    v = val[order]
-    starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
-    counts = np.diff(np.r_[starts, len(k)])
+    k, v, starts, counts = _sorted_segments(key, val)
     keys = k[starts]
     if stat == "min":
         out = v[starts]
@@ -480,24 +522,26 @@ def to_grid(tiles: DataFrame, target: dict, resampling: str = "nearest") -> Data
     raise ValueError(f"unrecognized resampling method: {resampling}")
 
 
+def _cell_sums(gkey: np.ndarray, vals: np.ndarray):
+    """``to_grid_average``'s reducer → ``(keys, sums, counts)`` on the
+    shared grouping ``_key_segments``. ``bincount`` adds element by
+    element, and the stable grouping keeps each segment in C scan
+    order, so every float sum is identical to per-tile calls."""
+    order, starts, counts = _key_segments(gkey)
+    seg = np.repeat(np.arange(len(starts)), counts)
+    sums = np.bincount(seg, weights=vals[order], minlength=len(starts))
+    return gkey[order[starts]], sums, counts
+
+
 def to_grid_average(tiles: DataFrame, target: dict) -> DataFrame:
     """to_grid(resampling='average'): area mean — every SOURCE pixel is
     assigned to the target cell containing its center; per (tile,
     target cell) mean. Runs as one Arrow pass per tile (vectorized
-    binning, no pixel explosion through the shuffle)."""
-    def cell_sums(gkey, vals):
-        # np.unique + add.at over GLOBAL (tile, cell) keys: each
-        # segment's elements keep their C scan order, so the
-        # accumulation order — and the float sum — is identical to
-        # per-tile calls
-        uniq, inv = np.unique(gkey, return_inverse=True)
-        sums = np.zeros(len(uniq)); cnts = np.zeros(len(uniq), dtype=np.int64)
-        np.add.at(sums, inv, vals)
-        np.add.at(cnts, inv, 1)
-        return uniq, sums, cnts
-
+    binning, no pixel explosion through the shuffle); ``_cell_sums``
+    adds each cell's pixels in scan order, on the grouping the
+    order-statistic kernels share."""
     partials = _map_cell_values(
-        tiles, target, cell_sums,
+        tiles, target, _cell_sums,
         "image_id string, trow long, tcol long, vsum double, n long")
     return partials.select("image_id", "trow", "tcol", (F.col("vsum") / F.col("n")).alias("value"), "n")
 

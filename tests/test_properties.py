@@ -8,7 +8,7 @@ of npref, which round-1/2 oracle runs pin against Spark bit-for-bit).
 """
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from rasters_spark import npref
@@ -103,6 +103,108 @@ def test_segment_stat_properties(vals, keys):
         for kk, vv in zip(gk, gv):
             seg = v[k == kk]
             assert seg.min() - 1e-12 <= vv <= seg.max() + 1e-12
+
+
+def _segment_stat_lexsort(key, val, stat):
+    """Reference ``_segment_stat``: one global ``np.lexsort((val, key))``."""
+    order = np.lexsort((val, key))
+    k, v = key[order], val[order]
+    starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+    counts = np.diff(np.r_[starts, len(k)])
+    if stat == "min":
+        out = v[starts]
+    elif stat == "sum":
+        out = np.add.reduceat(v, starts)
+    elif stat == "max":
+        out = v[starts + counts - 1]
+    elif stat in ("med", "q1", "q3"):
+        pos = starts + (counts - 1) * {"med": 0.5, "q1": 0.25, "q3": 0.75}[stat]
+        lo, hi = np.floor(pos).astype(np.int64), np.ceil(pos).astype(np.int64)
+        frac = pos - lo
+        out = v[lo] * (1.0 - frac) + v[hi] * frac
+    else:  # mode: longest run of equal values, the smallest on ties
+        out = np.empty(len(starts))
+        for i, (s, c) in enumerate(zip(starts, counts)):
+            vals, runs = np.unique(v[s:s + c], return_counts=True)
+            out[i] = v[s:s + c][np.searchsorted(v[s:s + c], vals[np.argmax(runs)])]
+    return k[starts], out, counts
+
+
+def _cell_sums_add_at(key, val):
+    """Reference ``_cell_sums``: ``np.unique`` + ``np.add.at``."""
+    uniq, inv = np.unique(key, return_inverse=True)
+    sums = np.zeros(len(uniq))
+    np.add.at(sums, inv, val)
+    return uniq, sums, np.bincount(inv, minlength=len(uniq))
+
+
+def _bits(a):
+    return a.view(np.int64) if a.dtype.kind == "f" else a
+
+
+#: a tie-heavy value pool with both signed zeros, mixed with any float
+_seg_val = st.one_of(st.sampled_from([-0.0, 0.0, 0.25, -0.25, 1.0, 2.5]),
+                     st.floats(allow_nan=False, width=64))
+
+
+@st.composite
+def _segment_pairs(draw):
+    """Unsorted (key, value) pairs: up to 200 short-segment pairs over
+    64 keys, optionally one ≥4,096-pair segment of ties and signed
+    zeros (several length classes), keys offset to just below 2**53."""
+    keys = draw(st.lists(st.integers(0, 63), max_size=200))
+    vals = draw(st.lists(_seg_val, min_size=len(keys), max_size=len(keys)))
+    long_n = draw(st.sampled_from([0, 0, 4096, 5000]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    k = np.r_[np.array(keys, np.int64), np.full(long_n, 64, np.int64)]
+    v = np.r_[np.array(vals, np.float64), rng.choice([-0.0, 0.0, 0.5, -7.25], long_n)]
+    perm = rng.permutation(len(k))
+    return k[perm] + draw(st.sampled_from([0, 2**53 - 65])), v[perm]
+
+
+_EMPTY = (np.array([], np.int64), np.array([], np.float64))
+_SINGLES = (np.array([9, 3, 7, 1], np.int64), np.array([-0.0, 0.0, 2.5, -0.0]))
+
+
+@settings(max_examples=200, deadline=None)
+@given(pairs=_segment_pairs())
+@example(pairs=_EMPTY)
+@example(pairs=_SINGLES)
+def test_sorted_segments_is_lexsort_order(pairs):
+    """``resample._sorted_segments`` returns exactly the pairs of one
+    global lexsort, bit for bit (signed zeros in the same slots), and
+    no padded length class holds 2× its segments' pixels or more."""
+    from rasters_spark.operators.resample import _length_classes, _sorted_segments
+    key, val = pairs
+    k, v, starts, counts = _sorted_segments(key, val)
+    order = np.lexsort((val, key))
+    assert np.array_equal(k, key[order])
+    assert np.array_equal(v.view(np.int64), val[order].view(np.int64))
+    assert counts.sum() == len(key) and np.array_equal(np.unique(key), k[starts])
+    seen = np.zeros(len(counts), dtype=int)
+    for sel, width in _length_classes(counts):
+        assert width * len(sel) < 2 * counts[sel].sum()
+        assert (counts[sel] <= width).all()
+        seen[sel] += 1
+    assert np.array_equal(seen, counts > 1)
+
+
+@settings(max_examples=200, deadline=None)
+@given(pairs=_segment_pairs())
+@example(pairs=_SINGLES)
+def test_segment_reducers_match_lexsort_and_add_at(pairs):
+    """All seven ``_segment_stat`` stats and ``_cell_sums`` equal the
+    global-lexsort / ``np.add.at`` references bit for bit."""
+    from rasters_spark.operators.resample import _cell_sums, _segment_stat
+    key, val = pairs
+    assume(len(key))
+    with np.errstate(invalid="ignore"):  # ±inf · 0 weights, inf + −inf sums
+        outs = {stat: (_segment_stat(key, val, stat), _segment_stat_lexsort(key, val, stat))
+                for stat in ("min", "max", "med", "q1", "q3", "mode", "sum")}
+        outs["sums"] = (_cell_sums(key, val), _cell_sums_add_at(key, val))
+    for name, (got, want) in outs.items():
+        for g, w in zip(got, want):
+            assert np.array_equal(_bits(g), _bits(w)), name
 
 
 def _spread(v: int) -> int:

@@ -175,3 +175,13 @@ def test_one_nearest_candidate_path():
     assert _calls_of(tree, "sample_nearest") == {"to_geometry", "resample_with_index"}
     for path in sorted((ROOT / "rasters_spark").rglob("*.py")):
         assert "target_candidates" not in path.read_text(), path
+
+
+def test_no_global_pixel_sort():
+    """The cell-binning reducers group by key with a stable integer sort
+    and sort values inside segments (``resample._sorted_segments``):
+    no lexsort or scattered ``add.at`` over a decode group's pixels."""
+    tree = ast.parse((ROOT / "rasters_spark" / "operators" / "resample.py").read_text())
+    assert not _calls_of(tree, "lexsort")
+    assert not [n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "at"
+                and isinstance(n.value, ast.Attribute) and n.value.attr == "add"]
