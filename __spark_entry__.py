@@ -1912,7 +1912,7 @@ def q_swath_cell_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tiles(spark, sf_dir).filter("fmt = 'raw'")
-    return bands.band_stats(bands.with_bands(t, 3))
+    return bands.band_stats(bands.with_bands(t, "cast(substring(image_id, 4, 12) as long)", 3))
 
 
 def q_boundary_ring(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,11 +29,14 @@ the only whole-tile decoder, and every whole-tile operator reaches it
 through the one runner ``tiles.map_groups`` — with a kernel per decode
 group (resample, tile_stats, the focal strip cutter) or per tile
 through ``tiles.map_tiles`` (halo operators through
-``operators.focal.map_halo``); only ``sample.sample_idw`` (point-struct
-rows) and ``rastermath._decode_b`` (the second tile of a pair) call it
+``operators.focal.map_halo``) — or, for band stacks, through
+``tiles.map_stacks``; only ``sample.sample_idw`` (point-struct rows)
+and ``rastermath._decode_b`` (the second tile of a pair) call it
 directly. :func:`decode_tile`, :func:`decode_tile_typed`
 and :func:`pixel_at` are the per-tile references the tests compare
-against.
+against; outside this module only the fixture writer, the media path
+(``datapipe.multimodal._decode_media``, PNG/JPEG beside raw/q8) and
+the NetCDF sink call :func:`decode_tile`.
 phash is the reference-style integrity fingerprint (FIXTURES.md §1):
 sign bits of an 8×8 block-mean downsample vs. its mean.
 """

@@ -11,10 +11,12 @@ libs absent from this environment (mp3/mp4/webm/webp) are STUBS that
 raise NotImplementedError — swap in ffmpeg/libvips decoders behind the
 same interface on a real cluster.
 
-Design for 100 TB: binary payloads never enter a shuffle — metadata
-extraction and feature kernels are scan-side mapInPandas stages, and
-anything relational (joins, dedup by phash) happens on the extracted
-skinny columns.
+Design for 100 TB: binary payloads never enter a shuffle — media
+feature, audio and video-frame kernels are scan-side mapInPandas
+stages, the tile resizes run on the engine's whole-tile runner
+(``tiles.map_tiles``: raw/q8/i32/b1 through ``codec.decode_grouped``,
+a short blob fails naming its image_id), and anything relational
+(joins, dedup by phash) happens on the extracted skinny columns.
 """
 
 from __future__ import annotations
@@ -26,7 +28,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from rasters_spark import codec
+from rasters_spark.tiles import map_tiles, raw_tile
 
+#: the resize operators' raw output tiles
+RESIZED_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
 FEATURE_SCHEMA = "image_id string, fmt string, n_bytes long, width int, height int, mean double, std double, phash long"
 
 
@@ -171,20 +176,13 @@ def extract_features(tiles: DataFrame, on_error: str = "null") -> DataFrame:
 def resize_nearest(tiles: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Per-item nearest-neighbor resize (raster.py:1262-1281 order-0
     path) — index-grid sampling in numpy, re-encoded raw."""
-    schema = "image_id string, bytes binary, w int, h int, fmt string"
+    def kernel(arr, h, w):
+        ri = np.minimum((np.arange(out_h) * h / out_h).astype(int), h - 1)
+        ci = np.minimum((np.arange(out_w) * w / out_w).astype(int), w - 1)
+        fmt, blob = raw_tile(arr[np.ix_(ri, ci)])
+        return blob, [out_w], [out_h], fmt
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = _decode_media(r.bytes, int(r.w), int(r.h), r.fmt)
-                ri = np.minimum((np.arange(out_h) * arr.shape[0] / out_h).astype(int), arr.shape[0] - 1)
-                ci = np.minimum((np.arange(out_w) * arr.shape[1] / out_w).astype(int), arr.shape[1] - 1)
-                rows.append({"image_id": r.image_id, "bytes": codec.encode_tile(arr[np.ix_(ri, ci)], "raw"),
-                             "w": out_w, "h": out_h, "fmt": "raw"})
-            yield pd.DataFrame(rows)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, RESIZED_SCHEMA)
 
 
 def resize_spline(tiles: DataFrame, out_w: int, out_h: int, order: int = 1) -> DataFrame:
@@ -198,20 +196,11 @@ def resize_spline(tiles: DataFrame, out_w: int, out_h: int, order: int = 1) -> D
     """
     from rasters_spark import spline
 
-    schema = "image_id string, bytes binary, w int, h int, fmt string"
+    def kernel(arr, h, w):
+        fmt, blob = raw_tile(spline.resize(arr, out_h, out_w, order))
+        return blob, [out_w], [out_h], fmt
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = _decode_media(r.bytes, int(r.w), int(r.h), r.fmt)
-                out = spline.resize(arr, out_h, out_w, order)
-                rows.append({"image_id": r.image_id,
-                             "bytes": codec.encode_tile(out.astype(np.float32), "raw"),
-                             "w": out_w, "h": out_h, "fmt": "raw"})
-            yield pd.DataFrame(rows)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, RESIZED_SCHEMA)
 
 
 def raster_rescale(tiles: DataFrame, target_cell_size: float, order: int = 1) -> DataFrame:
@@ -229,36 +218,20 @@ def raster_rescale(tiles: DataFrame, target_cell_size: float, order: int = 1) ->
     data doesn't match their grid); the engine resizes the data to the
     derived grid's shape instead. → re-encoded tiles with updated
     georeferencing columns."""
+    import math
+
     from rasters_spark import spline
 
-    schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-              "x_origin double, y_origin double, cell_width double, cell_height double")
+    def kernel(arr, h, w, cell_width, cell_height):
+        out_cols = int(math.ceil(cell_width * w / target_cell_size))
+        out_rows = int(math.ceil(-cell_height * h / target_cell_size))
+        fmt, blob = raw_tile(spline.resize(arr, out_rows, out_cols, order))
+        return (blob, [out_cols], [out_rows], fmt,
+                [float(target_cell_size)], [float(-target_cell_size)])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = _decode_media(r.bytes, int(r.w), int(r.h), r.fmt)
-                width = r.cell_width * r.w
-                height = -r.cell_height * r.h
-                out_cols = int(math.ceil(width / target_cell_size))
-                out_rows = int(math.ceil(height / target_cell_size))
-                out = spline.resize(arr, out_rows, out_cols, order)
-                rows.append({
-                    "image_id": r.image_id,
-                    "bytes": codec.encode_tile(out.astype(np.float32), "raw"),
-                    "w": out_cols, "h": out_rows, "fmt": "raw",
-                    "x_origin": r.x_origin, "y_origin": r.y_origin,
-                    "cell_width": float(target_cell_size),
-                    "cell_height": float(-target_cell_size),
-                })
-            yield pd.DataFrame(rows)
-
-    cols = ["image_id", "bytes", "w", "h", "fmt",
-            "x_origin", "y_origin", "cell_width", "cell_height"]
-    return tiles.select(*cols).mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, RESIZED_SCHEMA + ", x_origin double, y_origin double, "
+                     "cell_width double, cell_height double",
+                     keep=("image_id", "x_origin", "y_origin"), meta=("cell_width", "cell_height"))
 
 
 def resize_bilinear_long(tiles: DataFrame, out_w: int, out_h: int) -> DataFrame:

@@ -283,27 +283,16 @@ def decode_cog(data: bytes):
 
 def tiles_to_geotiff(tiles):
     """DataFrame stage: tile rows → (image_id, tiff binary, n_bytes).
-    One Arrow pass per batch; the blob never shuffles."""
-    from collections.abc import Iterator
+    One Arrow pass through ``tiles.map_tiles``; the blob never
+    shuffles."""
+    from rasters_spark.tiles import map_tiles
 
-    import pandas as pd
+    def kernel(arr, h, w, x_origin, y_origin, cell_width, cell_height):
+        t = encode_geotiff(arr, x_origin, y_origin, cell_width, cell_height)
+        return [t], [len(t)]
 
-    from rasters_spark import codec
-
-    schema = "image_id string, tiff binary, n_bytes long"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = codec.decode_tile(r.bytes, int(r.w), int(r.h), r.fmt)
-                t = encode_geotiff(arr, r.x_origin, r.y_origin, r.cell_width, r.cell_height)
-                rows.append({"image_id": r.image_id, "tiff": t, "n_bytes": len(t)})
-            yield pd.DataFrame(rows)
-
-    cols = ["image_id", "bytes", "w", "h", "fmt",
-            "x_origin", "y_origin", "cell_width", "cell_height"]
-    return tiles.select(*cols).mapInPandas(run, schema=schema)
+    return map_tiles(tiles, kernel, "image_id string, tiff binary, n_bytes long",
+                     meta=("x_origin", "y_origin", "cell_width", "cell_height"))
 
 
 def save_geotiffs(tiles, out_dir: str) -> None:

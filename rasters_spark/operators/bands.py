@@ -9,19 +9,23 @@ is a filter, per-band math is a groupBy. No data movement for any of it.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasters_spark.operators import stats
+from rasters_spark.tiles import map_stacks
 
 
-def with_bands(tiles: DataFrame, n_bands: int = 3) -> DataFrame:
+def with_bands(tiles: DataFrame, index: str, n_bands: int = 3) -> DataFrame:
     """Interpret consecutive tile indices as bands of a stack:
-    band = i mod n, stack_id = i div n (deterministic from image_id)."""
-    i = F.substring("image_id", 4, 12).cast("long")
-    return tiles.withColumn("band", (i % n_bands).cast("int")).withColumn(
-        "stack_id", (i / n_bands).cast("long")
-    )
+    band = i mod n, stack_id = i div n, where ``index`` is the SQL text
+    of the tile's integer index i — the caller's id convention (the
+    fixture's ``img000000000123`` ids parse as
+    ``cast(substring(image_id, 4, 12) as long)``)."""
+    return tiles.withColumns({
+        "band": F.expr(f"cast(({index}) % {n_bands} as int)"),
+        "stack_id": F.expr(f"cast(({index}) / {n_bands} as bigint)")})
 
 
 def extract_band(stacked: DataFrame, band: int) -> DataFrame:
@@ -83,6 +87,22 @@ def stack_by_rank(tiles: DataFrame, n_bands: int = 4) -> DataFrame:
             .drop("rn"))
 
 
+def _valid_pixels(pix):
+    """The pixels valid in every band of a stack: ``prow``, ``pcol``
+    (int32) and the ``(bands, pixels)`` values there."""
+    rows, cols = np.nonzero(np.isfinite(pix).all(axis=0))
+    return rows.astype(np.int32), cols.astype(np.int32), pix[:, rows, cols]
+
+
+def _brovey(pix, bands):
+    rows, cols, (b0, b1, b2, p) = _valid_pixels(pix)
+    s = (b0 + b1) + b2
+    with np.errstate(invalid="ignore", divide="ignore"):
+        sharp = [np.where(s == 0.0, np.nan, (b * p) / s) for b in (b0, b1, b2)]
+    return (np.repeat(np.arange(3, dtype=np.int32), len(rows)),
+            np.tile(rows, 3), np.tile(cols, 3), np.concatenate(sharp))
+
+
 def pansharpen_brovey(stacked: DataFrame) -> DataFrame:
     """Brovey pansharpening (Gillespie et al. 1987; the GDAL
     gdal_pansharpen 'brovey' algorithm — EXTENSION beyond the
@@ -98,42 +118,19 @@ def pansharpen_brovey(stacked: DataFrame) -> DataFrame:
     correctly-rounded with the expression text shared verbatim with
     the SQL twin, so doubles hash bit-identically. Scale shape: ONE
     cogroup of 4 bounded rows per stack (never a data-sized
-    collect_list), then a map-only Arrow kernel."""
-    import numpy as np
-    import pandas as pd
+    collect_list), then the numpy kernel on ``tiles.map_stacks``."""
+    return map_stacks(stacked, 4, _brovey,
+                      "stack_id long, band int, prow int, pcol int, sharp double")
 
-    from rasters_spark import codec
 
-    src = stacked.select("stack_id", "band", "bytes", "w", "h", "fmt")
-    schema = "stack_id long, band int, prow int, pcol int, sharp double"
-
-    def fn(key, pdf):
-        if len(pdf) != 4:
-            return pd.DataFrame({"stack_id": pd.Series([], dtype=np.int64),
-                                 "band": pd.Series([], dtype=np.int32),
-                                 "prow": pd.Series([], dtype=np.int32),
-                                 "pcol": pd.Series([], dtype=np.int32),
-                                 "sharp": pd.Series([], dtype=float)})
-        pdf = pdf.sort_values("band")
-        arrs = [codec.decode_tile(r.bytes, r.w, r.h, r.fmt).astype(np.float64)
-                for r in pdf.itertuples(index=False)]
-        b0, b1, b2, p = arrs
-        s = (b0 + b1) + b2
-        ok = np.isfinite(b0) & np.isfinite(b1) & np.isfinite(b2) & np.isfinite(p)
-        rows, cols = np.nonzero(ok)
-        frames = []
-        with np.errstate(invalid="ignore", divide="ignore"):
-            for band, b in enumerate((b0, b1, b2)):
-                sharp = np.where(s == 0.0, np.nan, (b * p) / s)
-                frames.append(pd.DataFrame({
-                    "stack_id": key[0],
-                    "band": np.int32(band),
-                    "prow": rows.astype(np.int32),
-                    "pcol": cols.astype(np.int32),
-                    "sharp": sharp[rows, cols]}))
-        return pd.concat(frames, ignore_index=True)
-
-    return src.groupBy("stack_id").applyInPandas(fn, schema=schema)
+def _forward_fill(pix, bands):
+    parts, last = [], pix[0]
+    for band, cur in zip(bands, pix):
+        last = np.where(np.isfinite(cur), cur, last)
+        rows, cols = np.nonzero(np.isfinite(last))
+        parts.append((np.full(len(rows), band, np.int32), rows.astype(np.int32),
+                      cols.astype(np.int32), last[rows, cols]))
+    return tuple(np.concatenate(c) for c in zip(*parts))
 
 
 def gap_fill_stack(stacked: DataFrame, n_epochs: int = 3) -> DataFrame:
@@ -150,40 +147,13 @@ def gap_fill_stack(stacked: DataFrame, n_epochs: int = 3) -> DataFrame:
     stack (same shape as pansharpen_brovey), map-only kernel; the SQL
     window form the oracle uses would shuffle every PIXEL row — the
     cogroup ships tiles instead, ~100× fewer rows across the exchange."""
-    import numpy as np
-    import pandas as pd
+    return map_stacks(stacked, n_epochs, _forward_fill,
+                      "stack_id long, epoch int, prow int, pcol int, filled double")
 
-    from rasters_spark import codec
 
-    src = stacked.select("stack_id", "band", "bytes", "w", "h", "fmt")
-    schema = "stack_id long, epoch int, prow int, pcol int, filled double"
-
-    def fn(key, pdf):
-        empty = pd.DataFrame({"stack_id": pd.Series([], dtype=np.int64),
-                              "epoch": pd.Series([], dtype=np.int32),
-                              "prow": pd.Series([], dtype=np.int32),
-                              "pcol": pd.Series([], dtype=np.int32),
-                              "filled": pd.Series([], dtype=float)})
-        if len(pdf) != n_epochs:
-            return empty
-        pdf = pdf.sort_values("band")
-        frames = []
-        last = None
-        for r in pdf.itertuples(index=False):
-            cur = codec.decode_tile(r.bytes, r.w, r.h, r.fmt).astype(np.float64)
-            last = cur if last is None else np.where(np.isfinite(cur), cur, last)
-            rows, cols = np.nonzero(np.isfinite(last))
-            if rows.size == 0:
-                continue
-            frames.append(pd.DataFrame({
-                "stack_id": key[0],
-                "epoch": np.int32(r.band),
-                "prow": rows.astype(np.int32),
-                "pcol": cols.astype(np.int32),
-                "filled": last[rows, cols]}))
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    return src.groupBy("stack_id").applyInPandas(fn, schema=schema)
+def _trend(pix, bands):
+    rows, cols, (v0, v1, v2) = _valid_pixels(pix)
+    return rows, cols, (v2 - v0) / 2.0, ((v0 + v1) + v2) / 3.0
 
 
 def epoch_trend(stacked: DataFrame, n_epochs: int = 3) -> DataFrame:
@@ -197,42 +167,16 @@ def epoch_trend(stacked: DataFrame, n_epochs: int = 3) -> DataFrame:
     the imputation step if you want slopes over gappy stacks).
     → (stack_id, prow, pcol, slope, mean). Same bounded cogroup shape
     as pansharpen_brovey."""
-    import numpy as np
-    import pandas as pd
-
-    from rasters_spark import codec
-
     if n_epochs != 3:
         raise ValueError("epoch_trend currently implements the 3-epoch "
                          "closed form (t = 0,1,2)")
-    src = stacked.select("stack_id", "band", "bytes", "w", "h", "fmt")
-    schema = "stack_id long, prow int, pcol int, slope double, mean double"
+    return map_stacks(stacked, 3, _trend,
+                      "stack_id long, prow int, pcol int, slope double, mean double")
 
-    def fn(key, pdf):
-        empty = pd.DataFrame({"stack_id": pd.Series([], dtype=np.int64),
-                              "prow": pd.Series([], dtype=np.int32),
-                              "pcol": pd.Series([], dtype=np.int32),
-                              "slope": pd.Series([], dtype=float),
-                              "mean": pd.Series([], dtype=float)})
-        if len(pdf) != 3:
-            return empty
-        pdf = pdf.sort_values("band")
-        v0, v1, v2 = [codec.decode_tile(r.bytes, r.w, r.h, r.fmt).astype(np.float64)
-                      for r in pdf.itertuples(index=False)]
-        ok = np.isfinite(v0) & np.isfinite(v1) & np.isfinite(v2)
-        rows, cols = np.nonzero(ok)
-        if rows.size == 0:
-            return empty
-        slope = (v2 - v0) / 2.0
-        mean = ((v0 + v1) + v2) / 3.0
-        return pd.DataFrame({
-            "stack_id": key[0],
-            "prow": rows.astype(np.int32),
-            "pcol": cols.astype(np.int32),
-            "slope": slope[rows, cols],
-            "mean": mean[rows, cols]})
 
-    return src.groupBy("stack_id").applyInPandas(fn, schema=schema)
+def _gray(pix, bands):
+    rows, cols, (r, g, b) = _valid_pixels(pix)
+    return rows, cols, (0.299 * r + 0.587 * g) + 0.114 * b
 
 
 def to_gray(stacked: DataFrame) -> DataFrame:
@@ -244,33 +188,4 @@ def to_gray(stacked: DataFrame) -> DataFrame:
     inputs → raw doubles hash bit-identically).
     → (stack_id, prow, pcol, gray). Same bounded 3-row cogroup as
     epoch_trend."""
-    import numpy as np
-    import pandas as pd
-
-    from rasters_spark import codec
-
-    src = stacked.select("stack_id", "band", "bytes", "w", "h", "fmt")
-    schema = "stack_id long, prow int, pcol int, gray double"
-
-    def fn(key, pdf):
-        empty = pd.DataFrame({"stack_id": pd.Series([], dtype=np.int64),
-                              "prow": pd.Series([], dtype=np.int32),
-                              "pcol": pd.Series([], dtype=np.int32),
-                              "gray": pd.Series([], dtype=float)})
-        if len(pdf) != 3:
-            return empty
-        pdf = pdf.sort_values("band")
-        r, g, b = [codec.decode_tile(t.bytes, t.w, t.h, t.fmt).astype(np.float64)
-                   for t in pdf.itertuples(index=False)]
-        ok = np.isfinite(r) & np.isfinite(g) & np.isfinite(b)
-        rows, cols = np.nonzero(ok)
-        if rows.size == 0:
-            return empty
-        gray = (0.299 * r + 0.587 * g) + 0.114 * b
-        return pd.DataFrame({
-            "stack_id": key[0],
-            "prow": rows.astype(np.int32),
-            "pcol": cols.astype(np.int32),
-            "gray": gray[rows, cols]})
-
-    return src.groupBy("stack_id").applyInPandas(fn, schema=schema)
+    return map_stacks(stacked, 3, _gray, "stack_id long, prow int, pcol int, gray double")

@@ -14,8 +14,12 @@ Engine-wide conventions:
   :func:`map_groups`: one mapInArrow whose batches decode through
   ``codec.decode_grouped``, with a kernel per (w, h, fmt) decode group
   (resample's candidate and cell-binning kernels, ``tile_stats``, the
-  focal strip cutter) or, through :func:`map_tiles`, per tile —
-  operators write only the numpy kernel, never a decode loop.
+  focal strip cutter) or, through :func:`map_tiles`, per tile (the
+  raster→raster kernels, the multimodal resizes, the PNG/JPEG/GeoTIFF
+  encoders); band stacks (``operators/bands.py``) run beside it on
+  :func:`map_stacks`, one grouped applyInArrow per ``stack_id`` that
+  decodes through the same decoder — operators write only the numpy
+  kernel, never a decode loop.
 """
 
 from __future__ import annotations
@@ -189,6 +193,46 @@ def map_tiles(src: DataFrame, kernel, schema: str,
         return (np.array(rows, dtype=np.int64), *(_flat(c) for c in zip(*got)))
 
     return map_groups(src, per_tile, schema, keep, meta)
+
+
+def map_stacks(stacked: DataFrame, n: int, kernel, schema: str) -> DataFrame:
+    """The band-stack runner beside :func:`map_groups`: ONE
+    ``groupBy("stack_id").applyInArrow`` over ``stacked`` (which carries
+    ``stack_id, band, image_id, bytes, w, h, fmt``). Only complete
+    stacks run — exactly ``n`` rows, the oracles' ``HAVING count(*) =
+    n``. A stack's rows are put in ``band`` order and decode through
+    ``codec.decode_grouped`` with ``image_id`` as ids (a bad blob fails
+    naming its image_id); tiles that differ in ``(w, h)`` fail naming
+    the ``stack_id``.
+
+    ``kernel(pixels, bands)`` gets the band-ordered float64 ``(n, h, w)``
+    stack and the sorted ``band`` values, and returns the DDL
+    ``schema``'s columns after its leading ``stack_id``, as equal-length
+    numpy arrays or sequences (zero rows allowed); NaN becomes NULL."""
+    import pyarrow as pa
+
+    out = StructType.fromDDL(schema)
+    types = [to_arrow_type(f.dataType) for f in out.fields]
+    empty = pa.schema(list(zip(out.names, types))).empty_table()
+
+    def run(key, table):
+        if table.num_rows != n:
+            return empty
+        t = table.sort_by("band")
+        ws, hs = (t.column(c).to_numpy() for c in ("w", "h"))
+        if (ws != ws[0]).any() or (hs != hs[0]).any():
+            raise ValueError(f"stack_id {key[0].as_py()}: tiles differ in (w, h)")
+        pix = np.empty((n, hs[0], ws[0]))
+        for pos, _, _, _, p in codec.decode_grouped(
+                *(t.column(c).to_numpy() for c in ("bytes", "w", "h", "fmt", "image_id"))):
+            pix[pos] = p
+        made = kernel(pix, t.column("band").to_numpy())
+        sid = pa.array(np.full(len(made[0]), key[0].as_py(), np.int64), types[0])
+        return pa.table([sid, *(pa.array(c, type=ty, from_pandas=True)
+                                for c, ty in zip(made, types[1:]))], names=out.names)
+
+    return (stacked.select("stack_id", "band", "image_id", "bytes", "w", "h", "fmt")
+            .groupBy("stack_id").applyInArrow(run, schema=out))
 
 
 def raw_tile(values: np.ndarray):

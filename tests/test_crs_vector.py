@@ -191,7 +191,7 @@ def test_band_resize_and_percentilecut(spark):
         a = rng.uniform(0, 100, (8, 8)).astype(np.float32)
         rows.append((f"img{i:012d}", codec.encode_tile(a, "raw"), 8, 8, "raw"))
     t = spark.createDataFrame(rows, "image_id string, bytes binary, w int, h int, fmt string")
-    stacked = bands.with_bands(t, 2)
+    stacked = bands.with_bands(t, "cast(substring(image_id, 4, 12) as long)", 2)
     rz = bands.band_resize(stacked, 4, 4, order=1)
     assert rz.count() == 4 and set(rz.columns) >= {"band", "stack_id", "bytes"}
     assert rz.filter("w = 4 and h = 4").count() == 4

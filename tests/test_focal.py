@@ -154,12 +154,14 @@ def test_focal_tiles_i32_above_2_24_crosses_seams_exactly(spark):
 
 #: one operator per whole-tile module plus each group kernel (resample,
 #: tile_stats); ``layer_algebra`` truncates its b side, which decodes
-#: apart from the runner's own batch decode
+#: apart from the runner's own batch decode. The band-stack operators
+#: run on 3-stacks by rank: the second one holds the short t11 (rank 4)
 TRUNCATED_OPS = ["focal_tiles", "slope_aspect_hillshade", "stretch_params", "histogram",
                  "zonal_stats", "elementwise", "layer_algebra", "trim", "polygonize",
                  "retile_split", "render_png", "pixel_centroids", "sample_idw",
                  "tile_stats", "to_grid_bilinear", "to_grid_med", "composite_max",
-                 "mosaic_first", "merge_mean", "to_grid_nearest"]
+                 "mosaic_first", "merge_mean", "to_grid_nearest", "to_gray",
+                 "gap_fill_stack", "resize_spline", "tiles_to_geotiff"]
 #: a 0.5° target grid over the whole lattice (x 0..3, y 0..-2)
 LATTICE_TARGET = dict(x_origin=0.0, y_origin=0.0, cell_width=0.5, cell_height=-0.5,
                       rows=4, cols=6, crs="EPSG:4326")
@@ -171,9 +173,10 @@ def test_truncated_blob_fails_naming_its_image_id(spark, op):
     numpy buffer error."""
     from pyspark.sql import functions as F
 
-    from rasters_spark.functions import render, vector
+    from rasters_spark.datapipe import multimodal
+    from rasters_spark.functions import geotiff, render, vector
     from rasters_spark.operators import (
-        point_join, polygonize, rastermath, resample, retile, sample, stats, terrain)
+        bands, point_join, polygonize, rastermath, resample, retile, sample, stats, terrain)
     from rasters_spark.tiles import tiles_with_cells, with_grid
 
     rows = _lattice_rows()
@@ -211,7 +214,11 @@ def test_truncated_blob_fails_naming_its_image_id(spark, op):
            "composite_max": lambda t: resample.composite_max(t, LATTICE_TARGET, F.lit(0)),
            "mosaic_first": lambda t: resample.mosaic_first(t, LATTICE_TARGET),
            "merge_mean": lambda t: resample.merge_mean(t, LATTICE_TARGET),
-           "to_grid_nearest": lambda t: resample.to_grid_nearest(t, LATTICE_TARGET)}[op]
+           "to_grid_nearest": lambda t: resample.to_grid_nearest(t, LATTICE_TARGET),
+           "to_gray": lambda t: bands.to_gray(bands.stack_by_rank(t, 3)),
+           "gap_fill_stack": lambda t: bands.gap_fill_stack(bands.stack_by_rank(t, 3), 3),
+           "resize_spline": lambda t: multimodal.resize_spline(t, 2, 2),
+           "tiles_to_geotiff": geotiff.tiles_to_geotiff}[op]
     with pytest.raises(Exception, match=f"image_id '{rows[4][0]}'"):
         run(df).collect()
 

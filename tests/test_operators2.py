@@ -82,7 +82,7 @@ def test_boundary_ring_order_and_length(spark):
 
 def test_bands_stats(spark):
     tiles = load_tiles(spark, SF)
-    stacked = bands.with_bands(tiles, 3)
+    stacked = bands.with_bands(tiles, "cast(substring(image_id, 4, 12) as long)", 3)
     got = {r.band: r for r in bands.band_stats(stacked).collect()}
     assert set(got) == {0, 1, 2}
     assert sum(r.n_tiles for r in got.values()) == tiles.count()
@@ -94,6 +94,17 @@ def test_bands_stats(spark):
         arr = codec.decode_tile(t.bytes, t.w, t.h, t.fmt)
         vsum += float(np.nansum(arr.astype(np.float64)))
     assert got[0].vsum == pytest.approx(vsum, rel=1e-9)
+
+
+def test_with_bands_takes_the_callers_index(spark):
+    """Ids not shaped like the fixture's ``img000000000123`` band by the
+    index text the caller passes; nothing parses ``image_id`` itself."""
+    t = spark.createDataFrame([(f"t{i:02d}", i) for i in range(7)], "image_id string, k long")
+    got = {r.image_id: (r.band, r.stack_id)
+           for r in bands.with_bands(t, "cast(substring(image_id, 2, 2) as long)", 3).collect()}
+    assert got == {f"t{i:02d}": (i % 3, i // 3) for i in range(7)}
+    got = {r.image_id: (r.band, r.stack_id) for r in bands.with_bands(t, "k + 2", 4).collect()}
+    assert got == {f"t{i:02d}": ((i + 2) % 4, (i + 2) // 4) for i in range(7)}
 
 
 def test_png_roundtrip_and_render(spark):

@@ -1,7 +1,8 @@
 """The one whole-tile runner, ``tiles.map_groups``: one kernel call per
 (w, h, fmt) decode group, ``keep`` columns taken by the returned rows,
-NaN → NULL, output in input-row order — and the design guard that no
-other module keeps its own batch → decode → kernel loop."""
+NaN → NULL, output in input-row order; the band-stack runner
+``tiles.map_stacks`` beside it — and the design guards that no other
+module keeps its own batch → decode → kernel loop."""
 
 import ast
 from pathlib import Path
@@ -12,7 +13,7 @@ import pytest
 from pyspark.sql.types import StructType
 
 from rasters_spark import codec
-from rasters_spark.tiles import _group_batch, map_groups, map_tiles
+from rasters_spark.tiles import _group_batch, map_groups, map_stacks, map_tiles
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -131,6 +132,66 @@ def test_map_groups_and_map_tiles_on_spark(spark):
     assert [(r.image_id, r.s) for r in rows] == want
 
 
+STACK_COLS = "image_id string, bytes binary, w int, h int, fmt string, band int, stack_id long"
+
+
+def _stack_rows(stack_id, values, fmt="raw", shape=(3, 2)):
+    """One stack: band ``b`` is a ``shape`` tile filled with ``values[b]``."""
+    h, w = shape
+    return [(f"s{stack_id}b{b}", codec.encode_tile(np.full((h, w), v, np.float32), fmt),
+             w, h, fmt, b, stack_id) for b, v in enumerate(values)]
+
+
+def _firsts():
+    """A stack kernel: one row per band, its band value and its first pixel."""
+    def kernel(pix, bands):
+        return bands.astype(np.int32), pix[:, 0, 0]
+    return kernel
+
+
+def test_map_stacks_band_order_and_complete_stacks(spark):
+    rows = _stack_rows(0, [1.0, 2.0, 3.0]) + _stack_rows(1, [5.0, 6.0, 7.0]) \
+        + _stack_rows(2, [8.0, 9.0])  # stack 2 is incomplete: it emits nothing
+    schema = "stack_id long, band int, v double"
+
+    def run(rs):
+        df = spark.createDataFrame(rs, STACK_COLS)
+        return sorted(tuple(r) for r in map_stacks(df, 3, _firsts(), schema).collect())
+
+    want = [(0, 0, 1.0), (0, 1, 2.0), (0, 2, 3.0), (1, 0, 5.0), (1, 1, 6.0), (1, 2, 7.0)]
+    assert run(rows) == want
+    # rows arriving in shuffled band order come out the same
+    assert run([rows[i] for i in (2, 0, 5, 1, 4, 3, 7, 6)]) == want
+
+
+def test_map_stacks_nan_to_null_and_i32_nodata(spark):
+    arr = np.array([[7, codec.I32_NODATA]], np.int32)
+    rows = [(f"b{b}", codec.encode_tile(arr, "i32"), 2, 1, "i32", b, 4) for b in range(2)]
+    df = spark.createDataFrame(rows, STACK_COLS)
+
+    def kernel(pix, bands):
+        # the sentinel pixel arrives as NaN; band 1's value is NaN on purpose
+        return bands.astype(np.int32), pix[:, 0, 1] + np.array([100.0, np.nan]), pix[:, 0, 0]
+
+    got = sorted(tuple(r) for r in
+                 map_stacks(df, 2, kernel, "stack_id long, band int, v double, w double").collect())
+    assert got == [(4, 0, None, 7.0), (4, 1, None, 7.0)]
+
+
+def test_map_stacks_errors_name_the_stack_and_the_tile(spark):
+    from rasters_spark.operators import bands
+
+    rows = _stack_rows(7, [1.0, 2.0]) + _stack_rows(7, [3.0], shape=(2, 2))
+    df = spark.createDataFrame(rows, STACK_COLS)
+    with pytest.raises(Exception, match=r"stack_id 7: tiles differ in \(w, h\)"):
+        map_stacks(df, 3, _firsts(), "stack_id long, band int, v double").collect()
+    # a short blob in a complete 4-band stack: pansharpen_brovey names it
+    rows = _stack_rows(0, [1.0, 2.0, 3.0, 4.0])
+    rows[2] = (rows[2][0], rows[2][1][:-4], *rows[2][2:])
+    with pytest.raises(Exception, match="image_id 's0b2'"):
+        bands.pansharpen_brovey(spark.createDataFrame(rows, STACK_COLS)).collect()
+
+
 def _calls_of(tree, attr):
     """Top-level function names whose bodies reference ``.attr``/``attr``."""
     out = set()
@@ -145,7 +206,8 @@ def _calls_of(tree, attr):
 
 def test_only_the_runner_decodes_tile_batches():
     """One batch → decode → kernel loop: ``codec.decode_grouped`` runs
-    only in the tiles.py runner, ``sample.sample_idw`` (point-struct
+    only in the tiles.py runners (``map_groups``' batches and
+    ``map_stacks``' band stacks), ``sample.sample_idw`` (point-struct
     rows) and ``rastermath._decode_b`` (the second tile of a pair)."""
     users = set()
     for path in sorted((ROOT / "rasters_spark").rglob("*.py")) + [ROOT / "__spark_entry__.py"]:
@@ -154,15 +216,39 @@ def test_only_the_runner_decodes_tile_batches():
         for fn in _calls_of(ast.parse(path.read_text()), "decode_grouped"):
             users.add(f"{path.relative_to(ROOT)}:{fn}")
     assert users == {"rasters_spark/tiles.py:_group_batch",
+                     "rasters_spark/tiles.py:map_stacks",
                      "rasters_spark/operators/sample.py:sample_idw",
                      "rasters_spark/operators/rastermath.py:_decode_b"}
 
 
-@pytest.mark.parametrize("module", ["resample", "stats", "focal"])
+@pytest.mark.parametrize("module", ["resample", "stats", "focal", "bands"])
 def test_tile_operators_run_no_map_of_their_own(module):
     tree = ast.parse((ROOT / "rasters_spark" / "operators" / f"{module}.py").read_text())
-    for attr in ("mapInArrow", "mapInPandas"):
+    for attr in ("mapInArrow", "mapInPandas", "applyInPandas"):
         assert not _calls_of(tree, attr), (module, attr)
+
+
+def test_decode_tile_only_in_the_codec_and_the_media_path():
+    """Per-row ``codec.decode_tile`` stays in the codec, the fixture
+    writer, the media path (``multimodal._decode_media``: PNG/JPEG and
+    per-row quarantine) and the one-container-per-partition NetCDF
+    sink; every other tile operator decodes through a runner."""
+    users = set()
+    for path in sorted((ROOT / "rasters_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        calls = {f"{path.relative_to(ROOT)}:{fn}" for fn in _calls_of(tree, "decode_tile")}
+        if path.name not in ("codec.py", "fixtures.py"):
+            users |= calls
+    assert users == {"rasters_spark/datapipe/multimodal.py:_decode_media",
+                     "rasters_spark/functions/netcdf3.py:save_netcdf_tiles"}
+
+
+def test_multimodal_maps_only_its_media_kernels():
+    """The resizes run on ``tiles.map_tiles``; ``mapInPandas`` is left
+    to the audio, media-feature and video-frame stages."""
+    tree = ast.parse((ROOT / "rasters_spark" / "datapipe" / "multimodal.py").read_text())
+    assert _calls_of(tree, "mapInPandas") == {"audio_features", "extract_features", "frame_sample"}
+    assert not _calls_of(tree, "mapInArrow")
 
 
 def test_one_nearest_candidate_path():
